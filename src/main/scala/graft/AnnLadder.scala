@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions.toDouble
@@ -27,16 +26,7 @@ import graft.operators.{AnnPanel, IvfPq, Pq, VectorQueries}
 object AnnLadder {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      // TypedImperativeAggregate (TopKAgg/sketches) keys per partition
-      // before sort-based fallback: the 128-row default externally sorts
-      // every large pool stage (the measured 2M-decade spill)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 262144)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSpark.session(logLevel = "ERROR")
 
     val e = graft.sources.Tables.embeddings(spark, dir)
       .select(col("vec_id"), toDouble(col("embedding")).as("v")).cache()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan audit: dumps formatted physical plans for the headline
   * queries and asserts the scale-critical plan properties
   * (filter/column pushdown, broadcast joins, TakeOrdered top-k).
@@ -12,16 +10,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse("/tmp/explain.md")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      // TypedImperativeAggregate (TopKAgg/sketches) keys per partition
-      // before sort-based fallback: the 128-row default externally sorts
-      // every large pool stage (the measured 2M-decade spill)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 262144)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSpark.session(logLevel = "ERROR")
 
     val audits: Seq[(String, Seq[String])] = Seq(
       // query -> plan substrings that MUST appear

@@ -44,17 +44,7 @@ object GenScale {
     val out = args.lift(1).getOrElse("/root/repo/testdata_sf1.0")
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
     val tables = args.lift(3).map(_.split(",").toSet).getOrElse(Set.empty[String])
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      // TypedImperativeAggregate (TopKAgg/sketches) keys per partition
-      // before sort-based fallback: the 128-row default externally sorts
-      // every large pool stage (the measured 2M-decade spill)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 262144)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
     generate(spark, src, out, copies, tables)
     spark.stop()
   }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for named queries to individual files —
   * the per-query plan evidence the optimization rounds commit under
   * plans/rNN/ (<name>_<suffix>.txt).
@@ -14,13 +12,7 @@ object PlanDump {
       "usage: PlanDump <sfDir> <outDir> <suffix> <name>[,<name>...]")
     val Array(dir, out, suffix) = args.take(3)
     val names = args(3).split(",").map(_.trim).filter(_.nonEmpty)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 262144)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSpark.session(logLevel = "ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, dir)

@@ -673,10 +673,11 @@ object DedupQueries {
       //
       // Convergence detection rides the SAME job: a LongAccumulator
       // incremented where comp != prev while the pin materializes —
-      // no separate count job. Task retries can only over-count,
-      // never turn a nonzero count into zero (a retried task
-      // re-adds the same nonnegative contribution), so the
-      // `moved > 0` test — the only consumer — is retry-safe.
+      // no separate count job. Task retries and checkpoint
+      // recompute can only over-count, never turn a nonzero count
+      // into zero (a re-run task re-adds the same nonnegative
+      // contribution), so `moved` is an upper bound and the
+      // `moved > 0` test is retry-safe.
       val step = lab.join(viaN, Seq("id"), "left")
         .join(lab.select(col("id").as("cid"), col("comp").as("ccomp")),
           col("comp") === col("cid"), "left")
@@ -696,11 +697,11 @@ object DedupQueries {
       lab = next.select("id", "comp")
       round += 1
       if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] round $round moved=$moved")
+        System.err.println(s"[cc] round $round moved<=$moved (upper bound)")
     }
     if (moved > 0)
       System.err.println(s"[graft] connectedComponents: NOT converged after " +
-        s"$round rounds ($moved labels still moving)")
+        s"$round rounds (at most $moved labels still moving)")
     lab.select("id", "comp")
   }
 

@@ -12,20 +12,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      // TypedImperativeAggregate (TopKAgg/sketches) keys per partition
-      // before sort-based fallback: the 128-row default externally sorts
-      // every large pool stage (the measured 2M-decade spill)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 262144)
-      .config("spark.sql.extensions", "org.apache.spark.sql.graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // A fixed local[4], whatever SPARK_GRAFT_CPUS says, so plans and
+  // partition-seeded results do not vary with the machine.
+  lazy val session: SparkSession = LocalSpark.session(cores = 4)
 }
