@@ -1,7 +1,8 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 import graft.functions.{Embedder, Grammars, HashEmbedder, LlmBackend, NliModel, HeuristicNli, Prompts, TemplateLlm, TextHelpers, VectorFunctions}
 import graft.operators.{DedupQueries, GraphQueries, Splitters, VectorQueries}
@@ -22,7 +23,9 @@ import graft.store.HippoDb
   * The embedding/NLI/LLM models are injected traits (deterministic
   * stubs by default — no model runtimes in this container); every
   * query is a declarative Spark plan: query vectors broadcast, corpus
-  * never collected, top-k via TakeOrderedAndProject.
+  * never collected, top-k via TakeOrderedAndProject. The one exception
+  * is single-query indexed retrieval over an index that fits a heap
+  * budget, probed from an in-JVM snapshot ([[closestFactsIndexed]]).
   */
 final class Graft(
     spark: SparkSession,
@@ -396,18 +399,61 @@ final class Graft(
 
   /** Top-k facts via the PERSISTED index — the serving-path twin of
     * [[closestFacts]]: the query embeds driver-side, probe cells are
-    * chosen against the loaded centroids, and the only corpus read
-    * is the `cluster IN (...)` partition-pruned scan. With nProbe =
-    * nCells the ranking equals [[closestFacts]] exactly (same
-    * rounding, same tiebreak — DemoSpec pins it); fewer probes trade
-    * recall for reading ~nProbe/nCells of the index. */
+    * chosen against the centroids, and only the probed cells are
+    * scored. With nProbe = nCells the ranking equals [[closestFacts]]
+    * exactly (same rounding, same tiebreak — DemoSpec pins it); fewer
+    * probes trade recall for reading ~nProbe/nCells of the index.
+    *
+    * An index with a version marker that fits the heap budget is
+    * probed in this JVM from its [[graft.store.IvfSnapshot]], reopened
+    * whenever the marker changes; the call then runs one Spark job
+    * (`graft.serve.lookup`), which fetches the hits' facts, and
+    * returns them as a local frame. Any other index runs the
+    * `cluster IN (...)` partition-pruned Spark plan. Both give the
+    * same rows, schema and order. */
   def closestFactsIndexed(db: HippoDb, indexDir: String, query: String,
-      k: Int = 5, nProbe: Int = VectorQueries.IvfProbe): DataFrame =
-    graft.store.VectorIndex.annIvf(spark, indexDir,
-        embedder.embed(query).map(_.toDouble), k, nProbe, excludeVecId = None)
-      .withColumnRenamed("vec_id", "fact_id")
-      .join(db.facts, "fact_id")
-      .orderBy(col("cos").desc, col("fact_id"))
+      k: Int = 5, nProbe: Int = VectorQueries.IvfProbe): DataFrame = {
+    val q = embedder.embed(query).map(_.toDouble)
+    snapshots(spark, indexDir).flatMap(_.topK(q, k, nProbe)) match {
+      case Some(hits) => factsOf(db, hits)
+      case None =>
+        graft.store.VectorIndex.annIvf(spark, indexDir, q, k, nProbe, excludeVecId = None)
+          .withColumnRenamed("vec_id", "fact_id")
+          .join(db.facts, "fact_id")
+          .orderBy(col("cos").desc, col("fact_id"))
+    }
+  }
+
+  /** The index snapshots this instance serves single queries from —
+    * its only state besides the models (IvfSnapshots). */
+  @transient private[graft] lazy val snapshots = new graft.store.IvfSnapshots
+
+  /** `(fact_id, cos)` hits joined to their facts in one job over
+    * `db.facts` pre-filtered to the hit ids, as the Spark plan would:
+    * facts missing from `db` drop out, columns are fact_id, cos, then
+    * the facts' own, ordered by cos descending then fact_id. */
+  private def factsOf(db: HippoDb, hits: Seq[(Long, Double)]): DataFrame = {
+    val cosOf = hits.groupMap(_._1)(_._2)
+    val fields = db.facts.schema.fields
+    val idAt = fields.indexWhere(_.name == "fact_id")
+    val found =
+      if (cosOf.isEmpty) Array.empty[Row]
+      else graft.plans.Phase(spark, "graft.serve.lookup") {
+        db.facts.filter(org.apache.spark.sql.graft.InSetColumn(col("fact_id"), cosOf.keys))
+          .collect()
+      }
+    val rows = for {
+      f <- found.toSeq
+      id = f.getLong(idAt)
+      c <- cosOf(id)
+    } yield (id, c, f.toSeq.patch(idAt, Nil, 1))
+    val sorted = rows.sortWith((a, b) =>
+      graft.store.IvfSnapshot.ranksBefore(a._2, a._1, b._2, b._1))
+    spark.createDataFrame(
+      java.util.Arrays.asList(sorted.map { case (id, c, rest) => Row.fromSeq(id +: c +: rest) }: _*),
+      StructType(StructField("fact_id", LongType) +: StructField("cos", DoubleType) +:
+        fields.patch(idAt, Nil, 1)))
+  }
 
   /** [[closestFactsIndexed]] through the ADAPTIVE probe
     * (VectorIndex.annIvfAdaptive): probes the nearest cells, then

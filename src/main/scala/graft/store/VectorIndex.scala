@@ -35,6 +35,101 @@ import graft.operators.{Bq, IvfPq, KMeans, Pq, Sq, VectorQueries}
   */
 object VectorIndex {
 
+  // ------------------------------------------------------- versions
+
+  /** The IVF artifacts' version marker: a random token, replaced by
+    * every mutator of `ivf_vectors`, `ivf_centroids` or `tombstones`
+    * once its change commits. Single-query serving keeps an in-JVM
+    * [[IvfSnapshot]] per token, so a changed token is what tells it
+    * to reopen. Reading it is one small file open; a recursive listing
+    * of the artifacts is orders of magnitude slower. The leading `_`
+    * hides it from Spark's file listings. */
+  private val VersionFile = "_version"
+
+  /** The marker lives outside Hadoop's checksum layer: a `.crc`
+    * sidecar renamed after its data file would let a reader between
+    * the two renames fail its checksum. */
+  private def markerFs(spark: SparkSession, dir: String): org.apache.hadoop.fs.FileSystem =
+    new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration) match {
+      case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
+      case fs => fs
+    }
+
+  /** The index's current version token; None for an index written
+    * before markers existed, or while a change is in flight. */
+  def versionToken(spark: SparkSession, dir: String): Option[String] =
+    try {
+      val in = markerFs(spark, dir).open(new org.apache.hadoop.fs.Path(dir, VersionFile))
+      try Some(new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8))
+      finally in.close()
+    } catch { case _: java.io.FileNotFoundException => None }
+
+  /** Runs a change to the IVF artifacts of `dir` between a marker
+    * delete and a new token. While the change runs, or if it fails
+    * half way, the dir has no marker and serving takes the Spark
+    * plan, which is correct in every state. The new token lands by
+    * write-then-rename, so a reader never sees a partial one. */
+  private def versioned[T](spark: SparkSession, dir: String)(change: => T): T = {
+    val fs = markerFs(spark, dir)
+    val marker = new org.apache.hadoop.fs.Path(dir, VersionFile)
+    fs.delete(marker, false)
+    val out = change
+    val token = java.util.UUID.randomUUID().toString
+    val tmp = new org.apache.hadoop.fs.Path(dir, s".$VersionFile-$token")
+    val os = fs.create(tmp, true)
+    try os.write(token.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally os.close()
+    // file systems whose rename never replaces (HDFS) need the old
+    // marker out of the way; a concurrent writer may have left one
+    if (!fs.rename(tmp, marker) && !(fs.delete(marker, false) && fs.rename(tmp, marker)))
+      throw new java.io.IOException(s"index version marker $marker was not written")
+    out
+  }
+
+  /** Heap an [[IvfSnapshot]] may take: a sixteenth of the driver's
+    * max heap, so the few snapshots one `Graft` holds stay a minor
+    * share of it. */
+  private[graft] def snapshotBudgetBytes: Long = Runtime.getRuntime.maxMemory / 16
+
+  /** In-JVM bytes per byte of parquet `ivf_vectors`: doubles barely
+    * compress, and the collect holds rows and arrays at once. */
+  private val SnapshotExpansion = 4
+
+  /** Loads the IVF index at `dir` into the driver JVM for
+    * single-query serving ([[IvfSnapshot.topK]]). None when the index
+    * has no version marker (written before markers existed, or being
+    * changed), when its marker changed while loading, or when its
+    * vectors' size from plan stats, times a fixed expansion factor,
+    * exceeds the heap budget: such an index is served by the Spark
+    * plan ([[annIvf]]), which is the path that scales. The jobs that
+    * load it are labelled `graft.serve.open`. */
+  def open(spark: SparkSession, dir: String): Option[IvfSnapshot] =
+    open(spark, dir, snapshotBudgetBytes)
+
+  private[graft] def open(spark: SparkSession, dir: String,
+      budgetBytes: Long): Option[IvfSnapshot] = {
+    import spark.implicits._
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val present = Seq("ivf_vectors", "ivf_centroids")
+      .forall(a => fs.exists(new org.apache.hadoop.fs.Path(dir, a)))
+    versionToken(spark, dir).filter(_ => present).flatMap { token =>
+      graft.plans.Phase(spark, "graft.serve.open") {
+        val scan = spark.read.parquet(s"$dir/ivf_vectors")
+        if (scan.queryExecution.optimizedPlan.stats.sizeInBytes * SnapshotExpansion > budgetBytes)
+          None
+        else {
+          val centroids = loadIvfCentroids(spark, dir)
+          val rows = minusTombstones(spark, dir, scan)
+            .select(col("cluster").cast("int"), col("vec_id"), col("v"))
+            .as[(Int, Long, Array[Double])].collect()
+          if (!versionToken(spark, dir).contains(token)) None
+          else Some(IvfSnapshot(token, centroids, rows))
+        }
+      }
+    }
+  }
+
   // ----------------------------------------------------- tombstones
 
   /** Append serving TOMBSTONES — vec_ids every query path must stop
@@ -51,7 +146,7 @@ object VectorIndex {
     val ids = vecIds.select("vec_id").distinct()
     val n = ids.count()
     if (n > 0)
-      ids.write.mode(SaveMode.Append).parquet(s"$dir/tombstones")
+      versioned(spark, dir)(ids.write.mode(SaveMode.Append).parquet(s"$dir/tombstones"))
     n
   }
 
@@ -100,31 +195,33 @@ object VectorIndex {
     val kept = t.join(liveIds.select("vec_id"), Seq("vec_id"), "left_anti")
     val keptN = kept.count()
     if (keptN == total) return // nothing revived
-    val revived = t.join(liveIds.select("vec_id"), Seq("vec_id"), "left_semi")
-      .pinned // pin: the swaps below must not re-read a moved dir
-    RowFamilies.filter(_._1 != rebuiltFamily).foreach { case (fam, parts) =>
-      val path = s"$dir/$fam"
-      if (fs.exists(new org.apache.hadoop.fs.Path(path))) {
-        val cur = spark.read.parquet(path)
-        val famTotal = cur.count()
-        val del = cur.join(broadcast(revived), Seq("vec_id"), "left_semi").count()
-        if (del > 0)
-          HippoDb.verifiedSwap(spark, path,
-            spark.read.parquet(path)
-              .join(broadcast(revived), Seq("vec_id"), "left_anti"),
-            hadRows = famTotal > 0, expected = Some(famTotal - del),
-            // empty partitioned writes emit no files (see
-            // compactTombstones) — a fully-purged family rewrites flat
-            partitionCols = if (famTotal - del == 0) Nil else parts)
+    versioned(spark, dir) {
+      val revived = t.join(liveIds.select("vec_id"), Seq("vec_id"), "left_semi")
+        .pinned // pin: the swaps below must not re-read a moved dir
+      RowFamilies.filter(_._1 != rebuiltFamily).foreach { case (fam, parts) =>
+        val path = s"$dir/$fam"
+        if (fs.exists(new org.apache.hadoop.fs.Path(path))) {
+          val cur = spark.read.parquet(path)
+          val famTotal = cur.count()
+          val del = cur.join(broadcast(revived), Seq("vec_id"), "left_semi").count()
+          if (del > 0)
+            HippoDb.verifiedSwap(spark, path,
+              spark.read.parquet(path)
+                .join(broadcast(revived), Seq("vec_id"), "left_anti"),
+              hadRows = famTotal > 0, expected = Some(famTotal - del),
+              // empty partitioned writes emit no files (see
+              // compactTombstones) — a fully-purged family rewrites flat
+              partitionCols = if (famTotal - del == 0) Nil else parts)
+        }
       }
+      if (keptN == 0) {
+        if (!fs.delete(hp, true))
+          throw new java.io.IOException(
+            s"rebuild: emptied tombstone set $dir/tombstones was not cleared")
+      } else
+        HippoDb.verifiedSwap(spark, s"$dir/tombstones", kept,
+          hadRows = total > 0, expected = Some(keptN))
     }
-    if (keptN == 0) {
-      if (!fs.delete(hp, true))
-        throw new java.io.IOException(
-          s"rebuild: emptied tombstone set $dir/tombstones was not cleared")
-    } else
-      HippoDb.verifiedSwap(spark, s"$dir/tombstones", kept,
-        hadRows = total > 0, expected = Some(keptN))
   }
 
   /** Append a delta into a partitionBy(cluster) artifact — with the
@@ -206,7 +303,7 @@ object VectorIndex {
   def compactTombstones(spark: SparkSession, dir: String): Map[String, Long] =
     tombstonesAt(spark, dir) match {
       case None => Map.empty
-      case Some(t) =>
+      case Some(t) => versioned(spark, dir) {
         val fs = new org.apache.hadoop.fs.Path(dir)
           .getFileSystem(spark.sparkContext.hadoopConfiguration)
         val removed = RowFamilies.flatMap { case (name, parts) =>
@@ -237,6 +334,7 @@ object VectorIndex {
           throw new java.io.IOException(
             s"compactTombstones: artifacts rewritten but $dir/tombstones was not cleared")
         removed
+      }
     }
 
   // ------------------------------------------------------------- PQ
@@ -427,7 +525,7 @@ object VectorIndex {
       cellCap: Int = 0, twoLevelCells: Int = Int.MaxValue): Unit = {
     import spark.implicits._
     val cached = e.select(col("vec_id"), col("v")).cache()
-    try {
+    try versioned(spark, dir) {
       val model =
         if (cellCap > 0) {
           val target = math.max(1, (cellCap + 1) / 2)
@@ -497,7 +595,7 @@ object VectorIndex {
       nCells: Int = VectorQueries.IvfCells, iters: Int = 2,
       branch: Int = 0): Unit = {
     val cached = e.select(col("vec_id"), col("v")).cache()
-    try {
+    try versioned(spark, dir) {
       val (assigned, flat, coarse) =
         KMeans.fitTwoLevel(spark, cached, nCells, iters, branch)
       writeClusterPartitioned(cached.join(assigned, "vec_id"),
@@ -631,7 +729,7 @@ object VectorIndex {
       .cache()
     try {
       val n = assigned.count()
-      if (n > 0) {
+      if (n > 0) versioned(spark, dir) {
         // EXTEND the adaptive-probe bounds instead of invalidating
         // them (VERDICT r12 #4): the per-cell bound
         // cos(q,x) ≤ q̂·ĉ + r̂ is sound for ANY frozen reference ĉ
@@ -754,7 +852,7 @@ object VectorIndex {
   /** The nProbe nearest cells by centroid distance — driver-side
     * arithmetic over the tiny loaded model, shared by every probe
     * path so cell choice cannot drift between them. */
-  private def nearestCells(centroids: Array[Array[Double]],
+  private[store] def nearestCells(centroids: Array[Array[Double]],
       queryVec: Array[Double], nProbe: Int): Seq[Int] =
     centroids.zipWithIndex.map { case (c, i) =>
       var d = 0.0; var j = 0
