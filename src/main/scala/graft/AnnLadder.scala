@@ -96,23 +96,23 @@ object AnnLadder {
     val filteredRungs: Seq[(String, String, Long => Seq[Long])] = Seq(
       ("IVF all-probe", s"${8 * dim} in probed cells & filter",
         qid => fPanel.find(_._1 == qid).map { case (q, qv) =>
-          VectorIndex.annIvfFiltered(spark, ivfDir, qv, 10,
-            VectorQueries.IvfCells, candOf(q)).collect().map(_.getLong(0)).toSeq
+          VectorIndex.annIvf(spark, ivfDir, qv, 10, VectorQueries.IvfCells,
+            candidates = Some(candOf(q))).collect().map(_.getLong(0)).toSeq
         }.get),
       ("IVF probe=4", s"${8 * dim} in 4/16 cells & filter",
         qid => fPanel.find(_._1 == qid).map { case (q, qv) =>
-          VectorIndex.annIvfFiltered(spark, ivfDir, qv, 10,
-            VectorQueries.IvfProbe, candOf(q)).collect().map(_.getLong(0)).toSeq
+          VectorIndex.annIvf(spark, ivfDir, qv, 10, VectorQueries.IvfProbe,
+            candidates = Some(candOf(q))).collect().map(_.getLong(0)).toSeq
         }.get),
       ("ADC all-probe", s"${Pq.M} codes + 8 norm & filter, covering pool",
         qid => fPanel.find(_._1 == qid).map { case (q, qv) =>
-          VectorIndex.annIvfPqFiltered(spark, adcDir, e, qv, 10,
-            IvfPq.Cells, candOf(q), rerank = nCand).collect().map(_.getLong(0)).toSeq
+          VectorIndex.annIvfPq(spark, adcDir, e, qv, 10, IvfPq.Cells, rerank = nCand,
+            candidates = Some(candOf(q))).collect().map(_.getLong(0)).toSeq
         }.get),
       ("ADC probe=4", s"${Pq.M} codes + 8 norm in 4/16 cells & filter",
         qid => fPanel.find(_._1 == qid).map { case (q, qv) =>
-          VectorIndex.annIvfPqFiltered(spark, adcDir, e, qv, 10,
-            IvfPq.Probe, candOf(q)).collect().map(_.getLong(0)).toSeq
+          VectorIndex.annIvfPq(spark, adcDir, e, qv, 10, IvfPq.Probe,
+            candidates = Some(candOf(q))).collect().map(_.getLong(0)).toSeq
         }.get))
     println(f"[ladder] filtered panel: |candidates|=$nCand of $n, ${fPanel.length} queries")
     filteredRungs.foreach { case (name, bytes, run) =>

@@ -78,9 +78,9 @@ object Demo {
       db, query, Seq(graft.operators.GraphQueries.ProbeEntity),
       union = true, k = 5).collect().map(_.toSeq).toSeq
     val hybridRows = hybridBrute.length.toLong
-    val hybridIndexedMatches = api.closestFactsWithEntitiesIndexed(
-      db, idxDir, query, Seq(graft.operators.GraphQueries.ProbeEntity),
-      union = true, k = 5, nProbe = nCells)
+    val hybridIndexedMatches = api.closestFactsWithEntities(
+      db, query, Seq(graft.operators.GraphQueries.ProbeEntity),
+      union = true, k = 5, indexDir = Some(idxDir), nProbe = nCells)
       .collect().map(_.toSeq).toSeq == hybridBrute
 
     // BUDGET: the token meter a training-data pipeline reads before

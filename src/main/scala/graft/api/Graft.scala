@@ -1,12 +1,13 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 import graft.functions.{Embedder, Grammars, HashEmbedder, LlmBackend, NliModel, HeuristicNli, Prompts, TemplateLlm, TextHelpers, VectorFunctions}
-import graft.operators.{DedupQueries, GraphQueries, Splitters, VectorQueries}
-import graft.store.HippoDb
+import graft.operators.{DedupQueries, ExtendedQueries, GraphQueries, Splitters, VectorQueries}
+import graft.plans.Phase
+import graft.store.{HippoDb, VectorIndex}
 
 /** User-facing facade — the complete hippollm surface, Spark-first.
   *
@@ -33,6 +34,7 @@ final class Graft(
     nli: NliModel = new HeuristicNli,
     llm: LlmBackend = new TemplateLlm) extends Serializable {
 
+  import Graft._
   import VectorFunctions._
 
   /** Batch annotation: documents(doc_id, text) → graph+vector store.
@@ -276,18 +278,13 @@ final class Graft(
     import spark.implicits._
     val emb = embedder
     val nliLocal = nli
-    val hasDesc = entities.columns.contains("description")
-    val named = (
-      if (hasDesc) entities.select(col("entity"), col("description"))
-      else entities.select(col("entity"), lit("").as("description"))
-    ).as[(String, String)]
     // Lowercased STORED repr (the unconditional "name (description)"
     // text add_entity embeds — storage.py:191): the stub
     // hash-embedder only sees exact token matches, so case variants
     // must normalize BEFORE embedding — the role a real sentence
     // embedder's robustness plays. (closestEntities embeds the raw
     // stored repr, un-lowercased, exactly as the reference stores it.)
-    val entEmb = named
+    val entEmb = named(entities)
       .mapPartitions(_.map { case (e, d) =>
         (e, emb.embed(Graft.entityStoredRepr(e, d).toLowerCase).map(_.toDouble))
       })
@@ -364,9 +361,6 @@ final class Graft(
     full.copy(edges = edges, entities = entities)
   }
 
-  private def queryVec(text: String) =
-    array(embedder.embed(text).map(x => lit(x.toDouble)): _*)
-
   /** Build the persisted IVF serving index over a store's fact
     * embeddings (store.VectorIndex layout: cell-partitioned vectors
     * + centroid rows). Build once per corpus version; queries then
@@ -375,15 +369,11 @@ final class Graft(
   def buildFactIndex(db: HippoDb, indexDir: String,
       nCells: Int = VectorQueries.IvfCells,
       twoLevel: Boolean = false): Unit = {
-    val e = db.factEmb.select(col("fact_id").as("vec_id"),
-      VectorFunctions.toDouble(col("embedding")).as("v"))
     // twoLevel: the 10⁹-fact build path — k1 + k2 ≈ 2√nCells
     // assignment distances per vector instead of nCells; the artifact
     // (and thus every serving path below) is byte-compatible.
-    if (twoLevel)
-      graft.store.VectorIndex.buildIvfTwoLevel(spark, e, indexDir, nCells = nCells)
-    else
-      graft.store.VectorIndex.buildIvf(spark, e, indexDir, nCells = nCells)
+    if (twoLevel) VectorIndex.buildIvfTwoLevel(spark, vectors(db), indexDir, nCells = nCells)
+    else VectorIndex.buildIvf(spark, vectors(db), indexDir, nCells = nCells)
   }
 
   /** The COMPRESSED serving index (IVFADC) over the fact embeddings —
@@ -392,17 +382,25 @@ final class Graft(
     * partitioned by coarse cell, ~M bytes/vector streamed per probe. */
   def buildFactIndexPq(db: HippoDb, indexDir: String,
       nCells: Int = graft.operators.IvfPq.Cells): Unit =
-    graft.store.VectorIndex.buildIvfPq(spark,
-      db.factEmb.select(col("fact_id").as("vec_id"),
-        VectorFunctions.toDouble(col("embedding")).as("v")),
-      indexDir, nCells = nCells)
+    VectorIndex.buildIvfPq(spark, vectors(db), indexDir, nCells = nCells)
 
-  /** Top-k facts via the PERSISTED index — the serving-path twin of
-    * [[closestFacts]]: the query embeds driver-side, probe cells are
-    * chosen against the centroids, and only the probed cells are
-    * scored. With nProbe = nCells the ranking equals [[closestFacts]]
-    * exactly (same rounding, same tiebreak — DemoSpec pins it); fewer
-    * probes trade recall for reading ~nProbe/nCells of the index.
+  // ------------------------------------------------------- retrieval
+  //
+  // Every public retrieval method below is one call into [[plan]].
+  // The index forms take `indexDir = Some(dir)` (and `nProbe`) on the
+  // brute method's signature; with nProbe covering every cell each
+  // equals its brute form exactly (same round-6 cosine, same fact_id
+  // tiebreak — GraftApiSpec's parity table pins them), and fewer
+  // probes trade recall for reading ~nProbe/nCells of the index.
+
+  /** Top-k facts by cosine to a natural-language query. */
+  def closestFacts(db: HippoDb, query: String, k: Int = 5): DataFrame =
+    plan(db, Left(query), Scan, k)
+
+  /** Top-k facts via the PERSISTED index ([[buildFactIndex]]): the
+    * query embeds driver-side, probe cells are chosen against the
+    * centroids, and only the probed cells are scored. Returns every
+    * fact column (fact_id, cos, then the facts' own).
     *
     * An index with a version marker that fits the heap budget is
     * probed in this JVM from its [[graft.store.IvfSnapshot]], reopened
@@ -412,33 +410,427 @@ final class Graft(
     * `cluster IN (...)` partition-pruned Spark plan. Both give the
     * same rows, schema and order. */
   def closestFactsIndexed(db: HippoDb, indexDir: String, query: String,
-      k: Int = 5, nProbe: Int = VectorQueries.IvfProbe): DataFrame = {
-    val q = embedder.embed(query).map(_.toDouble)
-    snapshots(spark, indexDir).flatMap(_.topK(q, k, nProbe)) match {
-      case Some(hits) => factsOf(db, hits)
-      case None =>
-        graft.store.VectorIndex.annIvf(spark, indexDir, q, k, nProbe, excludeVecId = None)
-          .withColumnRenamed("vec_id", "fact_id")
-          .join(db.facts, "fact_id")
-          .orderBy(col("cos").desc, col("fact_id"))
-    }
+      k: Int = 5, nProbe: Int = VectorQueries.IvfProbe): DataFrame =
+    plan(db, Left(query), Ivf(indexDir, nProbe), k, shape = TopK(narrow = false))
+
+  /** [[closestFactsIndexed]] through the ADAPTIVE probe
+    * (VectorIndex.annIvfAdaptive): probes the nearest cells, then
+    * only the cells whose per-cell cosine bound could still change
+    * the top-k — the rows EQUAL the all-cells probe exactly at a
+    * fraction of the partitions scanned. Requires
+    * VectorIndex.buildCellBounds on `indexDir` (the call fails fast
+    * rather than pruning unsoundly). */
+  def closestFactsAdaptive(db: HippoDb, indexDir: String, query: String,
+      k: Int = 5, initialProbe: Int = VectorQueries.IvfProbe): DataFrame =
+    plan(db, Left(query), Bounded(indexDir, initialProbe), k, shape = TopK(narrow = false))
+
+  /** ALL facts inside the cosine ball — the RADIUS form of
+    * [[closestFacts]] (v11's semantics on the store: dedup sweeps,
+    * compliance pulls, "everything sufficiently similar"; output
+    * size is data-dependent, no k). Through an index it is
+    * VectorIndex.rangeSearch over the probed cells: fewer probes
+    * trade far-ball recall for scan bytes. */
+  def closestFactsRange(db: HippoDb, query: String, tau: Double,
+      indexDir: Option[String] = None,
+      nProbe: Int = VectorQueries.IvfProbe): DataFrame =
+    plan(db, Left(query), rung(indexDir, nProbe), 0, shape = Ball(tau))
+
+  /** Top-k facts by MAXIMAL MARGINAL RELEVANCE — [[closestFacts]]
+    * with v12's diversification: a store grown by annotate-with-dedup
+    * still holds near-paraphrase facts, and a RAG context window
+    * wants coverage, not five copies of the strongest match. The
+    * `pool` most relevant facts (from the corpus scan, or from the
+    * index's probed cells) are re-ranked greedily by the SHARED
+    * VectorQueries.mmrTopK kernel (entry and facade cannot drift). */
+  def closestFactsDiverse(db: HippoDb, query: String, k: Int = 5,
+      pool: Int = VectorQueries.MmrPool, indexDir: Option[String] = None,
+      nProbe: Int = VectorQueries.IvfProbe): DataFrame =
+    plan(db, Left(query), rung(indexDir, nProbe), k, shape = Diverse(pool))
+
+  /** GRAPH-BOOSTED retrieval: [[closestFacts]]'s cosine pool
+    * re-ranked by personalized-PageRank mass flowing from the given
+    * probe entities (the h19 kernel on the store's OWN edge table —
+    * shared, so facade and entry cannot drift). A fact whose
+    * entities sit graph-close to the query's entities outranks an
+    * equally-similar but graph-distant one — the GraphRAG
+    * re-ranking step between vector recall and prompt assembly.
+    * score = λ·cos + μ·Σ ppr(fact's entities), λ and μ both LITERAL
+    * parameters (the v12 convention: `1.0 − 0.7` is
+    * 0.30000000000000004, a DIFFERENT double than 0.3 — computing μ
+    * would shift round-6 boundaries against any mirror). The pool is
+    * the `pool`-deep cosine top-k, from the corpus scan or the index
+    * probe. */
+  def closestFactsGraphRanked(db: HippoDb, query: String,
+      probeEntities: Seq[String], k: Int = 5, pool: Int = 32,
+      lambda: Double = 0.7, mu: Double = 0.3,
+      indexDir: Option[String] = None,
+      nProbe: Int = VectorQueries.IvfProbe): DataFrame =
+    plan(db, Left(query), rung(indexDir, nProbe), k,
+      shape = GraphBoost(probeEntities, pool, lambda, mu))
+
+  /** Hybrid retrieval: top-k by cosine among facts involving ANY
+    * (union) or ALL of `entities` — graph semi-join first, then
+    * vector scoring. Through an index the candidate filter applies
+    * INSIDE the probed cells (the reference's own architecture:
+    * storage.py:304-337 runs the entity-filtered lookup inside the
+    * Chroma index).
+    *
+    * Edge semantics mirrored from storage.py:308-309: when k exceeds
+    * the candidate count, ALL candidate facts return UNRANKED (cos
+    * null, ordered by fact_id) — the reference skips the vector
+    * lookup entirely in that case. */
+  def closestFactsWithEntities(
+      db: HippoDb, query: String, entities: Seq[String],
+      union: Boolean = true, k: Int = 5, indexDir: Option[String] = None,
+      nProbe: Int = VectorQueries.IvfProbe): DataFrame =
+    plan(db, Left(query), rung(indexDir, nProbe), k, Some((entities, union)))
+
+  /** [[closestFactsWithEntities]] with the probe depth chosen by
+    * PROOF instead of a fixed nProbe (the r12 SURVEY measured a 0.6
+    * recall floor at default probes on a selective entity filter):
+    * the adaptive probe runs until every unprobed cell's cosine bound
+    * provably cannot reach the pooled k-th, so the ranking equals the
+    * brute hybrid EXACTLY. Requires VectorIndex.buildCellBounds on
+    * `indexDir` (appends keep live bounds extended). */
+  def closestFactsWithEntitiesAdaptive(
+      db: HippoDb, indexDir: String, query: String, entities: Seq[String],
+      union: Boolean = true, k: Int = 5,
+      initialProbe: Int = VectorQueries.IvfProbe): DataFrame =
+    plan(db, Left(query), Bounded(indexDir, initialProbe), k, Some((entities, union)))
+
+  /** [[closestFactsWithEntities]] at the COMPRESSED rung: the vector
+    * half probes a [[buildFactIndexPq]] IVFADC artifact (candidate
+    * semi-join on the partition-pruned CODE scan, ~M bytes/vector,
+    * then the exact re-rank of the filtered pool only). At nProbe ==
+    * nCells with a pool covering the candidates the ranking equals
+    * the brute hybrid exactly. */
+  def closestFactsWithEntitiesIndexedAdc(
+      db: HippoDb, indexDir: String, query: String, entities: Seq[String],
+      union: Boolean = true, k: Int = 5,
+      nProbe: Int = graft.operators.IvfPq.Probe,
+      rerank: Int = graft.operators.Pq.Rerank): DataFrame =
+    plan(db, Left(query), Adc(indexDir, nProbe, rerank), k, Some((entities, union)))
+
+  /** BATCH retrieval — the reference's retrieval loop
+    * (retrieval.py:15-78) runs MANY queries against the persisted
+    * store index: annIvfBatch over [[buildFactIndex]]'s artifact, ONE
+    * bulk partition-pruned job for the whole batch instead of
+    * |queries| driver round-trips. `queries` are (query_id, text)
+    * pairs with distinct ids, embedded driver-side. Returns
+    * (query_id, fact_id, fact_text, cos, rk), ≤ k rows per query,
+    * each query's rows equal to [[closestFacts]] when the probes
+    * cover the model. reprobeMax > 0 (requires
+    * VectorIndex.buildCellBounds on `indexDir`) buys the bounded
+    * adaptive top-up. */
+  def closestFactsBatch(db: HippoDb, indexDir: String,
+      queries: Seq[(Long, String)], k: Int = 5,
+      nProbe: Int = VectorQueries.IvfProbe, reprobeMax: Int = 0,
+      coarseProbe: Int = graft.operators.ExtendedQueries.E01cCoarseProbe)
+      : DataFrame =
+    plan(db, Right(queries), Ivf(indexDir, nProbe, reprobeMax, coarseProbe), k)
+
+  /** The entity-filtered [[closestFactsBatch]] — the batch form of
+    * [[closestFactsWithEntities]]: the candidate relation is computed
+    * ONCE for the batch and applied INSIDE the index scan, and the
+    * k > candidates edge returns every candidate UNRANKED (cos and rk
+    * null) for every query — the filter is query-independent, so the
+    * branch is too. */
+  def closestFactsWithEntitiesBatch(db: HippoDb, indexDir: String,
+      queries: Seq[(Long, String)], entities: Seq[String],
+      union: Boolean = true, k: Int = 5,
+      nProbe: Int = VectorQueries.IvfProbe, reprobeMax: Int = 0,
+      coarseProbe: Int = graft.operators.ExtendedQueries.E01cCoarseProbe)
+      : DataFrame =
+    plan(db, Right(queries), Ivf(indexDir, nProbe, reprobeMax, coarseProbe), k,
+      Some((entities, union)))
+
+  /** [[closestFactsBatch]] at the COMPRESSED rung: annIvfPqBatch over
+    * a [[buildFactIndexPq]] artifact streams ~M ints + a norm per
+    * probed fact instead of the float embedding, and the exact
+    * re-rank touches only the pooled ids. */
+  def closestFactsBatchAdc(db: HippoDb, indexDir: String,
+      queries: Seq[(Long, String)], k: Int = 5,
+      nProbe: Int = graft.operators.IvfPq.Probe,
+      rerank: Int = graft.operators.Pq.Rerank): DataFrame =
+    plan(db, Right(queries), Adc(indexDir, nProbe, rerank), k)
+
+  /** [[closestFactsWithEntitiesBatch]] at the COMPRESSED rung. */
+  def closestFactsWithEntitiesBatchAdc(db: HippoDb, indexDir: String,
+      queries: Seq[(Long, String)], entities: Seq[String],
+      union: Boolean = true, k: Int = 5,
+      nProbe: Int = graft.operators.IvfPq.Probe,
+      rerank: Int = graft.operators.Pq.Rerank): DataFrame =
+    plan(db, Right(queries), Adc(indexDir, nProbe, rerank), k, Some((entities, union)))
+
+  /** retrieval.py's loop body: top-k facts + an answer-context blob
+    * (the RAG prompt the reference would send to an LLM). With
+    * `indexDir` set the lookup is [[closestFactsIndexed]]'s. */
+  def retrieve(db: HippoDb, query: String, k: Int = 10,
+      indexDir: Option[String] = None,
+      nProbe: Int = VectorQueries.IvfProbe): (DataFrame, String) = {
+    val (top, facts) = ragTop(db, query, k, indexDir, nProbe)
+    (top, prompt(query, facts, numbered = false))
   }
+
+  /** The question-answering loop over NUMBERED facts (prompts.py:86
+    * question_prompt, the hippoview QA path): top-k retrieval, facts
+    * enumerated so the model can cite them, then one LLM call.
+    * Returns (facts, prompt, model answer). */
+  def answer(db: HippoDb, question: String, k: Int = 10,
+      indexDir: Option[String] = None,
+      nProbe: Int = VectorQueries.IvfProbe): (DataFrame, String, String) = {
+    val (top, facts) = ragTop(db, question, k, indexDir, nProbe)
+    val p = prompt(question, facts, numbered = true)
+    (top, p, llm.invoke(p))
+  }
+
+  /** [[retrieve]] at batch shape: ONE [[closestFactsBatch]] job serves
+    * every query's top-k, then one bounded |queries| × k collect
+    * builds the per-query prompts retrieve emits. Returns the batch
+    * frame plus query_id → prompt. */
+  def retrieveBatch(db: HippoDb, indexDir: String,
+      queries: Seq[(Long, String)], k: Int = 10,
+      nProbe: Int = VectorQueries.IvfProbe)
+      : (DataFrame, Map[Long, String]) = {
+    val top = closestFactsBatch(db, indexDir, queries, k, nProbe)
+    (top, prompts(top, queries, numbered = false).toMap)
+  }
+
+  /** [[answer]] at batch shape: one batch retrieval, the numbered
+    * prompt [[answer]] sends per question, and one LLM call per
+    * question. Returns the batch frame plus question_id → (prompt,
+    * model answer). */
+  def answerBatch(db: HippoDb, indexDir: String,
+      questions: Seq[(Long, String)], k: Int = 10,
+      nProbe: Int = VectorQueries.IvfProbe)
+      : (DataFrame, Map[Long, (String, String)]) = {
+    val top = closestFactsBatch(db, indexDir, questions, k, nProbe)
+    (top, prompts(top, questions, numbered = true)
+      .map { case (qid, p) => qid -> (p, llm.invoke(p)) }.toMap)
+  }
+
+  /** Top-k entities by cosine of their STORED-repr embedding — the
+    * unconditional "name (description)" text add_entity writes to
+    * the vector collection (storage.py:191), "name ()" when the
+    * description is empty. */
+  def closestEntities(db: HippoDb, query: String, k: Int = 5): DataFrame = {
+    import spark.implicits._
+    val emb = embedder
+    val entEmb = named(db.entities)
+      .mapPartitions(_.map { case (e, d) => (e, emb.embed(Graft.entityStoredRepr(e, d))) })
+      .toDF("entity", "embedding")
+    entEmb.select(col("entity"), cosine6(toDouble(col("embedding")), lits(embed(query))).as("cos"))
+      .orderBy(col("cos").desc, col("entity"))
+      .limit(k)
+  }
+
+  /** (entity, description) pairs, the description "" when absent. */
+  private def named(entities: DataFrame): Dataset[(String, String)] = {
+    import spark.implicits._
+    entities.select(col("entity"),
+      if (entities.columns.contains("description")) col("description")
+      else lit("").as("description")).as[(String, String)]
+  }
+
+  /** Entities sharing a fact with `entity`, with shared-fact counts. */
+  def neighbours(db: HippoDb, entity: String): DataFrame =
+    sharingFacts(db, entity).groupBy("entity").agg(countDistinct("fact_id").as("n_shared_facts"))
+
+  /** get_neighbours(return_facts=True) (storage.py:213-224): each
+    * neighbour with the SORTED LIST of shared fact ids, not just the
+    * count. collect_list stays bounded by the neighbour's true fact
+    * fan-in (the same payload the reference materializes). */
+  def neighboursWithFacts(db: HippoDb, entity: String): DataFrame =
+    sharingFacts(db, entity).groupBy("entity")
+      .agg(sort_array(collect_set("fact_id")).as("fact_ids"))
+
+  /** The edges of other entities on `entity`'s facts. */
+  private def sharingFacts(db: HippoDb, entity: String): DataFrame = {
+    val probe = db.edges.filter(col("entity") === entity).select(col("fact_id").as("pf"))
+    db.edges.join(broadcast(probe), col("fact_id") === col("pf"))
+      .filter(col("entity") =!= entity)
+  }
+
+  /** Facts involving ANY (union=true) or ALL of the given entities. */
+  def factsByEntities(db: HippoDb, entities: Seq[String], union: Boolean = true): DataFrame = {
+    val m = db.edges.filter(col("entity").isin(entities: _*))
+    val ids =
+      if (union) m.select("fact_id").distinct()
+      else m.groupBy("fact_id").agg(countDistinct("entity").as("n"))
+        .filter(col("n") === entities.size).select("fact_id")
+    db.facts.join(ids, Seq("fact_id"), "left_semi")
+  }
+
+  /** NLI-based fact comparison (annotator.py:126): does an existing
+    * fact entail the candidate? Used for dedup-on-ingest. */
+  def entails(existing: String, candidate: String): Boolean =
+    nli.entails(existing, candidate)
+
+  // ------------------------------------------------- the plan builder
 
   /** The index snapshots this instance serves single queries from —
     * its only state besides the models (IvfSnapshots). */
   @transient private[graft] lazy val snapshots = new graft.store.IvfSnapshots
 
-  /** `(fact_id, cos)` hits joined to their facts in one job over
-    * `db.facts` pre-filtered to the hit ids, as the Spark plan would:
-    * facts missing from `db` drop out, columns are fact_id, cos, then
-    * the facts' own, ordered by cos descending then fact_id. */
+  /** The one retrieval plan builder behind every public retrieval
+    * method. `queries` is one text (Left) or a batch of
+    * (query_id, text) pairs with distinct ids (Right); `rung` is where
+    * the vector half runs; `filter` is the (entities, union) candidate
+    * filter; `shape` is what a single query ranks and returns (a batch
+    * returns top-k rows). */
+  private def plan(db: HippoDb, queries: Either[String, Seq[(Long, String)]],
+      rung: Rung, k: Int, filter: Option[(Seq[String], Boolean)] = None,
+      shape: Shape = TopK(narrow = true)): DataFrame = {
+    // One id's rows would merge into one prompt and one answer.
+    for (qs <- queries; id <- qs.map(_._1).diff(qs.map(_._1).distinct).headOption)
+      throw new IllegalArgumentException(
+        s"query_id $id appears more than once in the batch; query ids must be distinct")
+    val cands = filter.map { case (entities, union) => candidates(db, entities, union, rung) }
+    cands match {
+      case Some((ids, n)) if k > n => unranked(db, ids, queries)
+      case _ => queries.fold(
+        one(db, _, rung, k, cands.map(_._1), shape),
+        many(db, _, rung, k, cands.map(_._1)))
+    }
+  }
+
+  /** The filter's fact ids and their count. The adaptive rung scores
+    * the candidates in two passes, so it gets them as a local relation
+    * (one collect, nothing pinned); the other rungs re-run the cheap
+    * edge aggregation in the chosen branch rather than cache a frame
+    * the caller could never release. */
+  private def candidates(db: HippoDb, entities: Seq[String], union: Boolean,
+      rung: Rung): (DataFrame, Long) = Phase(spark, "graft.serve.candidates") {
+    val ids = factsByEntities(db, entities, union).select("fact_id")
+    rung match {
+      case _: Bounded =>
+        import spark.implicits._
+        val local = ids.collect().map(_.getLong(0)).toIndexedSeq
+        (local.toDF("fact_id"), local.length.toLong)
+      case _ => (ids, ids.count())
+    }
+  }
+
+  /** The reference's k > candidates edge (storage.py:308-309): every
+    * candidate fact returns UNRANKED (cos null, by fact_id) and the
+    * vector side never runs — for every query of a batch (rk null). */
+  private def unranked(db: HippoDb, ids: DataFrame,
+      queries: Either[String, Seq[(Long, String)]]): DataFrame = {
+    val facts = db.facts.join(ids, Seq("fact_id"), "left_semi")
+      .select(col("fact_id"), col("fact_text"), lit(null).cast("double").as("cos"))
+      .orderBy("fact_id")
+    queries.fold(_ => facts, { qs =>
+      import spark.implicits._
+      broadcast(qs.map(_._1).toDF("query_id")).crossJoin(facts)
+        .withColumn("rk", lit(null).cast("int"))
+        .select("query_id", "fact_id", "fact_text", "cos", "rk")
+        .orderBy("query_id", "fact_id")
+    })
+  }
+
+  /** One query's plan, ranked within the candidate facts `within`
+    * when given. */
+  private def one(db: HippoDb, text: String, rung: Rung, k: Int,
+      within: Option[DataFrame], shape: Shape): DataFrame = {
+    val q = embed(text)
+    shape match {
+      case TopK(narrow) =>
+        val snapshot = rung match {
+          case Ivf(dir, nProbe, _, _) if within.isEmpty =>
+            snapshots(spark, dir).flatMap(_.topK(q, k, nProbe))
+          case _ => None
+        }
+        snapshot.fold(payload(db, hits(db, q, rung, k, within), narrow))(factsOf(db, _))
+      case Ball(tau) => payload(db, rung match {
+        case Ivf(dir, nProbe, _, _) =>
+          VectorIndex.rangeSearch(spark, dir, q, tau, nProbe).withColumnRenamed("vec_id", "fact_id")
+        case _ => scored(db.factEmb, q).filter(col("cos") >= tau)
+      }, narrow = true)
+      case Diverse(pool) =>
+        val scan = rung match {
+          case Ivf(dir, nProbe, _, _) => VectorIndex.probedScan(spark, dir, q, nProbe)
+            .select(col("vec_id"), col("v"), lits(q).as("qv"))
+          case _ => db.factEmb.select(col("fact_id").as("vec_id"),
+            toDouble(col("embedding")).as("v"), lits(q).as("qv"))
+        }
+        Phase(spark, "graft.serve.pool")(VectorQueries.mmrTopK(spark, scan, pool, k))
+          .withColumnRenamed("vec_id", "fact_id")
+          .join(db.facts.select("fact_id", "fact_text"), "fact_id")
+          .select("rk", "fact_id", "fact_text", "rel", "mmr_score")
+          .orderBy("rk")
+      case GraphBoost(entities, pool, lambda, mu) =>
+        graphBoosted(db, hits(db, q, rung, pool, None), entities, k, lambda, mu)
+    }
+  }
+
+  /** A batch's plan: the queries run under NEGATIVE surrogate ids, so
+    * the index's self-exclusion (vec_id == query_id) can never drop a
+    * fact whose id equals a user query_id; the user ids join back. */
+  private def many(db: HippoDb, queries: Seq[(Long, String)], rung: Rung, k: Int,
+      within: Option[DataFrame]): DataFrame = {
+    import spark.implicits._
+    val surrogates = queries.indices.map(i => -(i + 1).toLong)
+    val qdf = surrogates.zip(queries).map { case (s, (_, text)) => (s, embed(text)) }
+      .toDF("vec_id", "v")
+    val ids = surrogates.zip(queries.map(_._1)).toDF("query_id", "user_query_id")
+    val ranked = rung match {
+      case Ivf(dir, nProbe, reprobeMax, coarseProbe) =>
+        VectorIndex.annIvfBatch(spark, dir, qdf, k, nProbe, reprobeMax, coarseProbe,
+          candidates = within.map(_.withColumnRenamed("fact_id", "vec_id")))
+      case Adc(dir, nProbe, rerank) =>
+        VectorIndex.annIvfPqBatch(spark, dir, vectors(db), qdf, k, nProbe, rerank,
+          candidates = within.map(_.withColumnRenamed("fact_id", "vec_id")))
+      case other => throw new IllegalArgumentException(s"no batch plan on $other")
+    }
+    ranked.join(broadcast(ids), "query_id")
+      .withColumnRenamed("vec_id", "fact_id")
+      .join(db.facts, "fact_id")
+      .select(col("user_query_id").as("query_id"), col("fact_id"),
+        col("fact_text"), col("cos"), col("rk"))
+      .orderBy("query_id", "rk")
+  }
+
+  /** The vector half: the (fact_id, cos) top-k of `q` on `rung`. */
+  private def hits(db: HippoDb, q: Array[Double], rung: Rung, k: Int,
+      within: Option[DataFrame]): DataFrame = {
+    val ids = within.map(_.withColumnRenamed("fact_id", "vec_id"))
+    def byFact(df: DataFrame) = df.withColumnRenamed("vec_id", "fact_id")
+    rung match {
+      case Scan =>
+        scored(within.foldLeft(db.factEmb)(_.join(_, Seq("fact_id"), "left_semi")), q)
+          .orderBy(col("cos").desc, col("fact_id"))
+          .limit(k)
+      case Ivf(dir, nProbe, _, _) =>
+        byFact(VectorIndex.annIvf(spark, dir, q, k, nProbe, candidates = ids))
+      case Bounded(dir, initialProbe) =>
+        byFact(VectorIndex.annIvfAdaptive(spark, dir, q, k, initialProbe, candidates = ids).result)
+      case Adc(dir, nProbe, rerank) =>
+        byFact(VectorIndex.annIvfPq(spark, dir, vectors(db), q, k, nProbe,
+          rerank = rerank, candidates = ids))
+    }
+  }
+
+  /** The payload tail: hits joined to their facts, narrowed to
+    * (fact_id, fact_text, cos) or with every fact column, ordered by
+    * cos descending then fact_id. */
+  private def payload(db: HippoDb, hits: DataFrame, narrow: Boolean): DataFrame = {
+    val joined = hits.join(db.facts, "fact_id")
+    (if (narrow) joined.select("fact_id", "fact_text", "cos") else joined)
+      .orderBy(col("cos").desc, col("fact_id"))
+  }
+
+  /** [[payload]] for snapshot hits: one job over `db.facts`
+    * pre-filtered to the hit ids, joined in the driver as the Spark
+    * plan would — facts missing from `db` drop out, columns are
+    * fact_id, cos, then the facts' own, ordered by cos descending then
+    * fact_id. */
   private def factsOf(db: HippoDb, hits: Seq[(Long, Double)]): DataFrame = {
     val cosOf = hits.groupMap(_._1)(_._2)
     val fields = db.facts.schema.fields
     val idAt = fields.indexWhere(_.name == "fact_id")
     val found =
       if (cosOf.isEmpty) Array.empty[Row]
-      else graft.plans.Phase(spark, "graft.serve.lookup") {
+      else Phase(spark, "graft.serve.lookup") {
         db.facts.filter(org.apache.spark.sql.graft.InSetColumn(col("fact_id"), cosOf.keys))
           .collect()
       }
@@ -455,152 +847,18 @@ final class Graft(
         fields.patch(idAt, Nil, 1)))
   }
 
-  /** [[closestFactsIndexed]] through the ADAPTIVE probe
-    * (VectorIndex.annIvfAdaptive): probes the nearest cells, then
-    * only the cells whose per-cell cosine bound could still change
-    * the top-k — the rows EQUAL the all-cells probe exactly at a
-    * fraction of the partitions scanned. Requires
-    * VectorIndex.buildCellBounds for the current index version
-    * (appends invalidate the bounds; the call fails fast rather than
-    * pruning unsoundly). */
-  def closestFactsAdaptive(db: HippoDb, indexDir: String, query: String,
-      k: Int = 5, initialProbe: Int = VectorQueries.IvfProbe): DataFrame =
-    graft.store.VectorIndex.annIvfAdaptive(spark, indexDir,
-        embedder.embed(query).map(_.toDouble), k, initialProbe).result
-      .withColumnRenamed("vec_id", "fact_id")
-      .join(db.facts, "fact_id")
-      .orderBy(col("cos").desc, col("fact_id"))
-
-  /** Top-k facts by cosine to a natural-language query. */
-  def closestFacts(db: HippoDb, query: String, k: Int = 5): DataFrame =
-    db.factEmb
-      .select(col("fact_id"), cosine6(toDouble(col("embedding")), queryVec(query)).as("cos"))
-      .orderBy(col("cos").desc, col("fact_id"))
-      .limit(k)
-      .join(db.facts, "fact_id")
-      .select("fact_id", "fact_text", "cos")
-      .orderBy(col("cos").desc, col("fact_id"))
-
-  /** ALL facts inside the cosine ball — the RADIUS form of
-    * [[closestFacts]] (v11's semantics on the store: dedup sweeps,
-    * compliance pulls, "everything sufficiently similar"; output
-    * size is data-dependent, no k). */
-  def closestFactsRange(db: HippoDb, query: String, tau: Double): DataFrame =
-    db.factEmb
-      .select(col("fact_id"), cosine6(toDouble(col("embedding")), queryVec(query)).as("cos"))
-      .filter(col("cos") >= tau)
-      .join(db.facts, "fact_id")
-      .select("fact_id", "fact_text", "cos")
-      .orderBy(col("cos").desc, col("fact_id"))
-
-  /** The radius form through the PERSISTED index — VectorIndex
-    * .rangeSearch over the partition-pruned probe; at nProbe =
-    * nCells equals [[closestFactsRange]] exactly (spec-pinned),
-    * fewer probes trade far-ball recall for scan bytes. */
-  def closestFactsRangeIndexed(db: HippoDb, indexDir: String, query: String,
-      tau: Double, nProbe: Int = VectorQueries.IvfProbe): DataFrame =
-    graft.store.VectorIndex.rangeSearch(spark, indexDir,
-        embedder.embed(query).map(_.toDouble), tau, nProbe)
-      .withColumnRenamed("vec_id", "fact_id")
-      .join(db.facts, "fact_id")
-      .select("fact_id", "fact_text", "cos")
-      .orderBy(col("cos").desc, col("fact_id"))
-
-  /** Top-k facts by MAXIMAL MARGINAL RELEVANCE — [[closestFacts]]
-    * with v12's diversification: a store grown by annotate-with-dedup
-    * still holds near-paraphrase facts, and a RAG context window
-    * wants coverage, not five copies of the strongest match. The
-    * pool cut is the same distributed scan shape as closestFacts;
-    * the greedy re-rank runs on the bounded pool via the SHARED
-    * VectorQueries.mmrTopK kernel (entry and facade cannot drift). */
-  def closestFactsDiverse(db: HippoDb, query: String, k: Int = 5,
-      pool: Int = VectorQueries.MmrPool): DataFrame =
-    mmrTail(db,
-      db.factEmb.select(col("fact_id").as("vec_id"),
-        toDouble(col("embedding")).as("v"), queryVec(query).as("qv")),
-      pool, k)
-
-  /** [[closestFactsDiverse]] with the POOL CUT through the persisted
-    * index: the MMR pool's relevance scan runs over the
-    * partition-pruned IVF probe sliver (VectorIndex.probedScan)
-    * instead of the full corpus — at nProbe == nCells the sliver IS
-    * the corpus, so the result equals the brute form exactly
-    * (GraftApiSpec pins it). The greedy re-rank is the same shared
-    * mmrTopK kernel. */
-  def closestFactsDiverseIndexed(db: HippoDb, indexDir: String,
-      query: String, k: Int = 5, pool: Int = VectorQueries.MmrPool,
-      nProbe: Int = VectorQueries.IvfProbe): DataFrame =
-    mmrTail(db,
-      graft.store.VectorIndex
-        .probedScan(spark, indexDir, embedder.embed(query).map(_.toDouble), nProbe)
-        .select(col("vec_id"), col("v"), queryVec(query).as("qv")),
-      pool, k)
-
-  /** MMR pool + greedy re-rank + fact payload join — shared by the
-    * scan-pooled and index-pooled diverse forms. */
-  private def mmrTail(db: HippoDb, e: DataFrame, pool: Int, k: Int): DataFrame =
-    VectorQueries.mmrTopK(spark, e, pool, k)
-      .withColumnRenamed("vec_id", "fact_id")
-      .join(db.facts.select("fact_id", "fact_text"), "fact_id")
-      .select("rk", "fact_id", "fact_text", "rel", "mmr_score")
-      .orderBy("rk")
-
-  /** GRAPH-BOOSTED retrieval: [[closestFacts]]'s cosine pool
-    * re-ranked by personalized-PageRank mass flowing from the given
-    * probe entities (the h19 kernel on the store's OWN edge table —
-    * shared, so facade and entry cannot drift). A fact whose
-    * entities sit graph-close to the query's entities outranks an
-    * equally-similar but graph-distant one — the GraphRAG
-    * re-ranking step between vector recall and prompt assembly,
-    * and the natural composition of this store's two halves.
-    * score = λ·cos + μ·Σ ppr(fact's entities), λ and μ both LITERAL
-    * parameters (the v12 convention: `1.0 − 0.7` is
-    * 0.30000000000000004, a DIFFERENT double than 0.3 — computing μ
-    * would shift round-6 boundaries against any mirror). The PPR
-    * runs once per query over the edge relation; the boost
-    * aggregation touches only the bounded pool's edges — the edge
-    * table is semi-joined against the broadcast pool ids BEFORE the
-    * groupBy, so the agg is pool-sized, not corpus-edge-sized
-    * (ADVICE r9). */
-  def closestFactsGraphRanked(db: HippoDb, query: String,
-      probeEntities: Seq[String], k: Int = 5, pool: Int = 32,
-      lambda: Double = 0.7, mu: Double = 0.3): DataFrame =
-    graphRankedTail(db,
-      db.factEmb
-        .select(col("fact_id"), cosine6(toDouble(col("embedding")), queryVec(query)).as("cos"))
-        .orderBy(col("cos").desc, col("fact_id"))
-        .limit(pool),
-      probeEntities, k, lambda, mu)
-
-  /** [[closestFactsGraphRanked]] with the POOL CUT through the
-    * persisted index: the cosine pool comes from the partition-pruned
-    * IVF probe (VectorIndex.annIvf) instead of the full-corpus scan —
-    * at nProbe == nCells the pool, and therefore the whole ranking,
-    * equals the brute form exactly (GraftApiSpec pins it). The PPR
-    * boost tail is byte-shared. */
-  def closestFactsGraphRankedIndexed(db: HippoDb, indexDir: String,
-      query: String, probeEntities: Seq[String], k: Int = 5,
-      pool: Int = 32, lambda: Double = 0.7, mu: Double = 0.3,
-      nProbe: Int = VectorQueries.IvfProbe): DataFrame =
-    graphRankedTail(db,
-      graft.store.VectorIndex.annIvf(spark, indexDir,
-          embedder.embed(query).map(_.toDouble), pool, nProbe,
-          excludeVecId = None)
-        .withColumnRenamed("vec_id", "fact_id"),
-      probeEntities, k, lambda, mu)
-
-  /** The PPR-boosted re-rank over a bounded cosine pool — shared by
-    * the scan-pooled and index-pooled graph-ranked forms so the two
-    * cannot drift. */
-  private def graphRankedTail(db: HippoDb, cand0: DataFrame,
+  /** The PPR-boosted re-rank over a bounded cosine pool. The PPR runs
+    * once per query over the edge relation; the boost aggregation
+    * touches only the pool's edges — the edge table is semi-joined
+    * against the broadcast pool ids BEFORE the groupBy (ADVICE r9). */
+  private def graphBoosted(db: HippoDb, pool: DataFrame,
       probeEntities: Seq[String], k: Int,
       lambda: Double, mu: Double): DataFrame = {
     // `pool` rows is human-scale: materialize on the driver (the
-    // annPq contract) so the corpus cosine scan runs ONCE even
-    // though the pool feeds both the semi-join and the final score.
-    val cand = spark.createDataFrame(
-      new java.util.ArrayList(java.util.Arrays.asList(cand0.collect(): _*)),
-      cand0.schema)
+    // annPq contract) so the cosine scan runs ONCE even though the
+    // pool feeds both the semi-join and the final score.
+    val cand = spark.createDataFrame(java.util.Arrays.asList(
+      Phase(spark, "graft.serve.pool")(pool.collect()): _*), pool.schema)
     val ppr = graft.operators.GraphQueries
       .personalizedRankOn(spark, db.edges, probeEntities, release = true)
       .withColumnRenamed("rank", "ppr")
@@ -619,473 +877,74 @@ final class Graft(
       .orderBy(col("score").desc, col("fact_id"))
   }
 
-  /** Top-k entities by cosine of their STORED-repr embedding — the
-    * unconditional "name (description)" text add_entity writes to
-    * the vector collection (storage.py:191), "name ()" when the
-    * description is empty. */
-  def closestEntities(db: HippoDb, query: String, k: Int = 5): DataFrame = {
-    import spark.implicits._
-    val emb = embedder
-    val hasDesc = db.entities.columns.contains("description")
-    val named = (
-      if (hasDesc) db.entities.select(col("entity"), col("description"))
-      else db.entities.select(col("entity"), lit("").as("description"))
-    ).as[(String, String)]
-    val entEmb = named
-      .mapPartitions(_.map { case (e, d) => (e, emb.embed(Graft.entityStoredRepr(e, d))) })
-      .toDF("entity", "embedding")
-    entEmb.select(col("entity"), cosine6(toDouble(col("embedding")), queryVec(query)).as("cos"))
-      .orderBy(col("cos").desc, col("entity"))
-      .limit(k)
+  /** retrieve/answer's top-k — the brute scan, or the index's rows
+    * narrowed to the brute form's columns — and its fact texts in
+    * order (one collect of k rows, bounded by k, not the corpus). */
+  private def ragTop(db: HippoDb, query: String, k: Int,
+      indexDir: Option[String], nProbe: Int): (DataFrame, Seq[String]) = {
+    val top = indexDir.fold(closestFacts(db, query, k))(
+      closestFactsIndexed(db, _, query, k, nProbe).select("fact_id", "fact_text", "cos"))
+    (top, top.collect().map(_.getAs[String]("fact_text")).toSeq)
   }
 
-  /** Entities sharing a fact with `entity`, with shared-fact counts. */
-  def neighbours(db: HippoDb, entity: String): DataFrame = {
-    val probe = db.edges.filter(col("entity") === entity).select(col("fact_id").as("pf"))
-    db.edges.join(broadcast(probe), col("fact_id") === col("pf"))
-      .filter(col("entity") =!= entity)
-      .groupBy("entity").agg(countDistinct("fact_id").as("n_shared_facts"))
-  }
-
-  /** get_neighbours(return_facts=True) (storage.py:213-224): each
-    * neighbour with the SORTED LIST of shared fact ids, not just the
-    * count. collect_list stays bounded by the neighbour's true fact
-    * fan-in (the same payload the reference materializes). */
-  def neighboursWithFacts(db: HippoDb, entity: String): DataFrame = {
-    val probe = db.edges.filter(col("entity") === entity).select(col("fact_id").as("pf"))
-    db.edges.join(broadcast(probe), col("fact_id") === col("pf"))
-      .filter(col("entity") =!= entity)
-      .groupBy("entity")
-      .agg(sort_array(collect_set("fact_id")).as("fact_ids"))
-  }
-
-  /** Facts involving ANY (union=true) or ALL of the given entities. */
-  def factsByEntities(db: HippoDb, entities: Seq[String], union: Boolean = true): DataFrame = {
-    val m = db.edges.filter(col("entity").isin(entities: _*))
-    val ids =
-      if (union) m.select("fact_id").distinct()
-      else m.groupBy("fact_id").agg(countDistinct("entity").as("n"))
-        .filter(col("n") === entities.size).select("fact_id")
-    db.facts.join(ids, Seq("fact_id"), "left_semi")
-  }
-
-  /** Hybrid retrieval: top-k by cosine among facts passing the
-    * entity filter (graph semi-join first, then vector scoring).
-    *
-    * Edge semantics mirrored from storage.py:308-309: when k exceeds
-    * the candidate count, ALL candidate facts return UNRANKED (cos
-    * null, ordered by fact_id) — the reference skips the vector
-    * lookup entirely in that case. The candidate count is one scalar
-    * action over the semi-joined id set (bounded, never the corpus). */
-  def closestFactsWithEntities(
-      db: HippoDb, query: String, entities: Seq[String],
-      union: Boolean = true, k: Int = 5): DataFrame = {
-    // The id set feeds both the count() branch decision and the
-    // chosen branch's semi-join, so the entity-filter subtree runs
-    // twice per call — DELIBERATE: it is a cheap probe-filtered edges
-    // aggregation, and caching it here would leak one pinned
-    // DataFrame per call with no unpersist path the caller could
-    // reach.
-    val filtered = factsByEntities(db, entities, union).select("fact_id")
-    if (k > filtered.count()) {
-      hybridUnranked(db, filtered)
-    } else {
-      db.factEmb.join(filtered, Seq("fact_id"), "left_semi")
-        .select(col("fact_id"), cosine6(toDouble(col("embedding")), queryVec(query)).as("cos"))
-        .orderBy(col("cos").desc, col("fact_id"))
-        .limit(k)
-        .join(db.facts, "fact_id")
-        .select("fact_id", "fact_text", "cos")
-        .orderBy(col("cos").desc, col("fact_id"))
+  /** Each batch query's prompt, from one collect of the ≤ |queries| × k
+    * batch rows (bounded by the batch, never the corpus). */
+  private def prompts(top: DataFrame, queries: Seq[(Long, String)],
+      numbered: Boolean): Seq[(Long, String)] = {
+    val byQuery = Phase(spark, "graft.serve.context") {
+      top.select("query_id", "rk", "fact_text").collect()
+    }.groupBy(_.getLong(0))
+    queries.map { case (qid, text) =>
+      qid -> prompt(text, byQuery.getOrElse(qid, Array.empty[Row])
+        .sortBy(_.getInt(1)).map(_.getString(2)).toSeq, numbered)
     }
   }
 
-  /** The reference's k > candidates edge (storage.py:308-309): every
-    * candidate fact returns UNRANKED, the vector side never runs.
-    * Shared by the brute and indexed hybrid paths. */
-  private def hybridUnranked(db: HippoDb, filtered: DataFrame): DataFrame =
-    db.facts.join(filtered, Seq("fact_id"), "left_semi")
-      .select(col("fact_id"), col("fact_text"),
-        lit(null).cast("double").as("cos"))
-      .orderBy("fact_id")
+  /** The RAG context of retrieve ("- fact" lines), or answer's
+    * question prompt over NUMBERED facts (prompts.py:86). */
+  private def prompt(question: String, facts: Seq[String], numbered: Boolean): String =
+    if (numbered) Prompts.question(question,
+      facts.zipWithIndex.map { case (t, i) => s"${i + 1}. $t" }.mkString("\n"))
+    else s"Facts:\n${facts.map(t => s"- $t").mkString("\n")}\nQuestion: $question"
 
-  /** Hybrid retrieval THROUGH THE PERSISTED INDEX — the serving-path
-    * twin of [[closestFactsWithEntities]] and the reference's own
-    * architecture (storage.py:304-337 runs the entity-filtered
-    * vector lookup INSIDE the Chroma index): the entity semi-join
-    * applies to the IVF artifact's partition-pruned probe sliver
-    * (VectorIndex.annIvfFiltered), so a hybrid query reads
-    * ~nProbe/nCells of the corpus instead of the full-scan cosine
-    * pass. With nProbe == nCells the ranking equals the brute form
-    * EXACTLY (same filter relation, same rounding, same tiebreak —
-    * GraftApiSpec pins it, both union modes, plus the small-k
-    * unranked fallback which is byte-shared). Requires
-    * [[buildFactIndex]] to have written `indexDir`. */
-  def closestFactsWithEntitiesIndexed(
-      db: HippoDb, indexDir: String, query: String, entities: Seq[String],
-      union: Boolean = true, k: Int = 5,
-      nProbe: Int = VectorQueries.IvfProbe): DataFrame = {
-    val filtered = factsByEntities(db, entities, union).select("fact_id")
-    if (k > filtered.count()) {
-      hybridUnranked(db, filtered)
-    } else {
-      graft.store.VectorIndex.annIvfFiltered(spark, indexDir,
-          embedder.embed(query).map(_.toDouble), k, nProbe,
-          filtered.withColumnRenamed("fact_id", "vec_id"))
-        .withColumnRenamed("vec_id", "fact_id")
-        .join(db.facts, "fact_id")
-        .select("fact_id", "fact_text", "cos")
-        .orderBy(col("cos").desc, col("fact_id"))
-    }
-  }
+  private def embed(text: String): Array[Double] = embedder.embed(text).map(_.toDouble)
 
-  /** [[closestFactsWithEntitiesIndexed]] with the probe depth chosen
-    * by PROOF instead of a fixed nProbe (the r12 SURVEY measured a
-    * 0.6 recall floor at default probes on a selective entity
-    * filter): VectorIndex.annIvfFilteredAdaptive probes until every
-    * unprobed cell's cosine bound provably cannot reach the pooled
-    * k-th, so the ranking equals the all-cells filtered probe — i.e.
-    * the brute [[closestFactsWithEntities]] — EXACTLY, at whatever
-    * probe depth the filter's selectivity demands. Requires
-    * VectorIndex.buildCellBounds to have run on `indexDir` (the
-    * [[closestFactsAdaptive]] convention — adaptive serving fails
-    * fast without bounds; appends keep live bounds extended).
-    * Small-k unranked fallback byte-shared with the other hybrid
-    * forms. */
-  def closestFactsWithEntitiesAdaptive(
-      db: HippoDb, indexDir: String, query: String, entities: Seq[String],
-      union: Boolean = true, k: Int = 5,
-      initialProbe: Int = VectorQueries.IvfProbe): DataFrame = {
-    // Materialized ONCE, driver-side: the adaptive loop scores cells
-    // in (at least) two batches, each semi-joining the candidates —
-    // without a pin the entity-filter aggregation subtree would
-    // execute three times per call (count + both batches). The
-    // relation is broadcast-bounded by construction, so it collects
-    // to a local relation instead of localCheckpoint(true), which
-    // would LEAK one pinned executor block per call for the session
-    // lifetime (the sibling closestFactsWithEntities documents
-    // exactly this hazard — r13 ADVICE).
-    val factIds = factsByEntities(db, entities, union).select("fact_id")
-      .collect().map(_.getLong(0)).toIndexedSeq
-    val filtered = {
-      import spark.implicits._
-      factIds.toDF("fact_id")
-    }
-    if (k > factIds.length) {
-      hybridUnranked(db, filtered)
-    } else {
-      graft.store.VectorIndex.annIvfFilteredAdaptive(spark, indexDir,
-          embedder.embed(query).map(_.toDouble), k,
-          filtered.withColumnRenamed("fact_id", "vec_id"), initialProbe)
-        .result
-        .withColumnRenamed("vec_id", "fact_id")
-        .join(db.facts, "fact_id")
-        .select("fact_id", "fact_text", "cos")
-        .orderBy(col("cos").desc, col("fact_id"))
-    }
-  }
+  private def lits(q: Array[Double]) = array(q.toIndexedSeq.map(lit): _*)
 
-  /** [[closestFactsWithEntitiesIndexed]] at the COMPRESSED rung: the
-    * vector half probes a [[buildFactIndexPq]] IVFADC artifact
-    * (VectorIndex.annIvfPqFiltered — candidate semi-join on the
-    * partition-pruned CODE scan, ~M bytes/vector, then the exact
-    * re-rank of the filtered pool only). The candidate relation and
-    * the small-k unranked fallback are byte-shared with the other
-    * two hybrid forms. At nProbe == nCells with a pool covering the
-    * candidates the ranking equals the brute hybrid exactly
-    * (GraftApiSpec pins it). */
-  def closestFactsWithEntitiesIndexedAdc(
-      db: HippoDb, indexDir: String, query: String, entities: Seq[String],
-      union: Boolean = true, k: Int = 5,
-      nProbe: Int = graft.operators.IvfPq.Probe,
-      rerank: Int = graft.operators.Pq.Rerank): DataFrame = {
-    val filtered = factsByEntities(db, entities, union).select("fact_id")
-    if (k > filtered.count()) {
-      hybridUnranked(db, filtered)
-    } else {
-      graft.store.VectorIndex.annIvfPqFiltered(spark, indexDir,
-          db.factEmb.select(col("fact_id").as("vec_id"),
-            toDouble(col("embedding")).as("v")),
-          embedder.embed(query).map(_.toDouble), k, nProbe,
-          filtered.withColumnRenamed("fact_id", "vec_id"), rerank)
-        .withColumnRenamed("vec_id", "fact_id")
-        .join(db.facts, "fact_id")
-        .select("fact_id", "fact_text", "cos")
-        .orderBy(col("cos").desc, col("fact_id"))
-    }
-  }
+  /** (fact_id, cos) of every fact embedding in `emb` against `q`. */
+  private def scored(emb: DataFrame, q: Array[Double]): DataFrame =
+    emb.select(col("fact_id"), cosine6(toDouble(col("embedding")), lits(q)).as("cos"))
 
-  /** BATCH retrieval facade (r17, VERDICT r16 #4) — the reference's
-    * retrieval loop (retrieval.py:15-78) runs MANY queries against
-    * the persisted store index (storage.py:266-337), but this facade
-    * served one query per call while the index layer already had the
-    * batched kernel: this is annIvfBatch over [[buildFactIndex]]'s
-    * artifact with the fact payload joined back — ONE bulk
-    * partition-pruned job for the whole query batch instead of
-    * |queries| driver round-trips.
-    *
-    * `queries` are (query_id, text) pairs, embedded driver-side (the
-    * bounded-batch contract; the embed is the same per-text call the
-    * single-query facade pays). Internally the batch runs under
-    * NEGATIVE surrogate ids so a user query_id can never collide
-    * with a fact_id — annIvfBatch excludes vec_id == query_id rows,
-    * a self-exclusion that is meaningless for text queries and must
-    * never silently drop a fact. Returns (query_id, fact_id,
-    * fact_text, cos, rk), ≤ k rows per query. With nProbe and
-    * coarseProbe covering the model, each query's rows equal
-    * [[closestFacts]] EXACTLY (same round-6 cosine, same fact_id
-    * tiebreak — GraftApiSpec pins it); serving probe depths trade
-    * recall for scan bytes, and reprobeMax > 0 (requires
-    * VectorIndex.buildCellBounds on `indexDir`) buys the bounded
-    * adaptive top-up. */
-  def closestFactsBatch(db: HippoDb, indexDir: String,
-      queries: Seq[(Long, String)], k: Int = 5,
-      nProbe: Int = VectorQueries.IvfProbe, reprobeMax: Int = 0,
-      coarseProbe: Int = graft.operators.ExtendedQueries.E01cCoarseProbe)
-      : DataFrame = {
-    import spark.implicits._
-    val qdf = queries.zipWithIndex
-      .map { case ((_, text), i) =>
-        (-(i + 1).toLong, embedder.embed(text).map(_.toDouble)) }
-      .toDF("vec_id", "v")
-    val ids = queries.zipWithIndex
-      .map { case ((qid, _), i) => (-(i + 1).toLong, qid) }
-      .toDF("query_id", "user_query_id")
-    graft.store.VectorIndex.annIvfBatch(spark, indexDir, qdf, k,
-        nProbe, reprobeMax, coarseProbe)
-      .join(broadcast(ids), "query_id")
-      .withColumnRenamed("vec_id", "fact_id")
-      .join(db.facts, "fact_id")
-      .select(col("user_query_id").as("query_id"), col("fact_id"),
-        col("fact_text"), col("cos"), col("rk"))
-      .orderBy("query_id", "rk")
-  }
-
-  /** The ENTITY-FILTERED twin of [[closestFactsBatch]] — the batch
-    * form of [[closestFactsWithEntitiesIndexed]] (the reference's
-    * entity-filtered lookup, storage.py:304-337, at batch shape):
-    * the graph semi-join relation is computed ONCE for the whole
-    * batch and applied INSIDE the index scan (annIvfBatch's
-    * candidate filter — ranking happens within the filtered set,
-    * never post-hoc), and the reference's k > candidates edge
-    * (storage.py:308-309) returns every candidate UNRANKED for every
-    * query — the filter is query-independent, so the branch is too.
-    * Same exactness contract as the single-query hybrid: with probes
-    * covering the model, each query's rows equal
-    * [[closestFactsWithEntities]] exactly (GraftApiSpec pins both
-    * union modes). */
-  def closestFactsWithEntitiesBatch(db: HippoDb, indexDir: String,
-      queries: Seq[(Long, String)], entities: Seq[String],
-      union: Boolean = true, k: Int = 5,
-      nProbe: Int = VectorQueries.IvfProbe, reprobeMax: Int = 0,
-      coarseProbe: Int = graft.operators.ExtendedQueries.E01cCoarseProbe)
-      : DataFrame = {
-    import spark.implicits._
-    val filtered = factsByEntities(db, entities, union).select("fact_id")
-    if (k > filtered.count()) {
-      val ids = queries.map(_._1).toDF("query_id")
-      broadcast(ids).crossJoin(hybridUnranked(db, filtered))
-        .withColumn("rk", lit(null).cast("int"))
-        .select("query_id", "fact_id", "fact_text", "cos", "rk")
-        .orderBy("query_id", "fact_id")
-    } else {
-      val qdf = queries.zipWithIndex
-        .map { case ((_, text), i) =>
-          (-(i + 1).toLong, embedder.embed(text).map(_.toDouble)) }
-        .toDF("vec_id", "v")
-      val ids = queries.zipWithIndex
-        .map { case ((qid, _), i) => (-(i + 1).toLong, qid) }
-        .toDF("query_id", "user_query_id")
-      graft.store.VectorIndex.annIvfBatch(spark, indexDir, qdf, k,
-          nProbe, reprobeMax, coarseProbe,
-          candidates = Some(filtered.withColumnRenamed("fact_id", "vec_id")))
-        .join(broadcast(ids), "query_id")
-        .withColumnRenamed("vec_id", "fact_id")
-        .join(db.facts, "fact_id")
-        .select(col("user_query_id").as("query_id"), col("fact_id"),
-          col("fact_text"), col("cos"), col("rk"))
-        .orderBy("query_id", "rk")
-    }
-  }
-
-  /** [[closestFactsBatch]] at the COMPRESSED rung — the unfiltered
-    * batch retrieval that holds at 10⁹+ facts: annIvfPqBatch over a
-    * [[buildFactIndexPq]] artifact streams ~M ints + a norm per
-    * probed fact instead of the float embedding, the exact re-rank
-    * touches only the pooled ids, and the same surrogate-id contract
-    * keeps user query ids from tripping the self-exclusion. At
-    * probe-all with a pool covering the corpus each query's rows
-    * equal [[closestFacts]] exactly (GraftApiSpec pins it); serving
-    * dials trade recall for scanned code bytes. */
-  def closestFactsBatchAdc(db: HippoDb, indexDir: String,
-      queries: Seq[(Long, String)], k: Int = 5,
-      nProbe: Int = graft.operators.IvfPq.Probe,
-      rerank: Int = graft.operators.Pq.Rerank): DataFrame = {
-    import spark.implicits._
-    val qdf = queries.zipWithIndex
-      .map { case ((_, text), i) =>
-        (-(i + 1).toLong, embedder.embed(text).map(_.toDouble)) }
-      .toDF("vec_id", "v")
-    val ids = queries.zipWithIndex
-      .map { case ((qid, _), i) => (-(i + 1).toLong, qid) }
-      .toDF("query_id", "user_query_id")
-    graft.store.VectorIndex.annIvfPqBatch(spark, indexDir,
-        db.factEmb.select(col("fact_id").as("vec_id"),
-          toDouble(col("embedding")).as("v")),
-        qdf, k, nProbe, rerank)
-      .join(broadcast(ids), "query_id")
-      .withColumnRenamed("vec_id", "fact_id")
-      .join(db.facts, "fact_id")
-      .select(col("user_query_id").as("query_id"), col("fact_id"),
-        col("fact_text"), col("cos"), col("rk"))
-      .orderBy("query_id", "rk")
-  }
-
-  /** [[closestFactsWithEntitiesBatch]] at the COMPRESSED rung — the
-    * batch hybrid that holds at 10⁹+ facts where even the probed
-    * cells' float vectors are too many bytes: the graph semi-join is
-    * computed once for the batch and applied INSIDE the partition-
-    * pruned CODE scan (annIvfPqBatch's candidate filter — ~M bytes
-    * per candidate fact streamed, ranking within the filtered set),
-    * the exact re-rank touches only the pooled ids. Candidate
-    * relation and the k > candidates unranked edge byte-shared with
-    * the float-rung batch form. At probe-all with a pool covering
-    * the candidates each query's rows equal
-    * [[closestFactsWithEntities]] exactly (GraftApiSpec pins it). */
-  def closestFactsWithEntitiesBatchAdc(db: HippoDb, indexDir: String,
-      queries: Seq[(Long, String)], entities: Seq[String],
-      union: Boolean = true, k: Int = 5,
-      nProbe: Int = graft.operators.IvfPq.Probe,
-      rerank: Int = graft.operators.Pq.Rerank): DataFrame = {
-    import spark.implicits._
-    val filtered = factsByEntities(db, entities, union).select("fact_id")
-    if (k > filtered.count()) {
-      val ids = queries.map(_._1).toDF("query_id")
-      broadcast(ids).crossJoin(hybridUnranked(db, filtered))
-        .withColumn("rk", lit(null).cast("int"))
-        .select("query_id", "fact_id", "fact_text", "cos", "rk")
-        .orderBy("query_id", "fact_id")
-    } else {
-      val qdf = queries.zipWithIndex
-        .map { case ((_, text), i) =>
-          (-(i + 1).toLong, embedder.embed(text).map(_.toDouble)) }
-        .toDF("vec_id", "v")
-      val ids = queries.zipWithIndex
-        .map { case ((qid, _), i) => (-(i + 1).toLong, qid) }
-        .toDF("query_id", "user_query_id")
-      graft.store.VectorIndex.annIvfPqBatch(spark, indexDir,
-          db.factEmb.select(col("fact_id").as("vec_id"),
-            toDouble(col("embedding")).as("v")),
-          qdf, k, nProbe, rerank,
-          candidates = Some(filtered.withColumnRenamed("fact_id", "vec_id")))
-        .join(broadcast(ids), "query_id")
-        .withColumnRenamed("vec_id", "fact_id")
-        .join(db.facts, "fact_id")
-        .select(col("user_query_id").as("query_id"), col("fact_id"),
-          col("fact_text"), col("cos"), col("rk"))
-        .orderBy("query_id", "rk")
-    }
-  }
-
-  /** The reference's retrieval LOOP (retrieval.py:15-78 iterates
-    * [[retrieve]] over a query file) at batch shape — the last piece
-    * of VERDICT r16 #4: ONE [[closestFactsBatch]] job serves every
-    * query's top-k, then the bounded |queries| × k result builds the
-    * same per-query context blobs retrieve emits. Returns the batch
-    * frame plus query_id → prompt. The collect is ≤ |queries| × k
-    * narrow rows — bounded by the batch contract, never the corpus. */
-  def retrieveBatch(db: HippoDb, indexDir: String,
-      queries: Seq[(Long, String)], k: Int = 10,
-      nProbe: Int = VectorQueries.IvfProbe)
-      : (DataFrame, Map[Long, String]) = {
-    val top = closestFactsBatch(db, indexDir, queries, k, nProbe)
-    val byQuery = top.select("query_id", "rk", "fact_text").collect()
-      .groupBy(_.getLong(0))
-    val prompts = queries.map { case (qid, text) =>
-      val context = byQuery.getOrElse(qid, Array.empty)
-        .sortBy(_.getInt(1))
-        .map(r => s"- ${r.getAs[String]("fact_text")}").mkString("\n")
-      qid -> s"Facts:\n$context\nQuestion: $text"
-    }.toMap
-    (top, prompts)
-  }
-
-  /** retrieval.py's loop body: top-k facts + an answer-context blob
-    * (the RAG prompt the reference would send to an LLM). */
-  def retrieve(db: HippoDb, query: String, k: Int = 10,
-      indexDir: Option[String] = None,
-      nProbe: Int = VectorQueries.IvfProbe): (DataFrame, String) = {
-    // indexDir set = the serving configuration (r11): the RAG loop's
-    // vector lookup pays the partition-pruned probe instead of the
-    // full-corpus cosine scan; at nProbe == nCells the two are
-    // row-identical (closestFactsIndexed's pinned contract).
-    val top = indexDir match {
-      case Some(d) => closestFactsIndexed(db, d, query, k, nProbe)
-        .select("fact_id", "fact_text", "cos")
-      case None => closestFacts(db, query, k)
-    }
-    val context = top.collect() // k rows only — bounded by k, not corpus
-      .map(r => s"- ${r.getAs[String]("fact_text")}").mkString("\n")
-    (top, s"Facts:\n$context\nQuestion: $query")
-  }
-
-  /** NLI-based fact comparison (annotator.py:126): does an existing
-    * fact entail the candidate? Used for dedup-on-ingest. */
-  def entails(existing: String, candidate: String): Boolean =
-    nli.entails(existing, candidate)
-
-  /** The question-answering loop over NUMBERED facts (prompts.py:86
-    * question_prompt, the hippoview QA path): top-k retrieval, facts
-    * enumerated so the model can cite them, then one LLM call.
-    * Returns (facts, prompt, model answer). */
-  def answer(db: HippoDb, question: String, k: Int = 10,
-      indexDir: Option[String] = None,
-      nProbe: Int = VectorQueries.IvfProbe): (DataFrame, String, String) = {
-    val top = indexDir match {
-      case Some(d) => closestFactsIndexed(db, d, question, k, nProbe)
-        .select("fact_id", "fact_text", "cos")
-      case None => closestFacts(db, question, k)
-    }
-    val numbered = top.collect() // k rows only — bounded by k, not corpus
-      .zipWithIndex
-      .map { case (r, i) => s"${i + 1}. ${r.getAs[String]("fact_text")}" }
-      .mkString("\n")
-    val prompt = Prompts.question(question, numbered)
-    (top, prompt, llm.invoke(prompt))
-  }
-
-  /** [[answer]] at batch shape — the QA loop's missing batch twin
-    * (r17): ONE [[closestFactsBatch]] job retrieves every question's
-    * top-k (partition-pruned, never |queries| driver round-trips),
-    * then the bounded |queries| × k collect builds the same NUMBERED
-    * per-question prompt [[answer]] sends (Prompts.question — facts
-    * enumerated so the model can cite them) and the LLM is invoked
-    * once per question (the unavoidable per-call surface; everything
-    * retrieval-shaped is batched). Returns the batch frame plus
-    * question_id → (prompt, model answer). With probes covering the
-    * model each question's prompt equals the single-query
-    * [[answer]]'s verbatim (GraftApiSpec pins parity). */
-  def answerBatch(db: HippoDb, indexDir: String,
-      questions: Seq[(Long, String)], k: Int = 10,
-      nProbe: Int = VectorQueries.IvfProbe)
-      : (DataFrame, Map[Long, (String, String)]) = {
-    val top = closestFactsBatch(db, indexDir, questions, k, nProbe)
-    val byQuery = top.select("query_id", "rk", "fact_text").collect()
-      .groupBy(_.getLong(0))
-    val out = questions.map { case (qid, text) =>
-      val numbered = byQuery.getOrElse(qid, Array.empty)
-        .sortBy(_.getInt(1))
-        .zipWithIndex
-        .map { case (r, i) => s"${i + 1}. ${r.getAs[String]("fact_text")}" }
-        .mkString("\n")
-      val prompt = Prompts.question(text, numbered)
-      qid -> (prompt, llm.invoke(prompt))
-    }.toMap
-    (top, out)
-  }
+  /** The fact embeddings as an index's (vec_id, v) rows. */
+  private def vectors(db: HippoDb): DataFrame =
+    db.factEmb.select(col("fact_id").as("vec_id"), toDouble(col("embedding")).as("v"))
 }
 
 object Graft {
+  /** Where a retrieval's vector half runs: the brute scan of the fact
+    * embeddings, or a persisted index rung (the batch dials reprobeMax
+    * and coarseProbe are read by the batch path only). */
+  private sealed trait Rung
+  private case object Scan extends Rung
+  private final case class Ivf(dir: String, nProbe: Int, reprobeMax: Int = 0,
+      coarseProbe: Int = ExtendedQueries.E01cCoarseProbe) extends Rung
+  private final case class Bounded(dir: String, initialProbe: Int) extends Rung
+  private final case class Adc(dir: String, nProbe: Int, rerank: Int) extends Rung
+
+  private def rung(indexDir: Option[String], nProbe: Int): Rung =
+    indexDir.fold[Rung](Scan)(Ivf(_, nProbe))
+
+  /** What a single query ranks and returns: the cos-ordered top-k
+    * (narrowed to fact_id, fact_text, cos, or every fact column), the
+    * cosine ball, the MMR re-rank of a pool, or the PPR-boosted
+    * re-rank of a pool. */
+  private sealed trait Shape
+  private final case class TopK(narrow: Boolean) extends Shape
+  private final case class Ball(tau: Double) extends Shape
+  private final case class Diverse(pool: Int) extends Shape
+  private final case class GraphBoost(entities: Seq[String], pool: Int,
+      lambda: Double, mu: Double) extends Shape
+
   /** Per-block survivor cap for dedup-on-ingest (bounds a prefix
     * block's NLI comparisons at |block| × this). */
   val MaxBlockSurvivors = 1024

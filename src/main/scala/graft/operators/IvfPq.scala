@@ -178,9 +178,9 @@ object IvfPq {
     val bcTab = spark.sparkContext.broadcast(tab)
     val bcOff = spark.sparkContext.broadcast(cellOff)
     val probed0 = enc.filter(col("cluster").isin(probeCells.toIndexedSeq: _*))
-    // The hybrid filter (annIvfPqFiltered): the bounded candidate id
-    // relation broadcasts into a semi-join against the
-    // partition-pruned sliver BEFORE any typed ADC work — the
+    // The hybrid filter (VectorIndex.annIvfPq's `candidates`): the
+    // bounded candidate id relation broadcasts into a semi-join against
+    // the partition-pruned sliver BEFORE any typed ADC work — the
     // storage.py:304-337 filter-inside-the-index shape at the
     // compressed rung.
     val probed = candidates.foldLeft(probed0)((df, c) =>

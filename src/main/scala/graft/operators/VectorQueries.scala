@@ -159,7 +159,7 @@ object VectorQueries {
     * INSIDE the Chroma index, never as a corpus scan): v03/v04's
     * graph half (shared hybridMatching) broadcasts into a semi-join
     * against the IVF artifact's partition-pruned probe sliver
-    * (VectorIndex.annIvfFiltered), so at 100 TB a hybrid query reads
+    * (VectorIndex.annIvf's candidates), so at 100 TB a hybrid query reads
     * ~nProbe/nCells of the corpus where the brute form pays the full
     * cosine pass. The entry builds the artifact per call (the oracle
     * anchor's one-shot convention, v07/v09 precedent); a serving
@@ -190,8 +190,8 @@ object VectorQueries {
     })
     val qv = emb(spark, dir).filter(col("vec_id") === 0)
       .select("v").head().getSeq[Double](0).toArray
-    graft.store.VectorIndex.annIvfFiltered(spark, idx, qv, 5, nProbe,
-        hybridMatching(spark, dir, intersect).withColumnRenamed("fact_id", "vec_id"))
+    graft.store.VectorIndex.annIvf(spark, idx, qv, 5, nProbe, candidates =
+        Some(hybridMatching(spark, dir, intersect).withColumnRenamed("fact_id", "vec_id")))
       .withColumnRenamed("vec_id", "fact_id")
   }
 

@@ -586,7 +586,7 @@ object VectorIndex {
     * premium. The ARTIFACT IS BYTE-COMPATIBLE with [[buildIvf]]'s
     * (ivf_vectors partitioned by flat cell id + flat ivf_centroids),
     * so every serving path — [[probedScan]]'s partition-pruned probe,
-    * [[annIvfFiltered]], tombstones, compaction — is inherited
+    * [[annIvf]]'s candidate filter, tombstones, compaction — is inherited
     * unchanged; the coarse model is additionally persisted at
     * ivf_coarse/ for diagnostics and future coarse-first probing.
     * TwoLevelSpec pins the drop-in contract (all-probe == brute
@@ -838,16 +838,34 @@ object VectorIndex {
     * centroids, so the ONLY index read is the `cluster IN (...)`
     * partition-pruned scan (non-probed cells never open a file).
     * `excludeVecId` drops a known corpus row (self-match). Same
-    * output contract as VectorQueries.annIvf. */
+    * output contract as VectorQueries.annIvf.
+    *
+    * `candidates` (a vec_id relation) is hybrid retrieval's vector
+    * half through the persisted index (storage.py:304-337 runs its
+    * `where`-filtered lookup INSIDE the Chroma index): the bounded id
+    * relation broadcasts into a semi-join against the probe sliver
+    * before scoring, so ranking happens within the candidates and an
+    * entity-filtered query reads ~nProbe/nCells of the corpus. At
+    * nProbe == nCells the result equals the brute filtered scan
+    * exactly. */
   def annIvf(spark: SparkSession, dir: String, queryVec: Array[Double],
-      k: Int, nProbe: Int, excludeVecId: Option[Long]): DataFrame = {
-    val probed = probedScan(spark, dir, queryVec, nProbe)
+      k: Int, nProbe: Int, excludeVecId: Option[Long] = None,
+      candidates: Option[DataFrame] = None): DataFrame = {
     val qCol = array(queryVec.toIndexedSeq.map(lit): _*)
-    excludeVecId.foldLeft(probed)((df, id) => df.filter(col("vec_id") =!= id))
+    excluded(within(probedScan(spark, dir, queryVec, nProbe), candidates), excludeVecId)
       .select(col("vec_id"), cosineNative6(col("v"), qCol).as("cos"))
       .orderBy(col("cos").desc, col("vec_id"))
       .limit(k)
   }
+
+  /** `scan` semi-joined to the broadcast candidate ids, when given. */
+  private def within(scan: DataFrame, candidates: Option[DataFrame]): DataFrame =
+    candidates.foldLeft(scan)((df, c) =>
+      df.join(broadcast(c.select("vec_id")), Seq("vec_id"), "left_semi"))
+
+  /** `scan` without the self-match row, when given. */
+  private def excluded(scan: DataFrame, excludeVecId: Option[Long]): DataFrame =
+    excludeVecId.foldLeft(scan)((df, id) => df.filter(col("vec_id") =!= id))
 
   /** The nProbe nearest cells by centroid distance — driver-side
     * arithmetic over the tiny loaded model, shared by every probe
@@ -873,27 +891,6 @@ object VectorIndex {
         .filter(col("cluster").isin(nearestCells(centroids, queryVec, nProbe): _*)))
   }
 
-  /** FILTERED probe — hybrid retrieval's vector half through the
-    * persisted index (storage.py:304-337 runs its `where`-filtered
-    * lookup INSIDE the Chroma index; this is that architecture on
-    * the IVF artifact): the bounded candidate id relation broadcasts
-    * into a semi-join against the partition-pruned probe sliver, so
-    * an entity-filtered query reads ~nProbe/nCells of the corpus
-    * instead of the full-scan cosine pass the brute hybrid pays.
-    * Scoring (cosineNative6, desc + vec_id tiebreak) is byte-shared
-    * with [[annIvf]], so at nProbe == nCells the result equals the
-    * brute hybrid exactly. */
-  def annIvfFiltered(spark: SparkSession, dir: String,
-      queryVec: Array[Double], k: Int, nProbe: Int,
-      candidates: DataFrame): DataFrame = {
-    val qCol = array(queryVec.toIndexedSeq.map(lit): _*)
-    probedScan(spark, dir, queryVec, nProbe)
-      .join(broadcast(candidates.select("vec_id")), Seq("vec_id"), "left_semi")
-      .select(col("vec_id"), cosineNative6(col("v"), qCol).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id"))
-      .limit(k)
-  }
-
   /** RANGE (radius) search through the persisted IVF index — v11's
     * "whole cosine ≥ τ ball" semantics on the partition-pruned probe
     * (FAISS's range_search-on-IVF shape): only probed cells' members
@@ -905,9 +902,8 @@ object VectorIndex {
   def rangeSearch(spark: SparkSession, dir: String,
       queryVec: Array[Double], tau: Double, nProbe: Int,
       excludeVecId: Option[Long] = None): DataFrame = {
-    val probed = probedScan(spark, dir, queryVec, nProbe)
     val qCol = array(queryVec.toIndexedSeq.map(lit): _*)
-    excludeVecId.foldLeft(probed)((df, id) => df.filter(col("vec_id") =!= id))
+    excluded(probedScan(spark, dir, queryVec, nProbe), excludeVecId)
       .select(col("vec_id"), cosineNative6(col("v"), qCol).as("cos"))
       .filter(col("cos") >= tau)
       .orderBy(col("cos").desc, col("vec_id"))
@@ -990,36 +986,21 @@ object VectorIndex {
     * clustered corpus (the premise regime) the bound is tight and
     * the second scan covers few cells; on a near-random corpus the
     * bound degrades toward the full probe — never below it in
-    * recall, by construction. */
+    * recall, by construction.
+    *
+    * `candidates` applies [[annIvf]]'s hybrid filter under the same
+    * probe-until-provably-done loop. The per-cell bound is
+    * FILTER-OBLIVIOUS — an upper bound over ALL of a cell's members is
+    * in particular one over its candidate subset — so the skip rule
+    * stays sound under the semi-join and the rows equal the all-cells
+    * filtered probe exactly. A selective filter weakens the first
+    * batch's pool (smaller θk), so the loop probes MORE cells exactly
+    * when a fixed nProbe would silently lose recall. */
   def annIvfAdaptive(spark: SparkSession, dir: String,
       queryVec: Array[Double], k: Int,
       initialProbe: Int = VectorQueries.IvfProbe,
-      excludeVecId: Option[Long] = None): AdaptiveProbe =
-    adaptiveCore(spark, dir, queryVec, k, initialProbe, excludeVecId, None)
-
-  /** ADAPTIVE FILTERED probe (VERDICT r12 #5): [[annIvfFiltered]]'s
-    * hybrid semantics under [[annIvfAdaptive]]'s probe-until-
-    * provably-done loop. The per-cell bound is FILTER-OBLIVIOUS — an
-    * upper bound over ALL of a cell's members is in particular an
-    * upper bound over its candidate-filtered subset — so the same
-    * skip rule stays sound under the semi-join and the rows returned
-    * EQUAL the all-cells filtered probe exactly (AdaptiveProbeSpec
-    * pins it). The reference architecture runs the entity filter
-    * INSIDE the index (storage.py:304-337); this is that shape with
-    * the probe depth chosen by proof instead of a fixed-nProbe
-    * recall floor. A selective filter makes the FIRST batch's pool
-    * weaker (fewer candidates → smaller θk), so the adaptive form
-    * probes MORE cells exactly when the fixed dial would silently
-    * lose recall — and still skips every cell the bound excludes. */
-  def annIvfFilteredAdaptive(spark: SparkSession, dir: String,
-      queryVec: Array[Double], k: Int, candidates: DataFrame,
-      initialProbe: Int = VectorQueries.IvfProbe): AdaptiveProbe =
-    adaptiveCore(spark, dir, queryVec, k, initialProbe, None, Some(candidates))
-
-  private def adaptiveCore(spark: SparkSession, dir: String,
-      queryVec: Array[Double], k: Int, initialProbe: Int,
-      excludeVecId: Option[Long],
-      candidates: Option[DataFrame]): AdaptiveProbe = {
+      excludeVecId: Option[Long] = None,
+      candidates: Option[DataFrame] = None): AdaptiveProbe = {
     val centroids = loadIvfCentroids(spark, dir)
     val boundsPath = new org.apache.hadoop.fs.Path(s"$dir/ivf_cellbounds")
     val fs = boundsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1044,15 +1025,11 @@ object VectorIndex {
       case None => 1.0 // cell without bound info must be probed
     }
     val qCol = array(queryVec.toIndexedSeq.map(lit): _*)
-    def scoreCells(cells: Seq[Int]): DataFrame = {
-      val scan0 = minusTombstones(spark, dir,
+    def scoreCells(cells: Seq[Int]): DataFrame =
+      excluded(within(minusTombstones(spark, dir,
         spark.read.parquet(s"$dir/ivf_vectors")
-          .filter(col("cluster").isin(cells: _*)))
-      val scan = candidates.foldLeft(scan0)((df, c) =>
-        df.join(broadcast(c.select("vec_id")), Seq("vec_id"), "left_semi"))
-      excludeVecId.foldLeft(scan)((df, id) => df.filter(col("vec_id") =!= id))
+          .filter(col("cluster").isin(cells: _*))), candidates), excludeVecId)
         .select(col("vec_id"), cosineNative6(col("v"), qCol).as("cos"))
-    }
     val batch1 =
       nearestCells(centroids, queryVec, math.min(initialProbe, centroids.length))
     val pool = scoreCells(batch1)
@@ -1153,7 +1130,7 @@ object VectorIndex {
       coarseProbe: Int = graft.operators.ExtendedQueries.E01cCoarseProbe,
       // optional CANDIDATE filter (a vec_id relation): scans semi-join
       // it BEFORE scoring, so ranking happens within the candidate
-      // set — the batch twin of annIvfFiltered's contract (the
+      // set — the batch twin of annIvf's `candidates` contract (the
       // entity-filtered hybrid composes through this). The adaptive
       // top-up stays sound: per-cell bounds upper-bound every member,
       // hence every candidate subset.
@@ -1255,7 +1232,7 @@ object VectorIndex {
     * query vectors on hand (or look them up against an embeddings
     * side table) and call the vector form above. */
   def annIvf(spark: SparkSession, dir: String, queryVecId: Long, k: Int,
-      nProbe: Int = VectorQueries.IvfProbe): DataFrame = {
+      nProbe: Int): DataFrame = {
     // A tombstoned (deleted) query id must not resolve: the lookup
     // goes through the same filter as every serving scan. Fail with
     // a descriptive error, not head()'s bare NoSuchElementException.
@@ -1344,11 +1321,6 @@ object VectorIndex {
     } finally cached.unpersist()
   }
 
-  /** Query the PERSISTED IVFADC index by VECTOR — the serving form:
-    * probe cells chosen driver-side against the loaded coarse
-    * centroids, scoring is the shared IvfPq.adcCellTopK kernel, so
-    * the only index read is the partition-pruned code scan. `emb` is
-    * touched solely for the exact re-rank of the bounded pool. */
   /** The frozen driver-side models (residual codebooks, coarse
     * centroids) back from their flat rows — KBs either way. */
   def loadIvfPqModels(spark: SparkSession, dir: String)
@@ -1356,33 +1328,27 @@ object VectorIndex {
     (loadCodebookAt(spark, s"$dir/ivfpq_codebook"),
       loadCentroidsAt(spark, s"$dir/ivfpq_centroids"))
 
+  /** Query the PERSISTED IVFADC index by VECTOR — the serving form:
+    * probe cells chosen driver-side against the loaded coarse
+    * centroids, scoring is the shared IvfPq.adcCellTopK kernel, so
+    * the only index read is the partition-pruned code scan. `emb` is
+    * touched solely for the exact re-rank of the bounded pool.
+    * `candidates` is [[annIvf]]'s hybrid filter at the COMPRESSED
+    * rung, the form that holds at 10⁹+ vectors: the candidate ids
+    * semi-join the partition-pruned CODE scan before ADC scoring, and
+    * the exact re-rank touches only the filtered pool. At nProbe ==
+    * nCells and a pool covering the candidates the ranking equals the
+    * brute filtered cosine scan exactly (HippoDbSpec pins it). */
   def annIvfPq(spark: SparkSession, dir: String, emb: DataFrame,
       queryVec: Array[Double], k: Int, nProbe: Int = IvfPq.Probe,
       excludeVecId: Option[Long] = None,
-      rerank: Int = Pq.Rerank): DataFrame = {
+      rerank: Int = Pq.Rerank,
+      candidates: Option[DataFrame] = None): DataFrame = {
     val (cb, centroids) = loadIvfPqModels(spark, dir)
     val enc = minusTombstones(spark, dir, spark.read.parquet(s"$dir/ivfpq_codes"))
     IvfPq.adcCellTopK(spark, enc, cb, centroids,
       emb.select(col("vec_id"), col("v")), queryVec, excludeVecId, k,
-      nProbe, rerank)
-  }
-
-  /** FILTERED IVFADC probe — [[annIvfFiltered]]'s twin at the
-    * COMPRESSED rung, the form that holds at 10⁹+ vectors where even
-    * the probed cells' float vectors are too many bytes: the bounded
-    * candidate ids semi-join the partition-pruned CODE scan (M ints
-    * + one double per vector) before ADC scoring; the exact re-rank
-    * touches only the filtered pool. At nProbe == nCells and a pool
-    * covering the candidates the ranking equals the brute filtered
-    * cosine scan exactly (HippoDbSpec pins it). */
-  def annIvfPqFiltered(spark: SparkSession, dir: String, emb: DataFrame,
-      queryVec: Array[Double], k: Int, nProbe: Int,
-      candidates: DataFrame, rerank: Int = Pq.Rerank): DataFrame = {
-    val (cb, centroids) = loadIvfPqModels(spark, dir)
-    val enc = minusTombstones(spark, dir, spark.read.parquet(s"$dir/ivfpq_codes"))
-    IvfPq.adcCellTopK(spark, enc, cb, centroids,
-      emb.select(col("vec_id"), col("v")), queryVec, None, k,
-      nProbe, rerank, Some(candidates))
+      nProbe, rerank, candidates)
   }
 
   /** BATCH k-NN at the COMPRESSED rung (r17) — [[annIvfBatch]]'s

@@ -92,10 +92,10 @@ class AdaptiveProbeSpec extends SparkSpec {
       (0 until 8).foreach { qi =>
         val qv = e.filter(col("vec_id") === qi.toLong)
           .select("v").head().getSeq[Double](0).toArray
-        val full = rows(VectorIndex.annIvfFiltered(spark, tmp, qv, 5, nCells,
-          cands))
-        val ad = VectorIndex.annIvfFilteredAdaptive(spark, tmp, qv, 5, cands,
-          initialProbe = 2)
+        val full = rows(VectorIndex.annIvf(spark, tmp, qv, 5, nCells,
+          candidates = Some(cands)))
+        val ad = VectorIndex.annIvfAdaptive(spark, tmp, qv, 5,
+          initialProbe = 2, candidates = Some(cands))
         assert(rows(ad.result) == full,
           s"filtered adaptive diverged from the all-cells filtered probe for query $qi")
         probed += ad.probedCells.size
@@ -106,8 +106,8 @@ class AdaptiveProbeSpec extends SparkSpec {
       // partition pruning survives the candidate semi-join
       val qv0 = e.filter(col("vec_id") === 0L)
         .select("v").head().getSeq[Double](0).toArray
-      val plan = VectorIndex.annIvfFilteredAdaptive(spark, tmp, qv0, 5, cands,
-          initialProbe = 2)
+      val plan = VectorIndex.annIvfAdaptive(spark, tmp, qv0, 5,
+          initialProbe = 2, candidates = Some(cands))
         .result.queryExecution.explainString(
           org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
       assert(plan.contains("PartitionFilters: [cluster"),

@@ -148,9 +148,10 @@ class DeleteSpec extends SparkSpec {
         "sq" -> ids(VectorIndex.annSq(spark, tmp, e, 3L, 5, rerank = 60)),
         "bq" -> ids(VectorIndex.annBq(spark, tmp, e, 3L, 5, rerank = 60)),
         "ivf" -> ids(VectorIndex.annIvf(spark, tmp, qv, 5, 4, Some(3L))),
-        "ivf_filtered" -> ids(VectorIndex.annIvfFiltered(spark, tmp, qv, 5, 4, cands)),
+        "ivf_filtered" -> ids(VectorIndex.annIvf(spark, tmp, qv, 5, 4, candidates = Some(cands))),
         "ivfpq" -> ids(VectorIndex.annIvfPq(spark, tmp, e, qv, 5, 4, Some(3L), rerank = 60)),
-        "ivfpq_filtered" -> ids(VectorIndex.annIvfPqFiltered(spark, tmp, e, qv, 5, 4, cands, rerank = 60)))
+        "ivfpq_filtered" -> ids(VectorIndex.annIvfPq(spark, tmp, e, qv, 5, 4,
+          rerank = 60, candidates = Some(cands))))
 
       // pre-delete: the exact copy ranks on every rung
       allPaths().foreach { case (path, got) =>
@@ -359,12 +360,12 @@ class DeleteSpec extends SparkSpec {
     try {
       VectorIndex.buildIvf(spark, e, tmp, nCells = 4)
       val ex = intercept[IllegalArgumentException] {
-        VectorIndex.annIvf(spark, tmp, queryVecId = 9999L, k = 5)
+        VectorIndex.annIvf(spark, tmp, queryVecId = 9999L, k = 5, nProbe = 4)
       }
       assert(ex.getMessage.contains("9999"), s"opaque error: ${ex.getMessage}")
       VectorIndex.tombstone(spark, tmp, Seq(3L).toDF("vec_id"))
       val ex2 = intercept[IllegalArgumentException] {
-        VectorIndex.annIvf(spark, tmp, queryVecId = 3L, k = 5)
+        VectorIndex.annIvf(spark, tmp, queryVecId = 3L, k = 5, nProbe = 4)
       }
       assert(ex2.getMessage.contains("deleted"), s"opaque error: ${ex2.getMessage}")
     } finally e.unpersist()

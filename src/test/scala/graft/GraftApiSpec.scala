@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+
 import graft.api.Graft
 import graft.sources.Tables
 
@@ -144,106 +146,146 @@ class GraftApiSpec extends SparkSpec {
     assert(resolved.edges.select("entity").distinct().count() == ents.size)
   }
 
+  // ---------------------------------------------- probe-all parity table
+
+  private val parityQuery = "spark window join"
+  // user query ids DELIBERATELY collide with live fact ids — the batch
+  // facades' surrogate-id contract: a collision must never trigger the
+  // index's self-exclusion and silently drop that fact
+  private val parityBatch = Seq(0L -> "spark window join", 2L -> "query", 1L -> "stream state")
+  private val parityFilters = Seq((Seq("window"), true), (Seq("window"), false),
+    (Seq("window", "spark"), false))
+
+  /** The indexes the parity table serves from, built once, 8 cells
+    * each: flat IVF (with cell bounds, for the adaptive rungs),
+    * two-level IVF (byte-compatible artifact; no bounds) and IVFADC. */
+  private lazy val parityIdx: Map[String, String] = {
+    def dir(name: String) = java.nio.file.Files.createTempDirectory(name).toString
+    val idx = Map("ivf" -> dir("api_ivf"), "ivf2" -> dir("api_ivf2"), "adc" -> dir("api_adc"))
+    api.buildFactIndex(db, idx("ivf"), nCells = 8)
+    graft.store.VectorIndex.buildCellBounds(spark, idx("ivf"))
+    api.buildFactIndex(db, idx("ivf2"), nCells = 8, twoLevel = true)
+    api.buildFactIndexPq(db, idx("adc"), nCells = 8)
+    idx
+  }
+
+  private def rowsOf(df: DataFrame, cols: Seq[String] = Seq("fact_id", "fact_text", "cos")) =
+    df.select(cols.map(org.apache.spark.sql.functions.col): _*).collect().map(_.toSeq).toSeq
+
+  /** A batch frame's (query_id, fact_id, fact_text, cos) rows in query
+    * order, then rank. */
+  private def perQuery(df: DataFrame): Seq[Seq[Any]] = {
+    val byQuery = df.collect().groupBy(_.getAs[Long]("query_id"))
+    parityBatch.flatMap { case (qid, _) =>
+      byQuery.getOrElse(qid, Array.empty).sortBy(_.getAs[Int]("rk"))
+        .map(r => Seq(qid, r.getAs[Long]("fact_id"), r.getAs[String]("fact_text"),
+          r.getAs[Double]("cos")))
+    }
+  }
+
+  /** One probe-all parity row: a facade call through `index` with
+    * probes covering every cell, and the brute call it must equal. */
+  private case class Parity(form: String, index: String, filter: Option[(Seq[String], Boolean)],
+      served: () => Seq[Seq[Any]], brute: () => Seq[Seq[Any]])
+
+  /** form × index × filter, through the folded signatures. */
+  private lazy val parityTable: Seq[Parity] = {
+    val q = parityQuery
+    val ix = parityIdx
+    val all2 = graft.store.VectorIndex.loadIvfCentroids(spark, ix("ivf2")).length
+    val topK = Seq(
+      Parity("top-k", "ivf", None,
+        () => rowsOf(api.closestFactsIndexed(db, ix("ivf"), q, 5, 8)),
+        () => rowsOf(api.closestFacts(db, q, 5))),
+      Parity("top-k", "ivf2", None,
+        () => rowsOf(api.closestFactsIndexed(db, ix("ivf2"), q, 5, all2)),
+        () => rowsOf(api.closestFacts(db, q, 5))),
+      Parity("top-k", "adaptive", None,
+        () => rowsOf(api.closestFactsAdaptive(db, ix("ivf"), q, 5, initialProbe = 2)),
+        () => rowsOf(api.closestFacts(db, q, 5))))
+    val hybrid = for ((ents, union) <- parityFilters;
+        index <- Seq("ivf", "ivf2", "adaptive", "adc")) yield {
+      val n = api.factsByEntities(db, ents, union).count().toInt
+      val k = math.min(3, n) // stay on the RANKED branch
+      Parity("top-k", index, Some((ents, union)), () => rowsOf(index match {
+        case "ivf" => api.closestFactsWithEntities(db, q, ents, union, k, Some(ix("ivf")), 8)
+        case "ivf2" => api.closestFactsWithEntities(db, q, ents, union, k, Some(ix("ivf2")), all2)
+        case "adaptive" =>
+          api.closestFactsWithEntitiesAdaptive(db, ix("ivf"), q, ents, union, k, initialProbe = 2)
+        case "adc" => api.closestFactsWithEntitiesIndexedAdc(db, ix("adc"), q, ents, union, k,
+          nProbe = 8, rerank = n + 8)
+      }), () => rowsOf(api.closestFactsWithEntities(db, q, ents, union, k)))
+    }
+    val mmrCols = Seq("rk", "fact_id", "fact_text", "rel", "mmr_score")
+    val graphCols = Seq("fact_id", "fact_text", "cos", "boost", "score")
+    val pools = for ((index, probes) <- Seq("ivf" -> 8, "ivf2" -> all2)) yield Seq(
+      Parity("range", index, None,
+        () => rowsOf(api.closestFactsRange(db, q, tau = 0.2, Some(ix(index)), probes)),
+        () => rowsOf(api.closestFactsRange(db, q, tau = 0.2))),
+      Parity("diverse", index, None,
+        () => rowsOf(api.closestFactsDiverse(db, q, k = 4,
+          indexDir = Some(ix(index)), nProbe = probes), mmrCols),
+        () => rowsOf(api.closestFactsDiverse(db, q, k = 4), mmrCols)),
+      Parity("graph-ranked", index, None,
+        () => rowsOf(api.closestFactsGraphRanked(db, q, Seq("window"), k = 4,
+          indexDir = Some(ix(index)), nProbe = probes), graphCols),
+        () => rowsOf(api.closestFactsGraphRanked(db, q, Seq("window"), k = 4), graphCols)))
+    val nFacts = db.facts.count().toInt
+    val batch = for (f <- None +: parityFilters.map(Some(_));
+        index <- Seq("ivf", "ivf2", "adc")) yield {
+      val k = f.fold(5) { case (ents, union) =>
+        math.min(3, api.factsByEntities(db, ents, union).count().toInt) }
+      val all = Int.MaxValue
+      Parity("batch", index, f, () => perQuery((index, f) match {
+        case ("adc", None) =>
+          api.closestFactsBatchAdc(db, ix("adc"), parityBatch, k, all, rerank = nFacts + 8)
+        case ("adc", Some((ents, union))) => api.closestFactsWithEntitiesBatchAdc(db, ix("adc"),
+          parityBatch, ents, union, k, all, rerank = nFacts + 8)
+        case (_, None) => api.closestFactsBatch(db, ix(index), parityBatch, k, all, coarseProbe = all)
+        case (_, Some((ents, union))) => api.closestFactsWithEntitiesBatch(db, ix(index),
+          parityBatch, ents, union, k, all, coarseProbe = all)
+      }), () => parityBatch.flatMap { case (qid, text) =>
+        rowsOf(f.fold(api.closestFacts(db, text, k)) { case (ents, union) =>
+          api.closestFactsWithEntities(db, text, ents, union, k) }).map(qid +: _)
+      })
+    }
+    topK ++ hybrid ++ pools.flatten ++ batch
+  }
+
+  /** Runs the parity rows `pick` selects; each must be non-empty and
+    * equal its brute form row for row. */
+  private def assertParity(pick: Parity => Boolean): Unit = {
+    val rows = parityTable.filter(pick)
+    assert(rows.nonEmpty)
+    rows.foreach { p =>
+      val (served, brute) = (p.served(), p.brute())
+      assert(served.nonEmpty && served == brute,
+        s"${p.form} via ${p.index}, filter ${p.filter}: $served vs brute $brute")
+    }
+  }
+
   test("indexed retrieval: all-probe equals brute closestFacts; partial probe stays ranked") {
-    import org.apache.spark.sql.functions.col
-    val idx = java.nio.file.Files.createTempDirectory("api_ivf").toString
-    api.buildFactIndex(db, idx, nCells = 8)
-    val brute = api.closestFacts(db, "spark window join", k = 5)
-      .select("fact_id", "cos").collect()
-      .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val served = api.closestFactsIndexed(db, idx, "spark window join", k = 5, nProbe = 8)
-      .select("fact_id", "cos").collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(served == brute, s"all-probe serving must equal brute: $served vs $brute")
+    assertParity(p => Set("top-k", "range")(p.form) && p.filter.isEmpty)
+    // the RADIUS form's ball is the cosine superlevel set
+    val ball = api.closestFactsRange(db, parityQuery, tau = 0.2).collect()
+    assert(ball.nonEmpty && ball.forall(_.getAs[Double]("cos") >= 0.2))
     // partial probe: still k rows, ranked, carrying fact payloads
-    val partial = api.closestFactsIndexed(db, idx, "spark window join", k = 5, nProbe = 2)
+    val partial = api.closestFactsIndexed(db, parityIdx("ivf"), parityQuery, k = 5, nProbe = 2)
       .collect()
     assert(partial.length == 5)
     val scores = partial.map(_.getAs[Double]("cos"))
     assert(scores.sameElements(scores.sorted.reverse))
     assert(partial.forall(r => r.getAs[String]("fact_text") != null))
-    // the ADAPTIVE probe facade: bound-pruned serving must equal the
-    // all-cells rows exactly (its contract), and fail fast while the
-    // bounds artifact is absent
+    // the ADAPTIVE probe fails fast while the bounds artifact is absent
     intercept[IllegalStateException] {
-      api.closestFactsAdaptive(db, idx, "spark window join", k = 5).collect()
+      api.closestFactsAdaptive(db, parityIdx("ivf2"), parityQuery, k = 5).collect()
     }
-    graft.store.VectorIndex.buildCellBounds(spark, idx)
-    val adaptive = api.closestFactsAdaptive(db, idx, "spark window join",
-        k = 5, initialProbe = 2)
-      .select("fact_id", "cos").collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(adaptive == brute, s"adaptive serving must equal brute: $adaptive vs $brute")
-    // twoLevel build: byte-compatible artifact — the same all-probe
-    // equality holds through the hierarchical quantizer's index
-    val idx2 = java.nio.file.Files.createTempDirectory("api_ivf2").toString
-    api.buildFactIndex(db, idx2, nCells = 8, twoLevel = true)
-    val served2 = api.closestFactsIndexed(db, idx2, "spark window join", k = 5,
-        nProbe = graft.store.VectorIndex.loadIvfCentroids(spark, idx2).length)
-      .select("fact_id", "cos").collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(served2 == brute, s"two-level all-probe must equal brute: $served2 vs $brute")
-    // the RADIUS form: scan and all-probe indexed agree row-for-row,
-    // and the ball is the cosine superlevel set of the scan ranking
-    def rangeRows(df: org.apache.spark.sql.DataFrame) =
-      df.select("fact_id", "cos").collect()
-        .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val ballScan = rangeRows(api.closestFactsRange(db, "spark window join", tau = 0.2))
-    assert(ballScan.nonEmpty && ballScan.forall(_._2 >= 0.2))
-    val ballIdx = rangeRows(api.closestFactsRangeIndexed(db, idx, "spark window join",
-      tau = 0.2, nProbe = 8))
-    assert(ballIdx == ballScan,
-      s"all-probe indexed ball must equal the scan ball: $ballIdx vs $ballScan")
   }
 
   test("batch retrieval facade: per-query rows equal brute closestFacts / brute hybrid exactly at all-probe (r17, VERDICT r16 #4)") {
-    val idx = java.nio.file.Files.createTempDirectory("api_batch_ivf").toString
-    api.buildFactIndex(db, idx, nCells = 8)
-    // user query ids DELIBERATELY collide with live fact ids — the
-    // facade's surrogate-id contract: a collision must never trigger
-    // annIvfBatch's self-exclusion and silently drop that fact
-    val qs = Seq(0L -> "spark window join", 2L -> "query", 1L -> "stream state")
-    val batch = api.closestFactsBatch(db, idx, qs, k = 5,
-        nProbe = Int.MaxValue, coarseProbe = Int.MaxValue)
-      .collect().groupBy(_.getLong(0))
-    qs.foreach { case (qid, text) =>
-      val brute = api.closestFacts(db, text, k = 5)
-        .select("fact_id", "fact_text", "cos").collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSeq
-      val got = batch(qid).sortBy(_.getInt(4))
-        .map(r => (r.getLong(1), r.getString(2), r.getDouble(3))).toSeq
-      assert(got == brute,
-        s"batch must equal per-query brute closestFacts for '$text': $got vs $brute")
-    }
-    // the TWO-LEVEL artifact serves the same contract (coarse-first
-    // probe through the persisted children index)
-    val idx2 = java.nio.file.Files.createTempDirectory("api_batch_ivf2").toString
-    api.buildFactIndex(db, idx2, nCells = 8, twoLevel = true)
-    val batch2 = api.closestFactsBatch(db, idx2, qs, k = 5,
-        nProbe = Int.MaxValue, coarseProbe = Int.MaxValue)
-      .collect().groupBy(_.getLong(0))
-    qs.foreach { case (qid, text) =>
-      val brute = api.closestFacts(db, text, k = 5)
-        .select("fact_id", "cos").collect()
-        .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      val got = batch2(qid).sortBy(_.getInt(4))
-        .map(r => (r.getLong(1), r.getDouble(3))).toSeq
-      assert(got == brute, s"two-level batch facade must equal brute for '$text'")
-    }
-    // entity-filtered twin, both union modes — candidate filtering
-    // happens INSIDE the scan, so ranking matches the brute hybrid
-    for (union <- Seq(true, false)) {
-      val hybrid = api.closestFactsWithEntitiesBatch(db, idx, qs,
-          Seq("window"), union, k = 3,
-          nProbe = Int.MaxValue, coarseProbe = Int.MaxValue)
-        .collect().groupBy(_.getLong(0))
-      qs.foreach { case (qid, text) =>
-        val brute = api.closestFactsWithEntities(db, text, Seq("window"), union, k = 3)
-          .select("fact_id", "cos").collect()
-          .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-        val got = hybrid(qid).sortBy(_.getInt(4))
-          .map(r => (r.getLong(1), r.getDouble(3))).toSeq
-        assert(got == brute,
-          s"entity-filtered batch (union=$union) must equal brute hybrid for '$text'")
-      }
-    }
+    assertParity(p => p.form == "batch" && p.index != "adc")
+    val idx = parityIdx("ivf")
+    val qs = parityBatch
     // retrieveBatch: the reference's retrieval loop at batch shape —
     // each query's prompt must equal the per-query retrieve's prompt
     val (_, prompts) = api.retrieveBatch(db, idx, qs, k = 5, nProbe = 8)
@@ -264,54 +306,19 @@ class GraftApiSpec extends SparkSpec {
   }
 
   test("compressed-rung batch hybrid == brute hybrid at probe-all + covering pool; answerBatch == per-query answer (r17)") {
-    val idxPq = java.nio.file.Files.createTempDirectory("api_batch_adc").toString
-    api.buildFactIndexPq(db, idxPq, nCells = 4)
-    // colliding user ids again — the surrogate-id contract is shared
-    val qs = Seq(0L -> "spark window join", 2L -> "query", 1L -> "stream state")
-    val nFacts = db.facts.count().toInt
-    for (union <- Seq(true, false)) {
-      val hybrid = api.closestFactsWithEntitiesBatchAdc(db, idxPq, qs,
-          Seq("window"), union, k = 3,
-          nProbe = Int.MaxValue, rerank = nFacts + 8)
-        .collect().groupBy(_.getLong(0))
-      qs.foreach { case (qid, text) =>
-        val brute = api.closestFactsWithEntities(db, text, Seq("window"),
-            union, k = 3)
-          .select("fact_id", "cos").collect()
-          .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-        val got = hybrid(qid).sortBy(_.getInt(4))
-          .map(r => (r.getLong(1), r.getDouble(3))).toSeq
-        assert(got == brute,
-          s"ADC batch hybrid (union=$union) must equal brute hybrid for '$text': $got vs $brute")
-      }
-    }
-    // the UNFILTERED coded batch: per-query rows equal brute
-    // closestFacts at probe-all + covering pool (the surrogate-id
-    // contract shared — colliding user ids never drop a fact)
-    val plain = api.closestFactsBatchAdc(db, idxPq, qs, k = 5,
-        nProbe = Int.MaxValue, rerank = nFacts + 8)
-      .collect().groupBy(_.getLong(0))
-    qs.foreach { case (qid, text) =>
-      val brute = api.closestFacts(db, text, k = 5)
-        .select("fact_id", "cos").collect()
-        .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      val got = plain(qid).sortBy(_.getInt(4))
-        .map(r => (r.getLong(1), r.getDouble(3))).toSeq
-      assert(got == brute,
-        s"coded batch retrieval must equal brute closestFacts for '$text': $got vs $brute")
-    }
-    // the k > candidates unranked edge is byte-shared with the float
-    // form — pin the branch fires at the compressed rung too
+    assertParity(p => p.form == "batch" && p.index == "adc")
+    val qs = parityBatch
+    // the k > candidates unranked edge is shared with the float form —
+    // pin the branch fires at the compressed rung too
     val nCand = api.factsByEntities(db, Seq("window"), union = true).count()
-    val unranked = api.closestFactsWithEntitiesBatchAdc(db, idxPq, qs,
+    val unranked = api.closestFactsWithEntitiesBatchAdc(db, parityIdx("adc"), qs,
       Seq("window"), union = true, k = nCand.toInt + 1).collect()
     assert(unranked.length == qs.size * nCand &&
       unranked.forall(r => r.isNullAt(3) && r.isNullAt(4)),
       "compressed-rung unranked fallback must emit every candidate per query")
     // answerBatch: the QA loop's batch twin — prompt AND stub-LLM
     // answer equal the single-query answer's at matching dials
-    val idx = java.nio.file.Files.createTempDirectory("api_answer_ivf").toString
-    api.buildFactIndex(db, idx, nCells = 8)
+    val idx = parityIdx("ivf")
     val (_, answers) = api.answerBatch(db, idx, qs, k = 5, nProbe = 8)
     qs.foreach { case (qid, text) =>
       val (_, singlePrompt, singleAnswer) =
@@ -324,77 +331,31 @@ class GraftApiSpec extends SparkSpec {
   }
 
   test("indexed hybrid facade: all-probe == brute hybrid exactly (both modes), fallback byte-shared, partial probe prunes") {
-    val idx = java.nio.file.Files.createTempDirectory("api_hybrid_ivf").toString
-    api.buildFactIndex(db, idx, nCells = 8)
-    val q = "spark window join"
-    for ((ents, union) <- Seq((Seq("window"), true), (Seq("window", "spark"), false))) {
-      val n = api.factsByEntities(db, ents, union).count().toInt
-      assert(n > 0, s"probe entities $ents must match facts")
-      val k = math.min(3, n) // stay on the RANKED branch
-      val brute = api.closestFactsWithEntities(db, q, ents, union, k)
-        .collect().map(_.toSeq).toSeq
-      val served = api.closestFactsWithEntitiesIndexed(db, idx, q, ents, union,
-        k, nProbe = 8).collect().map(_.toSeq).toSeq
-      assert(served == brute,
-        s"union=$union all-probe indexed hybrid must equal brute: $served vs $brute")
-    }
-    // ADAPTIVE hybrid: the bound-pruned filtered probe must equal
-    // the brute hybrid exactly (the cell bound is filter-oblivious),
-    // at whatever probe depth the filter's selectivity demands
-    graft.store.VectorIndex.buildCellBounds(spark, idx)
-    for ((ents, union) <- Seq((Seq("window"), true), (Seq("window", "spark"), false))) {
-      val n = api.factsByEntities(db, ents, union).count().toInt
-      val k = math.min(3, n)
-      val brute = api.closestFactsWithEntities(db, q, ents, union, k)
-        .collect().map(_.toSeq).toSeq
-      val adaptive = api.closestFactsWithEntitiesAdaptive(db, idx, q, ents,
-        union, k, initialProbe = 2).collect().map(_.toSeq).toSeq
-      assert(adaptive == brute,
-        s"union=$union adaptive hybrid must equal brute: $adaptive vs $brute")
-    }
+    assertParity(p => p.form == "top-k" && p.filter.nonEmpty)
+    val idx = parityIdx("ivf")
+    val q = parityQuery
     // small-k fallback: k > candidates returns ALL candidates
-    // unranked through the SHARED hybridUnranked branch — identical
-    // rows, vector side never touched
+    // unranked through the shared unranked branch — identical rows,
+    // vector side never touched
     val cnt = api.factsByEntities(db, Seq("window"), union = true).count().toInt
     val bruteAll = api.closestFactsWithEntities(db, q, Seq("window"),
       union = true, k = cnt + 100).collect().map(_.toSeq).toSeq
-    val servedAll = api.closestFactsWithEntitiesIndexed(db, idx, q, Seq("window"),
-      union = true, k = cnt + 100).collect().map(_.toSeq).toSeq
+    val servedAll = api.closestFactsWithEntities(db, q, Seq("window"),
+      union = true, k = cnt + 100, indexDir = Some(idx)).collect().map(_.toSeq).toSeq
     assert(servedAll == bruteAll && servedAll.length == cnt)
     assert(servedAll.forall(_(2) == null))
     // partial probe stays on the index's partition-pruned scan
-    val part = api.closestFactsWithEntitiesIndexed(db, idx, q, Seq("window"),
-      union = true, k = 1, nProbe = 2)
+    val part = api.closestFactsWithEntities(db, q, Seq("window"),
+      union = true, k = 1, indexDir = Some(idx), nProbe = 2)
     val plan = part.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("cluster"),
       s"facade hybrid probe must partition-prune:\n$plan")
-    // the COMPRESSED rung (IVFADC codes): all-probe + a pool covering
-    // the candidate slice must ALSO equal the brute hybrid exactly —
-    // the exact re-rank erases the ADC approximation on the pool
-    val idxPq = java.nio.file.Files.createTempDirectory("api_hybrid_ivfpq").toString
-    api.buildFactIndexPq(db, idxPq, nCells = 8)
-    val nCand = api.factsByEntities(db, Seq("window"), union = true).count().toInt
-    val bruteH = api.closestFactsWithEntities(db, q, Seq("window"), union = true,
-      k = math.min(3, nCand)).collect().map(_.toSeq).toSeq
-    val adcH = api.closestFactsWithEntitiesIndexedAdc(db, idxPq, q, Seq("window"),
-        union = true, k = math.min(3, nCand), nProbe = 8, rerank = nCand + 8)
-      .collect().map(_.toSeq).toSeq
-    assert(adcH == bruteH, s"ADC hybrid all-probe: $adcH vs brute $bruteH")
   }
 
   test("indexed pool cuts: diverse and graph-ranked through the index == brute at all-probe; partial probe prunes") {
-    val idx = java.nio.file.Files.createTempDirectory("api_pool_ivf").toString
-    api.buildFactIndex(db, idx, nCells = 8)
-    val q = "spark window join"
-    val bruteDiv = api.closestFactsDiverse(db, q, k = 4).collect().map(_.toSeq).toSeq
-    val idxDiv = api.closestFactsDiverseIndexed(db, idx, q, k = 4, nProbe = 8)
-      .collect().map(_.toSeq).toSeq
-    assert(idxDiv == bruteDiv, s"MMR pool via index: $idxDiv vs $bruteDiv")
-    val bruteGr = api.closestFactsGraphRanked(db, q, Seq("window"), k = 4)
-      .collect().map(_.toSeq).toSeq
-    val idxGr = api.closestFactsGraphRankedIndexed(db, idx, q, Seq("window"),
-      k = 4, nProbe = 8).collect().map(_.toSeq).toSeq
-    assert(idxGr == bruteGr, s"PPR pool via index: $idxGr vs $bruteGr")
+    assertParity(p => Set("diverse", "graph-ranked")(p.form))
+    val idx = parityIdx("ivf")
+    val q = parityQuery
     // the serving shape keeps the partition-pruned probe scan — pin
     // the sliver the facades pool from (mmrTopK materializes its
     // bounded pool eagerly, so the FINAL frame's plan starts at a
@@ -405,7 +366,50 @@ class GraftApiSpec extends SparkSpec {
     assert(plan.contains("PartitionFilters") && plan.contains("cluster"),
       s"indexed pool cut must partition-prune:\n$plan")
     // and partial-probe calls still return k ranked rows
-    assert(api.closestFactsDiverseIndexed(db, idx, q, k = 2, nProbe = 2).count() == 2)
+    assert(api.closestFactsDiverse(db, q, k = 2, indexDir = Some(idx), nProbe = 2).count() == 2)
+  }
+
+  test("batch facades reject a query_id used twice, naming it") {
+    // two questions under one id would share one prompt listing both
+    // questions' facts, and one of their answers would be dropped
+    val idx = parityIdx("ivf")
+    val dup = Seq(7L -> "spark window join", 8L -> "query", 7L -> "stream state")
+    val calls = Seq[(String, () => Any)](
+      "closestFactsBatch" -> (() => api.closestFactsBatch(db, idx, dup)),
+      "closestFactsWithEntitiesBatch" ->
+        (() => api.closestFactsWithEntitiesBatch(db, idx, dup, Seq("window"))),
+      "retrieveBatch" -> (() => api.retrieveBatch(db, idx, dup)),
+      "answerBatch" -> (() => api.answerBatch(db, idx, dup)))
+    for ((name, call) <- calls) {
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("query_id 7 "), s"$name: ${e.getMessage}")
+    }
+  }
+
+  test("the facade's eager jobs carry graft.serve labels: candidates, pool, context") {
+    val sc = spark.sparkContext
+    val idx = parityIdx("ivf")
+    val q = parityQuery
+    sc.setJobDescription("caller.phase")
+    try {
+      // hybrid: the candidate count (brute) or collect (adaptive rung)
+      val (_, count) = jobsOf(api.closestFactsWithEntities(db, q, Seq("window")))
+      assert(count.nonEmpty && count.forall(_ == "graft.serve.candidates"), count)
+      val (_, collect) = jobsOf(api.closestFactsWithEntitiesAdaptive(db, idx, q, Seq("window")))
+      assert(collect.contains("graft.serve.candidates"), collect)
+      // the MMR and graph-ranked pool collects
+      val (_, mmr) = jobsOf(api.closestFactsDiverse(db, q, k = 3))
+      assert(mmr.nonEmpty && mmr.forall(_ == "graft.serve.pool"), mmr)
+      val (_, graph) = jobsOf(api.closestFactsGraphRanked(db, q, Seq("window"), k = 3))
+      assert(graph.contains("graft.serve.pool"), graph)
+      // the batch RAG loops' context collect
+      val qs = parityBatch
+      val (_, rb) = jobsOf(api.retrieveBatch(db, idx, qs, k = 3))
+      assert(rb.contains("graft.serve.context"), rb)
+      val (_, ab) = jobsOf(api.answerBatch(db, idx, qs, k = 3))
+      assert(ab.contains("graft.serve.context"), ab)
+      assert(sc.getLocalProperty("spark.job.description") == "caller.phase")
+    } finally sc.setJobDescription(null)
   }
 
   test("structural candidates resolve a renamed entity that name-LSH misses") {

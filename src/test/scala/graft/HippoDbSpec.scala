@@ -236,7 +236,8 @@ class HippoDbSpec extends SparkSpec {
     val e = graft.sources.Tables.embeddings(spark, sf0001)
       .select(col("vec_id"), toDouble(col("embedding")).as("v"))
     VectorIndex.buildIvf(spark, e, dir)
-    val fromIndex = VectorIndex.annIvf(spark, dir, queryVecId = 0, k = 10)
+    val fromIndex = VectorIndex.annIvf(spark, dir, queryVecId = 0, k = 10,
+      nProbe = VectorQueries.IvfProbe)
     // the probe filter must reach the scan as a PARTITION filter —
     // that is the file-level pruning the inverted-file layout buys
     val plan = fromIndex.queryExecution.executedPlan.toString
@@ -276,19 +277,19 @@ class HippoDbSpec extends SparkSpec {
     // filtered IVFADC at all cells + a pool wider than the candidate
     // slice: the approximate stage can drop nothing, so the exact
     // re-rank must reproduce the brute filtered ranking exactly
-    val served = VectorIndex.annIvfPqFiltered(spark, dir, e, qv, k = 5,
-        nProbe = IvfPq.Cells, candidates = cand, rerank = 40)
+    val served = VectorIndex.annIvfPq(spark, dir, e, qv, k = 5,
+        nProbe = IvfPq.Cells, rerank = 40, candidates = Some(cand))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(served == brute, s"filtered IVFADC: $served vs brute $brute")
     // the code scan stays partition-pruned at partial probe
-    val part = VectorIndex.annIvfPqFiltered(spark, dir, e, qv, k = 5,
-      nProbe = 2, candidates = cand)
+    val part = VectorIndex.annIvfPq(spark, dir, e, qv, k = 5,
+      nProbe = 2, candidates = Some(cand))
     val plan = part.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("cluster"),
       s"filtered IVFADC must partition-prune:\n$plan")
     // hybrid edge: no candidate at all -> empty, not a crash
-    assert(VectorIndex.annIvfPqFiltered(spark, dir, e, qv, k = 5,
-      nProbe = IvfPq.Cells, candidates = Seq.empty[Long].toDF("vec_id")).count() == 0)
+    assert(VectorIndex.annIvfPq(spark, dir, e, qv, k = 5,
+      nProbe = IvfPq.Cells, candidates = Some(Seq.empty[Long].toDF("vec_id"))).count() == 0)
     // unfiltered path unchanged by the new parameter (regression pin)
     val unf = VectorIndex.annIvfPq(spark, dir, e, qv, k = 5, nProbe = IvfPq.Cells)
     assert(unf.count() == 5)

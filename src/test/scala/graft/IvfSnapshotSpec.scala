@@ -2,11 +2,8 @@ package graft
 
 import java.nio.file.Files
 
-import scala.collection.mutable.ArrayBuffer
 import scala.util.Try
 
-import org.apache.spark.GraftBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.col
 
 import graft.api.Graft
@@ -35,24 +32,6 @@ class IvfSnapshotSpec extends SparkSpec {
     val dir = tmp("snap_ivf")
     VectorIndex.buildIvf(spark, vecs.toDF("vec_id", "v"), dir, nCells = nCells)
     dir
-  }
-
-  /** Jobs a block starts, as their descriptions (null when unset). */
-  private def jobsOf[T](body: => T): (T, Seq[String]) = {
-    val sc = spark.sparkContext
-    val seen = ArrayBuffer.empty[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = seen.synchronized {
-        seen += Option(e.properties).map(_.getProperty("spark.job.description")).orNull
-      }
-    }
-    GraftBus.drain(sc)
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      GraftBus.drain(sc)
-      (out, seen.synchronized(seen.toList))
-    } finally sc.removeSparkListener(listener)
   }
 
   /** The Spark plan, forced through the budget seam. */
@@ -240,8 +219,11 @@ class IvfSnapshotSpec extends SparkSpec {
       assert(cold.count(_ == "graft.serve.lookup") == 1 && cold.contains("graft.serve.open"), cold)
       assert(cold.forall(Set("graft.serve.open", "graft.serve.lookup")), cold)
       for (text <- Seq("spark window join", "what joins windows", "")) {
-        val (_, warm) = jobsOf(g.answer(db, text, 10, Some(idx)))
-        assert(warm == Seq("graft.serve.lookup"), warm)
+        val warm = Seq(
+          jobsOf(g.closestFactsIndexed(db, idx, text, 10))._2,
+          jobsOf(g.retrieve(db, text, 10, Some(idx)))._2,
+          jobsOf(g.answer(db, text, 10, Some(idx)))._2)
+        assert(warm.forall(_ == Seq("graft.serve.lookup")), warm)
       }
       assert(sc.getLocalProperty("spark.job.description") == "caller.phase")
       // over the budget: today's plan, same rows; sizing the index

@@ -185,16 +185,16 @@ class VectorSpec extends SparkSpec {
     import spark.implicits._
     // empty candidates -> empty result (the hybrid edge where no fact
     // carries any probe entity), never a crash or a full scan result
-    val none = VectorIndex.annIvfFiltered(spark, dir, qv, k = 5,
-      nProbe = VectorQueries.IvfCells, Seq.empty[Long].toDF("vec_id"))
+    val none = VectorIndex.annIvf(spark, dir, qv, k = 5,
+      nProbe = VectorQueries.IvfCells, candidates = Some(Seq.empty[Long].toDF("vec_id")))
     assert(none.count() == 0)
     // candidates outside the corpus id space -> also empty
-    val ghost = VectorIndex.annIvfFiltered(spark, dir, qv, k = 5,
-      nProbe = VectorQueries.IvfCells, Seq(-1L, Long.MaxValue).toDF("vec_id"))
+    val ghost = VectorIndex.annIvf(spark, dir, qv, k = 5,
+      nProbe = VectorQueries.IvfCells, candidates = Some(Seq(-1L, Long.MaxValue).toDF("vec_id")))
     assert(ghost.count() == 0)
     // a 1-candidate set returns exactly that vector
-    val one = VectorIndex.annIvfFiltered(spark, dir, qv, k = 5,
-        nProbe = VectorQueries.IvfCells, Seq(7L).toDF("vec_id"))
+    val one = VectorIndex.annIvf(spark, dir, qv, k = 5,
+        nProbe = VectorQueries.IvfCells, candidates = Some(Seq(7L).toDF("vec_id")))
       .collect().map(_.getLong(0)).toSeq
     assert(one == Seq(7L))
   }
