@@ -399,8 +399,8 @@ final class Graft(
 
   /** Top-k facts via the PERSISTED index ([[buildFactIndex]]): the
     * query embeds driver-side, probe cells are chosen against the
-    * centroids, and only the probed cells are scored. Returns every
-    * fact column (fact_id, cos, then the facts' own).
+    * centroids, and only the probed cells are scored. Returns
+    * (fact_id, fact_text, cos), like every top-k door.
     *
     * An index with a version marker that fits the heap budget is
     * probed in this JVM from its [[graft.store.IvfSnapshot]], reopened
@@ -411,7 +411,7 @@ final class Graft(
     * same rows, schema and order. */
   def closestFactsIndexed(db: HippoDb, indexDir: String, query: String,
       k: Int = 5, nProbe: Int = VectorQueries.IvfProbe): DataFrame =
-    plan(db, Left(query), Ivf(indexDir, nProbe), k, shape = TopK(narrow = false))
+    plan(db, Left(query), Ivf(indexDir, nProbe), k)
 
   /** [[closestFactsIndexed]] through the ADAPTIVE probe
     * (VectorIndex.annIvfAdaptive): probes the nearest cells, then
@@ -422,7 +422,7 @@ final class Graft(
     * rather than pruning unsoundly). */
   def closestFactsAdaptive(db: HippoDb, indexDir: String, query: String,
       k: Int = 5, initialProbe: Int = VectorQueries.IvfProbe): DataFrame =
-    plan(db, Left(query), Bounded(indexDir, initialProbe), k, shape = TopK(narrow = false))
+    plan(db, Left(query), Bounded(indexDir, initialProbe), k)
 
   /** ALL facts inside the cosine ball — the RADIUS form of
     * [[closestFacts]] (v11's semantics on the store: dedup sweeps,
@@ -680,7 +680,7 @@ final class Graft(
     * returns top-k rows). */
   private def plan(db: HippoDb, queries: Either[String, Seq[(Long, String)]],
       rung: Rung, k: Int, filter: Option[(Seq[String], Boolean)] = None,
-      shape: Shape = TopK(narrow = true)): DataFrame = {
+      shape: Shape = TopK): DataFrame = {
     // One id's rows would merge into one prompt and one answer.
     for (qs <- queries; id <- qs.map(_._1).diff(qs.map(_._1).distinct).headOption)
       throw new IllegalArgumentException(
@@ -734,18 +734,18 @@ final class Graft(
       within: Option[DataFrame], shape: Shape): DataFrame = {
     val q = embed(text)
     shape match {
-      case TopK(narrow) =>
+      case TopK =>
         val snapshot = rung match {
           case Ivf(dir, nProbe, _, _) if within.isEmpty =>
             snapshots(spark, dir).flatMap(_.topK(q, k, nProbe))
           case _ => None
         }
-        snapshot.fold(payload(db, hits(db, q, rung, k, within), narrow))(factsOf(db, _))
+        snapshot.fold(payload(db, hits(db, q, rung, k, within)))(factsOf(db, _))
       case Ball(tau) => payload(db, rung match {
         case Ivf(dir, nProbe, _, _) =>
           VectorIndex.rangeSearch(spark, dir, q, tau, nProbe).withColumnRenamed("vec_id", "fact_id")
         case _ => scored(db.factEmb, q).filter(col("cos") >= tau)
-      }, narrow = true)
+      })
       case Diverse(pool) =>
         val scan = rung match {
           case Ivf(dir, nProbe, _, _) => VectorIndex.probedScan(spark, dir, q, nProbe)
@@ -810,41 +810,36 @@ final class Graft(
     }
   }
 
-  /** The payload tail: hits joined to their facts, narrowed to
-    * (fact_id, fact_text, cos) or with every fact column, ordered by
-    * cos descending then fact_id. */
-  private def payload(db: HippoDb, hits: DataFrame, narrow: Boolean): DataFrame = {
-    val joined = hits.join(db.facts, "fact_id")
-    (if (narrow) joined.select("fact_id", "fact_text", "cos") else joined)
-      .orderBy(col("cos").desc, col("fact_id"))
-  }
-
-  /** [[payload]] for snapshot hits: one job over `db.facts`
-    * pre-filtered to the hit ids, joined in the driver as the Spark
-    * plan would — facts missing from `db` drop out, columns are
-    * fact_id, cos, then the facts' own, ordered by cos descending then
+  /** The payload tail: hits joined to their facts as
+    * (fact_id, fact_text, cos), ordered by cos descending then
     * fact_id. */
+  private def payload(db: HippoDb, hits: DataFrame): DataFrame =
+    hits.join(db.facts, "fact_id").select("fact_id", "fact_text", "cos")
+      .orderBy(col("cos").desc, col("fact_id"))
+
+  /** [[payload]] for snapshot hits: one job collects the hit ids'
+    * (fact_id, fact_text) from `db.facts`, joined in the driver as the
+    * Spark plan would — facts missing from `db` drop out, ordered by
+    * cos descending then fact_id. */
   private def factsOf(db: HippoDb, hits: Seq[(Long, Double)]): DataFrame = {
     val cosOf = hits.groupMap(_._1)(_._2)
-    val fields = db.facts.schema.fields
-    val idAt = fields.indexWhere(_.name == "fact_id")
+    val facts = db.facts.select("fact_id", "fact_text")
     val found =
       if (cosOf.isEmpty) Array.empty[Row]
       else Phase(spark, "graft.serve.lookup") {
-        db.facts.filter(org.apache.spark.sql.graft.InSetColumn(col("fact_id"), cosOf.keys))
+        facts.filter(org.apache.spark.sql.graft.InSetColumn(col("fact_id"), cosOf.keys))
           .collect()
       }
     val rows = for {
       f <- found.toSeq
-      id = f.getLong(idAt)
+      id = f.getLong(0)
       c <- cosOf(id)
-    } yield (id, c, f.toSeq.patch(idAt, Nil, 1))
+    } yield Row(id, f.get(1), c)
     val sorted = rows.sortWith((a, b) =>
-      graft.store.IvfSnapshot.ranksBefore(a._2, a._1, b._2, b._1))
-    spark.createDataFrame(
-      java.util.Arrays.asList(sorted.map { case (id, c, rest) => Row.fromSeq(id +: c +: rest) }: _*),
-      StructType(StructField("fact_id", LongType) +: StructField("cos", DoubleType) +:
-        fields.patch(idAt, Nil, 1)))
+      graft.store.IvfSnapshot.ranksBefore(a.getDouble(2), a.getLong(0), b.getDouble(2), b.getLong(0)))
+    spark.createDataFrame(java.util.Arrays.asList(sorted: _*),
+      StructType(Seq(StructField("fact_id", LongType), facts.schema("fact_text"),
+        StructField("cos", DoubleType))))
   }
 
   /** The PPR-boosted re-rank over a bounded cosine pool. The PPR runs
@@ -877,13 +872,13 @@ final class Graft(
       .orderBy(col("score").desc, col("fact_id"))
   }
 
-  /** retrieve/answer's top-k — the brute scan, or the index's rows
-    * narrowed to the brute form's columns — and its fact texts in
-    * order (one collect of k rows, bounded by k, not the corpus). */
+  /** retrieve/answer's top-k — the brute scan or the index — and its
+    * fact texts in order (one collect of k rows, bounded by k, not
+    * the corpus). */
   private def ragTop(db: HippoDb, query: String, k: Int,
       indexDir: Option[String], nProbe: Int): (DataFrame, Seq[String]) = {
     val top = indexDir.fold(closestFacts(db, query, k))(
-      closestFactsIndexed(db, _, query, k, nProbe).select("fact_id", "fact_text", "cos"))
+      closestFactsIndexed(db, _, query, k, nProbe))
     (top, top.collect().map(_.getAs[String]("fact_text")).toSeq)
   }
 
@@ -935,11 +930,10 @@ object Graft {
     indexDir.fold[Rung](Scan)(Ivf(_, nProbe))
 
   /** What a single query ranks and returns: the cos-ordered top-k
-    * (narrowed to fact_id, fact_text, cos, or every fact column), the
-    * cosine ball, the MMR re-rank of a pool, or the PPR-boosted
-    * re-rank of a pool. */
+    * (fact_id, fact_text, cos), the cosine ball, the MMR re-rank of a
+    * pool, or the PPR-boosted re-rank of a pool. */
   private sealed trait Shape
-  private final case class TopK(narrow: Boolean) extends Shape
+  private case object TopK extends Shape
   private final case class Ball(tau: Double) extends Shape
   private final case class Diverse(pool: Int) extends Shape
   private final case class GraphBoost(entities: Seq[String], pool: Int,

@@ -134,14 +134,10 @@ object AnnPanel {
       val withCell = e.join(assigned, "vec_id").cache()
       try {
       val got = panel.map { case (qid, qv) =>
-        val cells = centroids.zipWithIndex.map { case (c, i) =>
-          var d = 0.0; var j = 0
-          while (j < c.length) { val t = qv(j) - c(j); d += t * t; j += 1 }
-          (d, i)
-        }.sortBy(_._1).take(VectorQueries.IvfProbe).map(_._2)
+        val cells = KMeans.nearestCells(centroids, qv, VectorQueries.IvfProbe)
         val qCol = array(qv.toIndexedSeq.map(lit): _*)
         qid -> ids(withCell
-          .filter(col("cluster").isin(cells.toIndexedSeq: _*))
+          .filter(col("cluster").isin(cells: _*))
           .filter(col("vec_id") =!= qid)
           .select(col("vec_id"),
             graft.functions.VectorFunctions.cosineNative6(col("v"), qCol).as("cos"))

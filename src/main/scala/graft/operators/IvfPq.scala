@@ -156,13 +156,7 @@ object IvfPq {
     var qn2 = 0.0; qv.foreach(x => qn2 += x * x)
     val qn = math.sqrt(qn2)
     require(qn > 0, "zero-norm query vector — cosine undefined")
-    // Probe = the nProbe nearest coarse cells by L2 (driver-side over
-    // the k×dim centroid model).
-    val probeCells = centroids.zipWithIndex.map { case (c, i) =>
-      var d = 0.0; var j = 0
-      while (j < c.length) { val t = qv(j) - c(j); d += t * t; j += 1 }
-      (d, i)
-    }.sortBy(_._1).take(nProbe).map(_._2)
+    val probeCells = KMeans.nearestCells(centroids, qv, nProbe)
     // Driver-side query model: the M×K residual inner-product table
     // (8 KB) plus one q·c(cell) offset per cell.
     val tab = Array.tabulate(m, cb(0).length) { (s, c) =>
@@ -177,7 +171,7 @@ object IvfPq {
     }
     val bcTab = spark.sparkContext.broadcast(tab)
     val bcOff = spark.sparkContext.broadcast(cellOff)
-    val probed0 = enc.filter(col("cluster").isin(probeCells.toIndexedSeq: _*))
+    val probed0 = enc.filter(col("cluster").isin(probeCells: _*))
     // The hybrid filter (VectorIndex.annIvfPq's `candidates`): the
     // bounded candidate id relation broadcasts into a semi-join against
     // the partition-pruned sliver BEFORE any typed ADC work — the

@@ -165,7 +165,7 @@ object KMeans {
     * cell. Either way every cell's centroid is positioned and the
     * assignment stays a partition; truly-empty cells cost a probe
     * slot at most (their partition scans nothing). Downstream
-    * consumers (buildIvf layout, nearestCells probe, silhouette) are
+    * consumers (buildIvf layout, [[nearestCells]] probe, silhouette) are
     * agnostic: the flat (assignments, centroids) pair is drop-in. */
   /** Nearest centroid by squared L2; the FIRST index wins an exact
     * tie. This is THE frozen-model assignment rule — fitTwoLevel's
@@ -192,6 +192,18 @@ object KMeans {
     while (j < c.length) { val t = v(j) - c(j); d += t * t; j += 1 }
     d
   }
+
+  /** The `nProbe` cells nearest `q` by [[sqDist]], ties to the lower
+    * cell id — the one single-query cell choice: the persisted IVF
+    * probes, the in-JVM snapshot, IVFADC, v07 and the ladder's panel
+    * all call it. `among` restricts the choice to those cell ids (the
+    * two-level probe's candidate children); centroids outside it may
+    * be null. */
+  private[graft] def nearestCells(centroids: Array[Array[Double]],
+      q: Array[Double], nProbe: Int, among: Seq[Int] = null): IndexedSeq[Int] =
+    Option(among).getOrElse(centroids.indices)
+      .map(c => (sqDist(q, centroids(c)), c)).sorted
+      .take(nProbe).map(_._2).toIndexedSeq
 
   /** The uniform contiguous group→children index fitTwoLevel's flat
     * id space implies (group g owns cells g·k2 until (g+1)·k2) —

@@ -282,14 +282,9 @@ object VectorQueries {
       KMeans.fit(spark, cached, nCells, trainIters, trackInertia = false)
     val qv = cached.filter(col("vec_id") === queryVecId)
       .select("v").head().getSeq[Double](0).toArray // one row, dim doubles
-    val probeCells = centroids.zipWithIndex.map { case (c, i) =>
-      var d = 0.0; var j = 0
-      while (j < c.length) { val t = qv(j) - c(j); d += t * t; j += 1 }
-      (d, i)
-    }.sortBy(_._1).take(nProbe).map(_._2)
     val qCol = array(qv.toIndexedSeq.map(lit): _*)
     cached.join(assigned, "vec_id")
-      .filter(col("cluster").isin(probeCells.toIndexedSeq: _*))
+      .filter(col("cluster").isin(KMeans.nearestCells(centroids, qv, nProbe): _*))
       .filter(col("vec_id") =!= queryVecId)
       .select(col("vec_id"), cosineNative6(col("v"), qCol).as("cos"))
       .orderBy(col("cos").desc, col("vec_id"))

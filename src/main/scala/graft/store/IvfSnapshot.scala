@@ -3,6 +3,8 @@ package graft.store
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 
+import graft.operators.KMeans
+
 /** A persisted IVF index held in the driver JVM, for single-query
   * serving without a Spark plan ([[VectorIndex.open]] builds it).
   *
@@ -30,7 +32,7 @@ final class IvfSnapshot private[store] (
     * an analysis error. */
   def topK(queryVec: Array[Double], k: Int, nProbe: Int): Option[IndexedSeq[(Long, Double)]] = {
     if (k < 0) return None
-    val cells = VectorIndex.nearestCells(centroids, queryVec, nProbe)
+    val cells = KMeans.nearestCells(centroids, queryVec, nProbe)
     val qNorm = math.sqrt(IvfSnapshot.dot(queryVec, queryVec))
     val n = cells.iterator.map(cellIds(_).length).sum
     val ids = new Array[Long](n)

@@ -490,8 +490,9 @@ object VectorIndex {
   /** Cluster once, write the corpus PARTITIONED BY its coarse cell —
     * the inverted-file layout: an nProbe query's `cluster IN (...)`
     * filter becomes a partition filter and only nProbe/nCells of the
-    * files are opened at all. */
-  /** `cellCap > 0` additionally splits hot cells at build
+    * files are opened at all.
+    *
+    * `cellCap > 0` additionally splits hot cells at build
     * (KMeans.splitOversized — the rebuild-with-split lever
     * [[indexHealth]]'s imbalance dial names; VERDICT r14 #3): probe
     * cost then scales with the cap, not the densest cluster. The cap
@@ -588,7 +589,8 @@ object VectorIndex {
     * so every serving path — [[probedScan]]'s partition-pruned probe,
     * [[annIvf]]'s candidate filter, tombstones, compaction — is inherited
     * unchanged; the coarse model is additionally persisted at
-    * ivf_coarse/ for diagnostics and future coarse-first probing.
+    * ivf_coarse/ for the coarse-first probes ([[annIvfBatch]], and
+    * [[probedScan]]/[[annIvf]] with a `coarseProbe`).
     * TwoLevelSpec pins the drop-in contract (all-probe == brute
     * exactly) and the error premium vs the flat build. */
   def buildIvfTwoLevel(spark: SparkSession, e: DataFrame, dir: String,
@@ -621,19 +623,6 @@ object VectorIndex {
     } finally cached.unpersist()
   }
 
-  /** TWO-LEVEL PROBE — the query-side half of the hierarchical
-    * story: at 10⁶ cells the flat probe's driver-side model is
-    * ~k·dim doubles COLLECTED per serving session (512 MB at 10⁶×64)
-    * and nCells distance evaluations per query. Coarse-first probing
-    * loads only the k1-row coarse model, picks `coarseProbe` nearest
-    * groups, reads JUST those groups' child-centroid rows (a c-range
-    * filter over the flat centroid table — coarseProbe·k2 rows, not
-    * k1·k2), picks the nProbe nearest cells among them, and scans
-    * those partitions. With coarseProbe = k1 the candidate cell set
-    * is the full model, so the probe — and therefore the query —
-    * equals the flat [[annIvf]] exactly (spec-pinned); smaller
-    * coarseProbe trades recall for a bounded driver model exactly
-    * like nProbe trades it for scan bytes. */
   /** The group→flat-cell index of a persisted two-level dir: the
     * EXPLICIT `ivf_children` parquet when the build persisted one
     * (capped builds — splits break the uniform layout), else the
@@ -642,7 +631,7 @@ object VectorIndex {
     * filter-per-group shape r16's verdict priced as quadratic-ish at
     * the 10⁶-cell decade (measured there: see the annIvfBatch
     * scaladoc's driver-model ceiling). Shared by every coarse-first
-    * reader ([[annIvfBatch]], [[probedScanTwoLevel]]) so the
+    * reader ([[annIvfBatch]], [[probedScan]]) so the
     * split-layout rule cannot drift between them. */
   private[graft] def loadChildrenIndex(spark: SparkSession, dir: String,
       nFlat: Int, coarse: Array[Array[Double]]): Array[Array[Int]] = {
@@ -655,54 +644,6 @@ object VectorIndex {
       Array.tabulate(coarse.length)(g =>
         byGroup.getOrElse(g, Array.empty).map(_._2).sorted)
     } else KMeans.uniformChildren(nFlat, coarse)
-  }
-
-  def probedScanTwoLevel(spark: SparkSession, dir: String,
-      queryVec: Array[Double], nProbe: Int, coarseProbe: Int): DataFrame = {
-    val coarse = loadCentroidsAt(spark, s"$dir/ivf_coarse")
-    val meta = spark.read.json(s"$dir/ivf_two_level.json").head()
-    val k2 = meta.getAs[Long]("k2").toInt
-    val groups = nearestCells(coarse, queryVec, coarseProbe)
-    // group membership comes from the PERSISTED children index when
-    // present (capped builds append split-cell ids past the uniform
-    // g·k2 blocks — deriving the group as c / k2 would route those
-    // cells to groups ≥ k1 and silently drop them from the probe
-    // even at coarseProbe = k1; r16 ADVICE), uniform blocks otherwise
-    val children = loadChildrenIndex(spark, dir,
-      coarse.length * k2, coarse)
-    val candCells = groups.flatMap(g => children(g))
-    // only the probed groups' child rows leave the centroid table
-    val childRows = spark.read.parquet(s"$dir/ivf_centroids")
-      .filter(col("c").isin(candCells: _*))
-      .collect() // ≤ coarseProbe·k2·dim rows (+ that group's splits)
-    val byCell = childRows.groupBy(_.getInt(0)).map { case (c, rows) =>
-      val dim = rows.map(_.getInt(1)).max + 1
-      val v = new Array[Double](dim)
-      rows.foreach(r => v(r.getInt(1)) = r.getDouble(2))
-      (c, v)
-    }.toArray
-    val cells = byCell.map { case (c, v) =>
-      var d = 0.0; var j = 0
-      while (j < v.length) { val t = queryVec(j) - v(j); d += t * t; j += 1 }
-      (d, c)
-    }.sortBy(identity).take(nProbe).map(_._2).toSeq
-    minusTombstones(spark, dir,
-      spark.read.parquet(s"$dir/ivf_vectors")
-        .filter(col("cluster").isin(cells: _*)))
-  }
-
-  /** annIvf through the two-level probe — scoring byte-shared with
-    * [[annIvf]], so at coarseProbe = k1 (and equal nProbe) the two
-    * serving paths return identical rows. */
-  def annIvfTwoLevel(spark: SparkSession, dir: String,
-      queryVec: Array[Double], k: Int, nProbe: Int, coarseProbe: Int,
-      excludeVecId: Option[Long] = None): DataFrame = {
-    val probed = probedScanTwoLevel(spark, dir, queryVec, nProbe, coarseProbe)
-    val qCol = array(queryVec.toIndexedSeq.map(lit): _*)
-    excludeVecId.foldLeft(probed)((df, id) => df.filter(col("vec_id") =!= id))
-      .select(col("vec_id"), cosineNative6(col("v"), qCol).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id"))
-      .limit(k)
   }
 
   /** APPEND a batch into the persisted IVF index WITHOUT retraining:
@@ -742,13 +683,12 @@ object VectorIndex {
         // leaves bounds that over-cover (sound) — never rows a stale
         // bound could unsoundly prune. Appends into a cell WITHOUT a
         // bound row (empty at buildCellBounds time) stay unbounded:
-        // annIvfAdaptive probes missing cells unconditionally.
+        // annIvfAdaptive probes missing cells unconditionally. An
+        // appended zero vector unbounds its cell (see buildCellBounds).
         val bp = new org.apache.hadoop.fs.Path(s"$dir/ivf_cellbounds")
         val fs = bp.getFileSystem(spark.sparkContext.hadoopConfiguration)
         if (fs.exists(bp)) {
-          val bounds = spark.read.parquet(s"$dir/ivf_cellbounds").collect()
-            .map(r => (r.getInt(0),
-              (r.getSeq[Double](1).toArray, r.getDouble(2)))).toMap
+          val bounds = cellBoundRows(spark, dir).map { case (c, m, r) => (c, (m, r)) }.toMap
           val bcMeans = spark.sparkContext.broadcast(
             bounds.map { case (c, (m, _)) => (c, m) })
           val batchMax = assigned.as[(Long, Array[Double], Int)]
@@ -761,7 +701,7 @@ object VectorIndex {
                 while (j < m.length) {
                   val t = v(j) * inv - m(j); d += t * t; j += 1
                 }
-                (c, math.sqrt(d))
+                (c, if (nn == 0) Double.PositiveInfinity else math.sqrt(d))
               }
             }.toDF("cluster", "d")
             .groupBy("cluster").agg(max("d").as("d"))
@@ -824,12 +764,20 @@ object VectorIndex {
   def loadIvfCentroids(spark: SparkSession, dir: String): Array[Array[Double]] =
     loadCentroidsAt(spark, s"$dir/ivf_centroids")
 
-  private def loadCentroidsAt(spark: SparkSession, path: String): Array[Array[Double]] = {
-    val rows = spark.read.parquet(path).collect()
+  /** Centroid rows back as arrays indexed by cell id; with `cells`,
+    * only those cells' rows are read and every other slot is null. */
+  private def loadCentroidsAt(spark: SparkSession, path: String,
+      cells: Seq[Int] = null): Array[Array[Double]] = {
+    val scan = spark.read.parquet(path)
+    val rows = Option(cells).fold(scan)(cs => scan.filter(col("c").isin(cs: _*))).collect()
     val k = rows.map(_.getInt(0)).max + 1
     val dim = rows.map(_.getInt(1)).max + 1
-    val cs = Array.fill(k)(new Array[Double](dim))
-    rows.foreach(r => cs(r.getInt(0))(r.getInt(1)) = r.getDouble(2))
+    val cs = new Array[Array[Double]](k)
+    rows.foreach { r =>
+      val c = r.getInt(0)
+      if (cs(c) == null) cs(c) = new Array[Double](dim)
+      cs(c)(r.getInt(1)) = r.getDouble(2)
+    }
     cs
   }
 
@@ -847,16 +795,17 @@ object VectorIndex {
     * before scoring, so ranking happens within the candidates and an
     * entity-filtered query reads ~nProbe/nCells of the corpus. At
     * nProbe == nCells the result equals the brute filtered scan
-    * exactly. */
+    * exactly.
+    *
+    * `coarseProbe` below Int.MaxValue chooses the cells coarse-first
+    * on a two-level index (see [[probedScan]]); scoring is unchanged,
+    * so at coarseProbe = k1 the rows equal the flat probe's. */
   def annIvf(spark: SparkSession, dir: String, queryVec: Array[Double],
       k: Int, nProbe: Int, excludeVecId: Option[Long] = None,
-      candidates: Option[DataFrame] = None): DataFrame = {
-    val qCol = array(queryVec.toIndexedSeq.map(lit): _*)
-    excluded(within(probedScan(spark, dir, queryVec, nProbe), candidates), excludeVecId)
-      .select(col("vec_id"), cosineNative6(col("v"), qCol).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id"))
-      .limit(k)
-  }
+      candidates: Option[DataFrame] = None,
+      coarseProbe: Int = Int.MaxValue): DataFrame =
+    ranked(excluded(within(probedScan(spark, dir, queryVec, nProbe, coarseProbe),
+      candidates), excludeVecId), queryVec).limit(k)
 
   /** `scan` semi-joined to the broadcast candidate ids, when given. */
   private def within(scan: DataFrame, candidates: Option[DataFrame]): DataFrame =
@@ -867,29 +816,68 @@ object VectorIndex {
   private def excluded(scan: DataFrame, excludeVecId: Option[Long]): DataFrame =
     excludeVecId.foldLeft(scan)((df, id) => df.filter(col("vec_id") =!= id))
 
-  /** The nProbe nearest cells by centroid distance — driver-side
-    * arithmetic over the tiny loaded model, shared by every probe
-    * path so cell choice cannot drift between them. */
-  private[store] def nearestCells(centroids: Array[Array[Double]],
-      queryVec: Array[Double], nProbe: Int): Seq[Int] =
-    centroids.zipWithIndex.map { case (c, i) =>
-      var d = 0.0; var j = 0
-      while (j < c.length) { val t = queryVec(j) - c(j); d += t * t; j += 1 }
-      (d, i)
-    }.sortBy(_._1).take(nProbe).map(_._2).toIndexedSeq
+  /** `scan`'s (vec_id, cos) rows against `queryVec`, by cos descending
+    * then vec_id: the one cosine rank of the float probes (round-6,
+    * byte-shared with the brute scan). */
+  private def ranked(scan: DataFrame, queryVec: Array[Double]): DataFrame =
+    scan.select(col("vec_id"),
+        cosineNative6(col("v"), array(queryVec.toIndexedSeq.map(lit): _*)).as("cos"))
+      .orderBy(col("cos").desc, col("vec_id"))
+
+  /** The partition-pruned `cluster IN (cells)` scan of a
+    * cell-partitioned artifact minus tombstones — what every IVF
+    * probe reads (non-probed cells never open a file). */
+  private def cellScan(spark: SparkSession, dir: String, cells: Seq[Int],
+      artifact: String = "ivf_vectors"): DataFrame =
+    minusTombstones(spark, dir,
+      spark.read.parquet(s"$dir/$artifact").filter(col("cluster").isin(cells: _*)))
 
   /** The partition-pruned `cluster IN (probes)` scan of the IVF
     * artifact for a query vector — non-probed cells never open a
     * file (the directory layout IS the inverted list). Public so
     * pool-cutting consumers (MMR, graph-ranked retrieval) can run
-    * their own scoring over the sliver instead of the corpus. */
+    * their own scoring over the sliver instead of the corpus.
+    *
+    * TWO-LEVEL PROBE (`coarseProbe` below Int.MaxValue) — the
+    * query-side half of the hierarchical story: at 10⁶ cells the flat
+    * probe's driver-side model is ~k·dim doubles COLLECTED per call
+    * (512 MB at 10⁶×64) and nCells distance evaluations per query.
+    * Coarse-first probing loads only the k1-row coarse model, picks
+    * `coarseProbe` nearest groups, reads JUST those groups'
+    * child-centroid rows (a c-range filter over the flat centroid
+    * table — coarseProbe·k2 rows, not k1·k2), picks the nProbe
+    * nearest cells among them, and scans those partitions. With
+    * coarseProbe = k1 the candidate cell set is the full model, so
+    * the probe equals the flat one exactly (spec-pinned); smaller
+    * coarseProbe trades recall for a bounded driver model exactly
+    * like nProbe trades it for scan bytes. A flat index has no coarse
+    * model, so a coarse probe of one fails. */
   def probedScan(spark: SparkSession, dir: String,
-      queryVec: Array[Double], nProbe: Int): DataFrame = {
-    val centroids = loadIvfCentroids(spark, dir)
-    minusTombstones(spark, dir,
-      spark.read.parquet(s"$dir/ivf_vectors")
-        .filter(col("cluster").isin(nearestCells(centroids, queryVec, nProbe): _*)))
-  }
+      queryVec: Array[Double], nProbe: Int,
+      coarseProbe: Int = Int.MaxValue): DataFrame =
+    cellScan(spark, dir, chosenCells(spark, dir, queryVec, nProbe, coarseProbe))
+
+  /** The cells [[probedScan]] opens: the nProbe nearest among every
+    * flat centroid, or among the children of the coarseProbe nearest
+    * coarse groups, reading only those children's centroid rows. */
+  private def chosenCells(spark: SparkSession, dir: String,
+      queryVec: Array[Double], nProbe: Int, coarseProbe: Int): Seq[Int] =
+    if (coarseProbe == Int.MaxValue)
+      KMeans.nearestCells(loadIvfCentroids(spark, dir), queryVec, nProbe)
+    else {
+      val coarse = loadCentroidsAt(spark, s"$dir/ivf_coarse")
+      val k2 = spark.read.json(s"$dir/ivf_two_level.json").head().getAs[Long]("k2").toInt
+      // group membership comes from the PERSISTED children index when
+      // present (capped builds append split-cell ids past the uniform
+      // g·k2 blocks — deriving the group as c / k2 would route those
+      // cells to groups ≥ k1 and silently drop them from the probe
+      // even at coarseProbe = k1; r16 ADVICE), uniform blocks otherwise
+      val children = loadChildrenIndex(spark, dir, coarse.length * k2, coarse)
+      val cand = KMeans.nearestCells(coarse, queryVec, coarseProbe).flatMap(children(_))
+      if (cand.isEmpty) cand
+      else KMeans.nearestCells(loadCentroidsAt(spark, s"$dir/ivf_centroids", cand),
+        queryVec, nProbe, cand)
+    }
 
   /** RANGE (radius) search through the persisted IVF index — v11's
     * "whole cosine ≥ τ ball" semantics on the partition-pruned probe
@@ -901,13 +889,9 @@ object VectorIndex {
     * the top-k trade. Output size is data-dependent (no k). */
   def rangeSearch(spark: SparkSession, dir: String,
       queryVec: Array[Double], tau: Double, nProbe: Int,
-      excludeVecId: Option[Long] = None): DataFrame = {
-    val qCol = array(queryVec.toIndexedSeq.map(lit): _*)
-    excluded(probedScan(spark, dir, queryVec, nProbe), excludeVecId)
-      .select(col("vec_id"), cosineNative6(col("v"), qCol).as("cos"))
+      excludeVecId: Option[Long] = None): DataFrame =
+    ranked(excluded(probedScan(spark, dir, queryVec, nProbe), excludeVecId), queryVec)
       .filter(col("cos") >= tau)
-      .orderBy(col("cos").desc, col("vec_id"))
-  }
 
   // ------------------------------------------------ adaptive probe
 
@@ -924,7 +908,10 @@ object VectorIndex {
     * stays live and exact through streamed ingest; re-running this
     * only TIGHTENS the extended radii back to the true max). The
     * rebuild entries clear the artifact with the other stale state
-    * (a new model invalidates the cell geometry wholesale). */
+    * (a new model invalidates the cell geometry wholesale). A zero
+    * vector has no direction, so no radius covers it: its cell gets
+    * r̂ = +∞ and every probe scans it, as the all-cells probe does
+    * (where its cosine is null, or fails under ANSI). */
   def buildCellBounds(spark: SparkSession, dir: String): Unit = {
     import spark.implicits._
     val vecs = spark.read.parquet(s"$dir/ivf_vectors")
@@ -953,7 +940,7 @@ object VectorIndex {
           val m = bc.value(c)
           var d = 0.0; var j = 0
           while (j < m.length) { val t = xh(j) - m(j); d += t * t; j += 1 }
-          (c, math.sqrt(d))
+          (c, if (xh.forall(_ == 0.0)) Double.PositiveInfinity else math.sqrt(d))
         }.toDF("cluster", "d")
         .groupBy("cluster").agg(max("d").as("rhat"))
         .as[(Int, Double)].collect().toMap
@@ -1002,77 +989,41 @@ object VectorIndex {
       excludeVecId: Option[Long] = None,
       candidates: Option[DataFrame] = None): AdaptiveProbe = {
     val centroids = loadIvfCentroids(spark, dir)
-    val boundsPath = new org.apache.hadoop.fs.Path(s"$dir/ivf_cellbounds")
-    val fs = boundsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(boundsPath))
-      throw new IllegalStateException(
-        s"annIvfAdaptive: no cell bounds at $dir/ivf_cellbounds — run " +
-        "buildCellBounds after build/rebuild (appends extend live bounds)")
-    val bounds = spark.read.parquet(s"$dir/ivf_cellbounds").collect()
-      .map(r => (r.getInt(0),
-        (r.getSeq[Double](1).toArray, r.getDouble(2)))).toMap
-    var qn = 0.0
-    queryVec.foreach(x => qn += x * x)
-    val qnorm = math.sqrt(qn)
+    val (means, radii) = loadCellBoundArrays(spark, dir, centroids.length)
+    val qnorm = math.sqrt(IvfSnapshot.dot(queryVec, queryVec))
     val qhat = queryVec.map(_ / qnorm)
-    def round6(x: Double): Double = java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
-    def ub6(c: Int): Double = bounds.get(c) match {
-      case Some((m, r)) =>
-        var d = 0.0; var j = 0
-        while (j < m.length) { d += qhat(j) * m(j); j += 1 }
-        round6(math.min(1.0, d + r))
-      case None => 1.0 // cell without bound info must be probed
-    }
-    val qCol = array(queryVec.toIndexedSeq.map(lit): _*)
+    // an unbounded cell's +∞ radius caps to 1.0: it must be probed
+    def ub6(c: Int): Double =
+      IvfSnapshot.round6(math.min(1.0, IvfSnapshot.dot(qhat, means(c)) + radii(c)))
     def scoreCells(cells: Seq[Int]): DataFrame =
-      excluded(within(minusTombstones(spark, dir,
-        spark.read.parquet(s"$dir/ivf_vectors")
-          .filter(col("cluster").isin(cells: _*))), candidates), excludeVecId)
-        .select(col("vec_id"), cosineNative6(col("v"), qCol).as("cos"))
+      ranked(excluded(within(cellScan(spark, dir, cells), candidates), excludeVecId),
+        queryVec).limit(k)
     val batch1 =
-      nearestCells(centroids, queryVec, math.min(initialProbe, centroids.length))
-    val pool = scoreCells(batch1)
-      .orderBy(col("cos").desc, col("vec_id")).limit(k).collect()
+      KMeans.nearestCells(centroids, queryVec, math.min(initialProbe, centroids.length))
+    val pool = scoreCells(batch1).collect()
     val restAll = centroids.indices.filterNot(batch1.contains)
+    // a short pool, or a null k-th (ANSI off: a zero query or stored
+    // vector scores null), proves no cell dominated; a NaN k-th or
+    // bound compares false, so it skips nothing either
     val rest =
-      if (pool.length < k) restAll
+      if (pool.length < k || pool.last.isNullAt(1)) restAll
       else {
         val thetaK = pool.last.getDouble(1) // already round-6
-        restAll.filter(c => ub6(c) >= thetaK)
+        restAll.filterNot(c => ub6(c) < thetaK)
       }
     val cells = batch1 ++ rest
-    val res = scoreCells(cells).orderBy(col("cos").desc, col("vec_id")).limit(k)
-    AdaptiveProbe(res, cells, centroids.length)
+    AdaptiveProbe(scoreCells(cells), cells, centroids.length)
   }
 
   /** The persisted cell-bound model as (means, radii) arrays indexed
-    * by flat cell id — [[annIvfBatch]]'s bound source. Cells WITHOUT
-    * a bound row (empty at buildCellBounds time, possibly filled by
-    * later appends — see [[appendIvf]]) load as UNBOUNDED (zero mean,
-    * +∞ radius): their upper bound evaluates to +∞, so the batched
-    * top-up must probe them — the annIvfAdaptive missing-cell rule in
-    * the shared kernel's convention. */
+    * by flat cell id — what [[annIvfAdaptive]] and [[annIvfBatch]]
+    * read. Cells WITHOUT a bound row (empty at buildCellBounds time,
+    * possibly filled by later appends — see [[appendIvf]]) load as
+    * UNBOUNDED (zero mean, +∞ radius): their upper bound evaluates to
+    * +∞, so every reader must probe them. */
   private[graft] def loadCellBoundArrays(spark: SparkSession, dir: String,
       nCells: Int): (Array[Array[Double]], Array[Double]) = {
-    import spark.implicits._
-    // TYPED collect (r17, VERDICT r16 #7 — the 10⁶-cell ceiling):
-    // the row-based collect deserializes every mean to a BOXED Seq
-    // (ProfModelLoad measured it at 122 s for 10⁶ × dim-64 bounds);
-    // the encoder path lands primitive Array[Double]s directly
-    // (5.0 s there — the bounds artifact is ~0.5 GB of doubles, so
-    // the load is I/O-shaped, not boxing-shaped).
-    val rows = spark.read.parquet(s"$dir/ivf_cellbounds")
-      .select(col("cluster"), col("nc"), col("rhat"))
-      .as[(Int, Array[Double], Double)].collect()
-    // an existing-but-EMPTY bounds dir (buildCellBounds over an empty
-    // corpus, or a partially written artifact) must fail diagnosably,
-    // not with head()'s bare NoSuchElementException (r16 ADVICE)
-    if (rows.isEmpty)
-      throw new IllegalStateException(
-        s"annIvfBatch: $dir/ivf_cellbounds exists but holds no bound " +
-        "rows — rebuild it with buildCellBounds over a non-empty index " +
-        "(or pass reprobeMax = 0 for the fixed-dial probe)")
+    val rows = cellBoundRows(spark, dir)
     val means = new Array[Array[Double]](nCells)
     val radii = Array.fill(nCells)(Double.PositiveInfinity)
     rows.foreach { case (c, nc, r) => means(c) = nc; radii(c) = r }
@@ -1082,6 +1033,36 @@ object VectorIndex {
       c += 1
     }
     (means, radii)
+  }
+
+  /** The `ivf_cellbounds` rows (cluster, mean, radius): the one decoder
+    * of the artifact, which fails when it is absent or empty. */
+  private def cellBoundRows(spark: SparkSession,
+      dir: String): Array[(Int, Array[Double], Double)] = {
+    import spark.implicits._
+    val path = s"$dir/ivf_cellbounds"
+    val hp = new org.apache.hadoop.fs.Path(path)
+    if (!hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp))
+      throw new IllegalStateException(
+        s"no cell bounds at $path — run buildCellBounds after build/rebuild " +
+        "(appends extend live bounds)")
+    // TYPED collect (r17, VERDICT r16 #7 — the 10⁶-cell ceiling):
+    // the row-based collect deserializes every mean to a BOXED Seq
+    // (ProfModelLoad measured it at 122 s for 10⁶ × dim-64 bounds);
+    // the encoder path lands primitive Array[Double]s directly
+    // (5.0 s there — the bounds artifact is ~0.5 GB of doubles, so
+    // the load is I/O-shaped, not boxing-shaped).
+    val rows = spark.read.parquet(path)
+      .select(col("cluster"), col("nc"), col("rhat"))
+      .as[(Int, Array[Double], Double)].collect()
+    // an existing-but-EMPTY bounds dir (buildCellBounds over an empty
+    // corpus, or a partially written artifact) must fail diagnosably,
+    // not with head()'s bare NoSuchElementException (r16 ADVICE)
+    if (rows.isEmpty)
+      throw new IllegalStateException(
+        s"$path exists but holds no bound rows — rebuild it with " +
+        "buildCellBounds over a non-empty index")
+    rows
   }
 
   /** BATCH k-NN over the PERSISTED IVF index (VERDICT r15 #1) — the
@@ -1123,7 +1104,7 @@ object VectorIndex {
     * total resident model ~2 GB heap. The decade above (10⁷ cells ≈
     * 2.5×10⁹ vectors/shard) would put the resident model at ~20 GB —
     * past a sane driver; that regime shards the corpus or serves
-    * coarse-first from [[probedScanTwoLevel]]'s bounded k1-row loads. */
+    * coarse-first from [[probedScan]]'s bounded k1-row loads. */
   def annIvfBatch(spark: SparkSession, dir: String, queries: DataFrame,
       k: Int, nProbe: Int = VectorQueries.V15Probe,
       reprobeMax: Int = VectorQueries.V15ReprobeMax,
@@ -1191,15 +1172,11 @@ object VectorIndex {
     }
     val qPayload = q.select(col("vec_id").as("query_id"), col("v").as("qv"),
       normNative(col("v")).as("nq"))
-    def scanCells(cells: Seq[Int]): DataFrame = {
-      val scan = minusTombstones(spark, dir,
-        spark.read.parquet(s"$dir/ivf_vectors")
-          .filter(col("cluster").isin(cells: _*)))
-      candidates.foldLeft(scan)((s, c) =>
+    def scanCells(cells: Seq[Int]): DataFrame =
+      candidates.foldLeft(cellScan(spark, dir, cells))((s, c) =>
           s.join(c.select("vec_id"), Seq("vec_id"), "left_semi"))
         .select(col("vec_id"), col("v"), normNative(col("v")).as("nv"),
           col("cluster").cast("int").as("cluster"))
-    }
     // CORPUS-SIZED batches probe (nearly) every cell, so the
     // partition filter prunes nothing and — when the top-up adds a
     // SECOND scoring round — both rounds would re-read the whole
@@ -1215,34 +1192,15 @@ object VectorIndex {
       if (effReprobe > 0)
         graft.plans.Pins.pin(scanCells(Seq.range(0, centroids.length)))
       else scanCells(Seq.range(0, centroids.length))
-    val cellScan: Seq[Int] => DataFrame = cells =>
+    val scanOf: Seq[Int] => DataFrame = cells =>
       if (cells.length * 2 >= centroids.length) fullScan
       else scanCells(cells)
-    VectorQueries.batchIvfCore(spark, cellScan, q, qPayload,
+    VectorQueries.batchIvfCore(spark, scanOf, q, qPayload,
       centroids, coarse, children, k, effProbe, effReprobe,
       nQueries = nQ,
       bounds = () => loadCellBoundArrays(spark, dir, centroids.length),
       pruneScan = true, coarseProbe = coarseProbe)
       .orderBy("query_id", "rk")
-  }
-
-  /** Convenience by-ID form. The id→vector lookup cannot prune (the
-    * row's cell is unknown until read), so it costs ONE full-index
-    * scan up front — fine for ad-hoc use; a serving path should keep
-    * query vectors on hand (or look them up against an embeddings
-    * side table) and call the vector form above. */
-  def annIvf(spark: SparkSession, dir: String, queryVecId: Long, k: Int,
-      nProbe: Int): DataFrame = {
-    // A tombstoned (deleted) query id must not resolve: the lookup
-    // goes through the same filter as every serving scan. Fail with
-    // a descriptive error, not head()'s bare NoSuchElementException.
-    val qv = minusTombstones(spark, dir, spark.read.parquet(s"$dir/ivf_vectors"))
-      .filter(col("vec_id") === queryVecId)
-      .select("v").limit(1).collect().headOption
-      .getOrElse(throw new IllegalArgumentException(
-        s"annIvf: vec_id $queryVecId not found in $dir/ivf_vectors (unknown or deleted)"))
-      .getSeq[Double](0).toArray
-    annIvf(spark, dir, qv, k, nProbe, Some(queryVecId))
   }
 
   // --------------------------------------------------------- IVFADC
@@ -1399,10 +1357,7 @@ object VectorIndex {
         .withColumnRenamed("qid", "query_id"))
     val cells = probes.select(col("cluster")).distinct()
       .as[Int].collect().toSeq.sorted // ≤ nCells ints
-    val scan = candidates.foldLeft(
-      minusTombstones(spark, dir,
-        spark.read.parquet(s"$dir/ivfpq_codes")
-          .filter(col("cluster").isin(cells: _*))))((s, c) =>
+    val scan = candidates.foldLeft(cellScan(spark, dir, cells, "ivfpq_codes"))((s, c) =>
         s.join(c.select("vec_id"), Seq("vec_id"), "left_semi"))
       .select(col("vec_id"), col("cluster").cast("int").as("cluster"),
         col("codes"), col("norm"))
@@ -1459,15 +1414,6 @@ object VectorIndex {
       .filter(col("rk") <= k)
       .select("query_id", "vec_id", "cos", "rk")
       .orderBy("query_id", "rk")
-  }
-
-  /** Convenience by-ID form: the query vector comes from `emb` by
-    * point lookup (one row), then the vector form serves. */
-  def annIvfPq(spark: SparkSession, dir: String, emb: DataFrame,
-      queryVecId: Long, k: Int): DataFrame = {
-    val qv = emb.filter(col("vec_id") === queryVecId)
-      .select("v").head().getSeq[Double](0).toArray
-    annIvfPq(spark, dir, emb, qv, k, excludeVecId = Some(queryVecId))
   }
 
   /** APPEND a batch of new vectors into the persisted IVFADC index

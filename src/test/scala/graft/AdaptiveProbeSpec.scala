@@ -196,6 +196,45 @@ class AdaptiveProbeSpec extends SparkSpec {
     } finally e.unpersist()
   }
 
+  test("zero vectors: the adaptive outcome equals the probe-all outcome under ANSI on and off") {
+    import spark.implicits._
+    import scala.util.Try
+    /** Rows with their nullable cos, or the failure's error condition. */
+    def outcome(df: => DataFrame): Either[String, Seq[(Long, Option[Double])]] =
+      Try(df.collect().map(r => (r.getLong(0), Option.when(!r.isNullAt(1))(r.getDouble(1)))).toSeq)
+        .toEither.left.map { t =>
+          Iterator.iterate(t)(_.getCause).takeWhile(_ != null).collectFirst {
+            case s: org.apache.spark.SparkThrowable if s.getCondition != null => s.getCondition
+          }.getOrElse(t.getClass.getName)
+        }
+    val corpus = clustered(200)
+    val zero = Seq((200L, Array.fill(8)(0.0))).toDF("vec_id", "v")
+    val zeroQuery = Array.fill(8)(0.0)
+    val aimed = zeroQuery +: (0 until 8).map(a => Array.tabulate(8)(j => if (j == a) 4.0 else 0.1))
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    try {
+      // (corpus, appended after the bounds, queries): a zero query; a
+      // stored zero vector, built or appended, wherever a query aims
+      for ((e, appended, queries) <- Seq(
+          (corpus, None, Seq(zeroQuery)),
+          (corpus.union(zero), None, aimed),
+          (corpus, Some(zero), aimed))) {
+        val tmp = Files.createTempDirectory("adaptive-zero").toString
+        VectorIndex.buildIvf(spark, e, tmp, nCells = 8)
+        VectorIndex.buildCellBounds(spark, tmp)
+        appended.foreach(VectorIndex.appendIvf(spark, tmp, _))
+        val nCells = VectorIndex.loadIvfCentroids(spark, tmp).length
+        for (on <- Seq("false", "true"); qv <- queries) {
+          spark.conf.set("spark.sql.ansi.enabled", on)
+          val full = outcome(VectorIndex.annIvf(spark, tmp, qv, 5, nCells))
+          val ad = outcome(VectorIndex.annIvfAdaptive(spark, tmp, qv, 5,
+            initialProbe = 2).result)
+          assert(ad == full, s"ansi=$on query=${qv.toSeq}: adaptive $ad vs probe-all $full")
+        }
+      }
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
+  }
+
   test("rebuilding the index clears stale cell bounds") {
     val tmp = Files.createTempDirectory("adaptive-rebuild").toString
     val e = clustered(200).cache()

@@ -222,11 +222,11 @@ class BatchIndexSpec extends SparkSpec {
   }
 
   test("split two-level dir: SINGLE-QUERY coarse-first serving reaches split cells; metadata k2 is the true pre-split block (r17, ADVICE)") {
-    // the r16 hole: probedScanTwoLevel derived group membership as
-    // c / k2 from metadata whose k2 was centroids.length / k1 —
+    // the r16 hole: the coarse-first probe derived group membership
+    // as c / k2 from metadata whose k2 was centroids.length / k1 —
     // wrong after any split — so appended split-cell ids mapped to
-    // groups ≥ k1 and their vectors were UNREACHABLE through
-    // annIvfTwoLevel even at coarseProbe = k1. Same hot corpus as
+    // groups ≥ k1 and their vectors were UNREACHABLE through the
+    // two-level annIvf even at coarseProbe = k1. Same hot corpus as
     // the batch round-trip test above.
     val e0 = (0 until 1200).map { i =>
       val axisOf = if (i < 1000) 0 else 2 + (i % 4)
@@ -265,7 +265,7 @@ class BatchIndexSpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq
       val flatAll = rows(VectorIndex.annIvf(spark, dir, qv, 3,
         nProbe = nFlat, excludeVecId = Some(500L)))
-      val twoAll = rows(VectorIndex.annIvfTwoLevel(spark, dir, qv, 3,
+      val twoAll = rows(VectorIndex.annIvf(spark, dir, qv, 3,
         nProbe = nFlat, coarseProbe = k1, excludeVecId = Some(500L)))
       assert(twoAll == flatAll,
         s"coarse-first serving at full scope must equal the flat probe: $twoAll vs $flatAll")

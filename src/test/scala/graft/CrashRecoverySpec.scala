@@ -112,7 +112,8 @@ class CrashRecoverySpec extends SparkSpec {
     assert(codes.count() == n, s"codes ${codes.count()} != corpus $n")
     assert(codes.select(countDistinct(col("vec_id"))).head().getLong(0) == n)
     // streamed-through-restart rows serve like built rows
-    val got = VectorIndex.annIvfPq(spark, dir, e, queryVecId = n - 1, k = 5)
+    val qv = e.filter(col("vec_id") === n - 1).select("v").head().getSeq[Double](0).toArray
+    val got = VectorIndex.annIvfPq(spark, dir, e, qv, 5, excludeVecId = Some(n - 1))
       .collect().map(_.getLong(0)).toSeq
     assert(got.nonEmpty && got.size == 5)
   }

@@ -353,24 +353,6 @@ class DeleteSpec extends SparkSpec {
     } finally e.unpersist()
   }
 
-  test("annIvf by-id for an unknown or tombstoned id fails with a descriptive error") {
-    import spark.implicits._
-    val tmp = Files.createTempDirectory("vecbadid").toString
-    val e = plantedVectors.cache()
-    try {
-      VectorIndex.buildIvf(spark, e, tmp, nCells = 4)
-      val ex = intercept[IllegalArgumentException] {
-        VectorIndex.annIvf(spark, tmp, queryVecId = 9999L, k = 5, nProbe = 4)
-      }
-      assert(ex.getMessage.contains("9999"), s"opaque error: ${ex.getMessage}")
-      VectorIndex.tombstone(spark, tmp, Seq(3L).toDF("vec_id"))
-      val ex2 = intercept[IllegalArgumentException] {
-        VectorIndex.annIvf(spark, tmp, queryVecId = 3L, k = 5, nProbe = 4)
-      }
-      assert(ex2.getMessage.contains("deleted"), s"opaque error: ${ex2.getMessage}")
-    } finally e.unpersist()
-  }
-
   test("a crashed takedown resumes from the durable victim snapshot (no orphaned derivatives)") {
     import spark.implicits._
     val tmp = Files.createTempDirectory("hipporesume").toString

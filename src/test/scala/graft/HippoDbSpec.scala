@@ -236,8 +236,11 @@ class HippoDbSpec extends SparkSpec {
     val e = graft.sources.Tables.embeddings(spark, sf0001)
       .select(col("vec_id"), toDouble(col("embedding")).as("v"))
     VectorIndex.buildIvf(spark, e, dir)
-    val fromIndex = VectorIndex.annIvf(spark, dir, queryVecId = 0, k = 10,
-      nProbe = VectorQueries.IvfProbe)
+    // the query vector as the index stores it
+    val stored = spark.read.parquet(s"$dir/ivf_vectors").filter(col("vec_id") === 0)
+      .select("v").head().getSeq[Double](0).toArray
+    val fromIndex = VectorIndex.annIvf(spark, dir, stored, k = 10,
+      nProbe = VectorQueries.IvfProbe, excludeVecId = Some(0L))
     // the probe filter must reach the scan as a PARTITION filter —
     // that is the file-level pruning the inverted-file layout buys
     val plan = fromIndex.queryExecution.executedPlan.toString
@@ -249,7 +252,7 @@ class HippoDbSpec extends SparkSpec {
         nCells = VectorQueries.IvfCells, nProbe = VectorQueries.IvfProbe)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(got == inMemory, s"index: $got vs in-memory: $inMemory")
-    // the SERVING form (query by vector, no id lookup scan) agrees
+    // the source embedding serves the same rows as the stored vector
     val qv = e.filter(col("vec_id") === 0).select("v").head().getSeq[Double](0).toArray
     val byVec = VectorIndex.annIvf(spark, dir, qv, k = 10,
         nProbe = VectorQueries.IvfProbe, excludeVecId = Some(0L))
@@ -311,7 +314,8 @@ class HippoDbSpec extends SparkSpec {
     assert(Files.readString(java.nio.file.Paths.get(s"$dir/ivfpq.json"))
       .contains("graft-ivfpq-v1"))
     // the serving query: partition-pruned scan + bounded ADC pool
-    val fromIndex = VectorIndex.annIvfPq(spark, dir, e, queryVecId = 0, k = 10)
+    val qv = e.filter(col("vec_id") === 0).select("v").head().getSeq[Double](0).toArray
+    val fromIndex = VectorIndex.annIvfPq(spark, dir, e, qv, 10, excludeVecId = Some(0L))
     val plan = fromIndex.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("cluster"),
       s"IVFADC probe must prune partitions, plan:\n$plan")

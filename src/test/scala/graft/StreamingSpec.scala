@@ -733,13 +733,13 @@ class StreamingSpec extends SparkSpec {
     // a built one. Query id n-1 lives in the STREAMED half — serving
     // it proves appends are immediately queryable.
     for (qid <- Seq(0L, n - 1)) {
-      val got = VectorIndex.annIvfPq(spark, dir, e, queryVecId = qid, k = 10)
+      val qv = e.filter(col("vec_id") === qid)
+        .select("v").head().getSeq[Double](0).toArray
+      val got = VectorIndex.annIvfPq(spark, dir, e, qv, 10, excludeVecId = Some(qid))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       val (cb, centroids) = VectorIndex.loadIvfPqModels(spark, dir)
       val enc = IvfPq.encodeResiduals(spark,
         IvfPq.assignResiduals(spark, e, centroids), cb)
-      val qv = e.filter(col("vec_id") === qid)
-        .select("v").head().getSeq[Double](0).toArray
       val want = IvfPq.adcCellTopK(spark, enc, cb, centroids, e, qv,
           Some(qid), k = 10, nProbe = IvfPq.Probe)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq

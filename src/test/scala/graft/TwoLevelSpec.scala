@@ -203,7 +203,7 @@ class TwoLevelSpec extends SparkSpec {
         "stale two-level metadata survived the flat rebuild")
       // the two-level probe now fails loudly instead of serving wrong
       intercept[Exception] {
-        VectorIndex.annIvfTwoLevel(spark, tmp, Array.fill(6)(0.0), 3, 2, 2).collect()
+        VectorIndex.annIvf(spark, tmp, Array.fill(6)(0.0), 3, 2, coarseProbe = 2).collect()
       }
     } finally e.unpersist()
   }
@@ -225,7 +225,7 @@ class TwoLevelSpec extends SparkSpec {
       for (nProbe <- Seq(2, 4)) {
         val flat = VectorIndex.annIvf(spark, tmp, qv, 6, nProbe, Some(17L))
           .select("vec_id", "cos").collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-        val two = VectorIndex.annIvfTwoLevel(spark, tmp, qv, 6, nProbe, k1, Some(17L))
+        val two = VectorIndex.annIvf(spark, tmp, qv, 6, nProbe, Some(17L), coarseProbe = k1)
           .select("vec_id", "cos").collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
         assert(two == flat, s"nProbe=$nProbe: two-level $two != flat $flat")
       }
@@ -247,7 +247,7 @@ class TwoLevelSpec extends SparkSpec {
       }
       val topGroups = coarseModel.indices
         .sortBy(g => (d2(qv, coarseModel(g)), g)).take(2).toSet
-      val partial = VectorIndex.annIvfTwoLevel(spark, tmp, qv, 6, 3, coarseProbe = 2, Some(17L))
+      val partial = VectorIndex.annIvf(spark, tmp, qv, 6, 3, Some(17L), coarseProbe = 2)
       val assignOf = spark.read.parquet(s"$tmp/ivf_vectors")
         .select(col("vec_id"), col("cluster").cast("int"))
         .as[(Long, Int)].collect().toMap
@@ -257,6 +257,65 @@ class TwoLevelSpec extends SparkSpec {
       }
       assert(coarse.length == k1 * k2) // the flat model the partial probe avoided loading
     } finally e.unpersist()
+  }
+
+  test("two-level probe with candidates: full probe equals the brute filtered top-k") {
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("ivf2cands").toString
+    val e = clustered(300).cache()
+    try {
+      VectorIndex.buildIvfTwoLevel(spark, e, tmp, nCells = 12, iters = 2)
+      val k1 = spark.read.json(s"$tmp/ivf_two_level.json").head().getAs[Long]("k1").toInt
+      val nCells = VectorIndex.loadIvfCentroids(spark, tmp).length
+      val cands = (0L until 300L).filter(_ % 3 == 1).toDF("vec_id")
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.select("vec_id", "cos").collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      for (qid <- Seq(4L, 17L)) {
+        val qv = e.filter(col("vec_id") === qid).select("v").head().getSeq[Double](0).toArray
+        val brute = rows(e.join(cands, Seq("vec_id"), "left_semi")
+          .filter(col("vec_id") =!= qid)
+          .select(col("vec_id"), cosineNative6(col("v"), array(qv.toIndexedSeq.map(lit): _*)).as("cos"))
+          .orderBy(col("cos").desc, col("vec_id")).limit(6))
+        val two = rows(VectorIndex.annIvf(spark, tmp, qv, 6, nCells, Some(qid),
+          candidates = Some(cands), coarseProbe = k1))
+        assert(brute.nonEmpty && two == brute, s"query $qid: two-level $two vs brute $brute")
+      }
+    } finally e.unpersist()
+  }
+
+  test("exact centroid ties: the flat and the two-level probe pick the same cells and rows") {
+    import spark.implicits._
+    // a hand-written two-level index (k1 = 2 groups of k2 = 2 cells)
+    // whose cells 1 (group 0) and 2 (group 1) share one centroid, so
+    // a query between them ties exactly; the tie goes to the lower
+    // cell id whichever group the coarse probe ranks first
+    val tmp = Files.createTempDirectory("ivf2ties").toString
+    val cents = Seq(Array(1.0, 0.0), Array(0.5, 0.5), Array(0.5, 0.5), Array(0.0, 1.0))
+    def centroidRows(cs: Seq[Array[Double]]) =
+      cs.zipWithIndex.flatMap { case (c, i) => c.indices.map(d => (i, d, c(d))) }
+        .toDF("c", "dim", "x")
+    centroidRows(cents).write.parquet(s"$tmp/ivf_centroids")
+    centroidRows(Seq(Array(0.75, 0.25), Array(0.25, 0.75))).write.parquet(s"$tmp/ivf_coarse")
+    Files.writeString(java.nio.file.Paths.get(s"$tmp/ivf_two_level.json"),
+      """{"format": "graft-ivf2-v1", "k1": 2, "k2": 2}""")
+    (0 until 40).map { i =>
+      val cell = i % 4
+      val c = cents(cell)
+      (i.toLong, Array(c(0) + 0.01 * (i / 4), c(1) + 0.02 * (i % 3)), cell)
+    }.toDF("vec_id", "v", "cluster")
+      .write.partitionBy("cluster").parquet(s"$tmp/ivf_vectors")
+    val cellOf = (0 until 40).map(i => i.toLong -> i % 4).toMap
+    for (qv <- Seq(Array(0.6, 0.4), Array(0.4, 0.6)); nProbe <- 1 to 3) {
+      val flat = VectorIndex.probedScan(spark, tmp, qv, nProbe)
+        .select("vec_id").as[Long].collect().toSet
+      val two = VectorIndex.probedScan(spark, tmp, qv, nProbe, coarseProbe = 2)
+        .select("vec_id").as[Long].collect().toSet
+      assert(two == flat, s"q=${qv.toSeq} nProbe=$nProbe: cells ${two.map(cellOf)} vs ${flat.map(cellOf)}")
+      if (nProbe == 1) assert(flat.map(cellOf) == Set(1), "an exact tie goes to the lower cell id")
+      val rows = (df: org.apache.spark.sql.DataFrame) => df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      assert(rows(VectorIndex.annIvf(spark, tmp, qv, 5, nProbe, coarseProbe = 2)) ==
+        rows(VectorIndex.annIvf(spark, tmp, qv, 5, nProbe)))
+    }
   }
 
   test("rangeSearch through the index: all-probe == brute ball exactly; partial probe is a subset") {
