@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.store.VectorIndex
+
 /** QUERY-PANEL recall measurement for the ANN ladder (VERDICT r13
   * #2): every §8k routing decision previously rested on recall@10 of
   * a SINGLE query (query 0, 0.1 granularity, n=1) — the repo's own
@@ -26,9 +28,8 @@ import org.apache.spark.sql.functions._
   *
   * Each rung is BUILT ONCE over the cached corpus and queried once
   * per panel member through the same shared kernels the entries use
-  * (adcTopK/sqTopK/bqTopK/adcCellTopK and the annLsh/IVF probe
-  * shapes), so the panel measures serving behavior, not a parallel
-  * reimplementation.
+  * (Codec.topK and the annLsh/IVF probe shapes), so the panel
+  * measures serving behavior, not a parallel reimplementation.
   */
 object AnnPanel {
 
@@ -135,80 +136,41 @@ object AnnPanel {
       try {
       val got = panel.map { case (qid, qv) =>
         val cells = KMeans.nearestCells(centroids, qv, VectorQueries.IvfProbe)
-        val qCol = array(qv.toIndexedSeq.map(lit): _*)
-        qid -> ids(withCell
-          .filter(col("cluster").isin(cells: _*))
-          .filter(col("vec_id") =!= qid)
-          .select(col("vec_id"),
-            graft.functions.VectorFunctions.cosineNative6(col("v"), qCol).as("cos"))
-          .orderBy(col("cos").desc, col("vec_id"))
-          .limit(k))
+        qid -> ids(VectorIndex.ranked(VectorIndex.excluded(
+          withCell.filter(col("cluster").isin(cells: _*)), Some(qid)), qv).limit(k))
       }.toMap
       out += summarize(
         s"v07 IVF", s"${8 * dim} in probed cells", fullBytes, truth, got)
       } finally withCell.unpersist()
     }
 
-    // PQ: one train+encode, per-query ADC through the shared kernel.
-    if (want("pq")) locally {
-      val cb = Pq.train(spark, e)
-      val enc = Pq.encode(spark, e, cb).cache()
-      try {
-        enc.count()
-        val got = panel.map { case (qid, _) =>
-          qid -> ids(Pq.adcTopK(spark, enc, cb, e, qid, k, rerankPq, Some(n)))
-        }.toMap
-        out += summarize("v09 PQ", s"${Pq.M} codes + 8 norm", Pq.M + 8, truth, got)
-      } finally enc.unpersist()
-    }
-
-    // IVFADC: one coarse fit + residual train/encode, per-query
-    // cell-probed ADC through the shared kernel.
-    if (want("adc")) locally {
-      val (_, centroids, _) =
-        KMeans.fit(spark, e, IvfPq.Cells, 2, trackInertia = false)
-      val res = IvfPq.assignResiduals(spark, e, centroids).cache()
-      try {
-        val cb = Pq.train(spark, res)
-        val enc = IvfPq.encodeResiduals(spark, res, cb).cache()
-        try {
-          enc.count()
-          val got = panel.map { case (qid, qv) =>
-            qid -> ids(IvfPq.adcCellTopK(spark, enc, cb, centroids, e, qv,
-              Some(qid), k, IvfPq.Probe, rerankAdc))
-          }.toMap
-          out += summarize("v10 IVFADC",
-            s"${Pq.M} codes + 8 norm, probed cells", Pq.M + 8, truth, got)
-        } finally enc.unpersist()
-      } finally res.unpersist()
-    }
-
-    // SQ8: one train+encode, per-query byte-weighted scoring.
-    if (want("sq")) locally {
-      val (mins, maxs) = Sq.train(spark, e)
-      val enc = Sq.encode(spark, e, mins, maxs).cache()
-      try {
-        enc.count()
-        val got = panel.map { case (qid, _) =>
-          qid -> ids(Sq.sqTopK(spark, enc, mins, maxs, e, qid, k, rerankSq, Some(n)))
-        }.toMap
-        out += summarize("v13 SQ8", s"$dim codes + 8 norm", dim + 8, truth, got)
-      } finally enc.unpersist()
-    }
-
-    // BQ: one train+encode, per-query xor+popcount pool.
-    if (want("bq")) locally {
-      val means = Bq.train(spark, e)
-      val enc = Bq.encode(spark, e, means).cache()
-      try {
-        enc.count()
-        val got = panel.map { case (qid, _) =>
-          qid -> ids(Bq.bqTopK(spark, enc, means, e, qid, k, rerankBq, Some(n)))
-        }.toMap
-        out += summarize("v14 BQ", "8 sig + 8 norm", 16, truth, got)
-      } finally enc.unpersist()
-    }
+    // The coded rungs: one train + encode each, then per-query
+    // approximate pool + exact re-rank through the shared query half.
+    val coded: Seq[(String, String, String, Int, Codec[_], Int)] = Seq(
+      ("pq", "v09 PQ", s"${Pq.M} codes + 8 norm", Pq.M + 8, Pq.codec(), rerankPq),
+      ("adc", "v10 IVFADC", s"${Pq.M} codes + 8 norm, probed cells", Pq.M + 8,
+        IvfPq.codec(), rerankAdc),
+      ("sq", "v13 SQ8", s"$dim codes + 8 norm", dim + 8, Sq.codec, rerankSq),
+      ("bq", "v14 BQ", "8 sig + 8 norm", 16, Bq.codec, rerankBq))
+    for ((tag, name, bytes, bytesPerVec, codec, rerank) <- coded if want(tag))
+      out += summarize(name, bytes, bytesPerVec, truth,
+        codedTopK(spark, codec, e, panel, k, n, rerank))
 
     out.toSeq
+  }
+
+  /** One coded rung over the panel: train + encode once, the codes
+    * cached across the panel's queries. */
+  private def codedTopK[M](spark: SparkSession, codec: Codec[M], e: DataFrame,
+      panel: Array[(Long, Array[Double])], k: Int, n: Long,
+      rerank: Int): Map[Long, Seq[Long]] = {
+    val model = codec.train(spark, e)
+    val enc = codec.encode(spark, e, model).cache()
+    try {
+      enc.count()
+      panel.map { case (qid, qv) =>
+        qid -> ids(Codec.topK(spark, codec, model, enc, e, qv, Some(qid), k, rerank, Some(n)))
+      }.toMap
+    } finally enc.unpersist()
   }
 }

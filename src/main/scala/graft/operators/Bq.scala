@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions._
@@ -64,54 +64,42 @@ object Bq {
       .toDF("vec_id", "sig", "norm")
   }
 
-  /** Hamming candidate pool + exact re-rank. The pool pass is a pure
-    * codegen'd column expression (xor + bit_count) — no typed map. */
-  def bqTopK(spark: SparkSession, enc: DataFrame, means: Array[Double],
-      emb: DataFrame, queryVecId: Long, k: Int, rerank: Int = Rerank,
-      streamN: Option[Long] = None): DataFrame = {
-    val qv = emb.filter(col("vec_id") === queryVecId)
-      .select("v").head().getSeq[Double](0).toArray
-    var qSig = 0L
-    var j = 0
-    while (j < qv.length) { if (qv(j) >= means(j)) qSig |= (1L << j); j += 1 }
-    // density-scaled pool (Pq.scaledPool): 1-bit codes are the rung
-    // most exposed to rank noise at scale; the floor keeps the
-    // small-corpus behavior identical. streamN folds the count out
-    // of the per-query path (the adcTopK convention).
-    val poolN = Pq.scaledPool(streamN.getOrElse(enc.count()), k, rerank)
-    val pool = enc
-      .filter(col("vec_id") =!= queryVecId)
-      .select(col("vec_id"),
-        bitwise_not_count_guard(col("sig"), qSig).as("hamming"))
-      .orderBy(col("hamming"), col("vec_id"))
-      .limit(poolN)
-    Pq.exactRerank(pool, emb, qv, k)
+  /** The BQ codec: sign bits vs the per-dimension mean. The pool pass
+    * is a pure codegen'd column expression — `bit_count(sig XOR
+    * querySig)`, ascending — with no typed map at all. */
+  private[graft] val codec: Codec[Array[Double]] = new Codec[Array[Double]] {
+    val name = "bq"
+    val codes = "bq_sigs"
+    def train(spark: SparkSession, e: DataFrame) = Bq.train(spark, e)
+    def encode(spark: SparkSession, e: DataFrame, means: Array[Double]) =
+      Bq.encode(spark, e, means)
+    def writeModel(spark: SparkSession, means: Array[Double], dir: String) = {
+      import spark.implicits._
+      means.indices.map(i => (i, means(i))).toDF("dim", "m")
+        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/bq_model")
+    }
+    def readModel(spark: SparkSession, dir: String) = {
+      val rows = spark.read.parquet(s"$dir/bq_model").collect()
+      val means = new Array[Double](rows.map(_.getInt(0)).max + 1)
+      rows.foreach(r => means(r.getInt(0)) = r.getDouble(1))
+      means
+    }
+    def meta(means: Array[Double]) = s""""format": "graft-bq-v1", "dim": ${means.length}"""
+    def score(spark: SparkSession, scan: DataFrame, means: Array[Double],
+        qv: Array[Double], qn: Double) = {
+      var qSig = 0L
+      var j = 0
+      while (j < qv.length) { if (qv(j) >= means(j)) qSig |= (1L << j); j += 1 }
+      scan.select(col("vec_id"), bit_count(col("sig").bitwiseXOR(lit(qSig))).as("hamming"))
+    }
+    override def rank = col("hamming")
   }
 
-  /** `bit_count(sig XOR lit)` — split out so the expression is one
-    * named place (and greppable in the plan audit). */
-  private def bitwise_not_count_guard(sig: org.apache.spark.sql.Column,
-      qSig: Long): org.apache.spark.sql.Column =
-    bit_count(sig.bitwiseXOR(lit(qSig)))
-
-  /** One-shot BQ ANN (train + encode inline; the k-row result
-    * materializes driver-side — the annPq cache-release contract). */
+  /** One-shot BQ ANN (train + encode inline; the [[Codec.oneShot]]
+    * contract). */
   def annBq(spark: SparkSession, e: DataFrame, queryVecId: Long, k: Int,
-      rerank: Int = Rerank): DataFrame = {
-    val cached = e.select(col("vec_id"), col("v")).cache()
-    try {
-      // corpus count = pool streamN (encode is 1:1): the signature
-      // stream is consumed exactly once by the scoring pass — no
-      // cache, no count job (the annPq convention)
-      val n = cached.count()
-      val means = train(spark, cached)
-      val enc = encode(spark, cached, means)
-      val res = bqTopK(spark, enc, means, cached, queryVecId, k, rerank, Some(n))
-      spark.createDataFrame(
-        new java.util.ArrayList(java.util.Arrays.asList(res.collect(): _*)),
-        res.schema)
-    } finally cached.unpersist()
-  }
+      rerank: Int = Rerank): DataFrame =
+    Codec.oneShot(spark, codec, e, queryVecId, k, rerank)
 
   /** v14 entry (*rows-only*; VectorSpec: full-pool == brute exactly,
     * recall floor at the default pool, signature balance). */

@@ -696,8 +696,9 @@ object DedupQueries {
       moved = acc.value
       lab = next.select("id", "comp")
       round += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] round $round moved<=$moved (upper bound)")
+      org.slf4j.LoggerFactory.getLogger(getClass).debug(
+        s"connectedComponents round $round: moved <= $moved (an upper bound " +
+        "— retries and checkpoint recompute re-count a round's moves)")
     }
     if (moved > 0)
       System.err.println(s"[graft] connectedComponents: NOT converged after " +

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.store.IvfSnapshot.dot
+
 /** IVFADC — the combined coarse-quantizer + product-quantization ANN
   * index (SURVEY.md §2 v10), after Jégou et al. 2011 §IV ("Product
   * Quantization for Nearest Neighbor Search"): the billion-scale
@@ -61,20 +63,9 @@ object IvfPq {
         val cs = bc.value
         require(v.length == cs(0).length,
           s"vector dim ${v.length} != index dim ${cs(0).length}")
-        var best = 0; var bestD = Double.MaxValue
-        var c = 0
-        while (c < cs.length) {
-          val cc = cs(c)
-          var d = 0.0; var j = 0
-          while (j < cc.length) { val t = v(j) - cc(j); d += t * t; j += 1 }
-          if (d < bestD) { bestD = d; best = c }
-          c += 1
-        }
+        val best = KMeans.nearestIndex(v, cs)
         val cc = cs(best)
-        val r = new Array[Double](v.length)
-        var n2 = 0.0; var j = 0
-        while (j < v.length) { n2 += v(j) * v(j); r(j) = v(j) - cc(j); j += 1 }
-        (id, best, r, math.sqrt(n2))
+        (id, best, Array.tabulate(v.length)(j => v(j) - cc(j)), math.sqrt(dot(v, v)))
       }
       .toDF("vec_id", "cluster", "v", "norm")
   }
@@ -116,21 +107,11 @@ object IvfPq {
     res.select(col("cluster"), col("v"))
       .as[(Int, Array[Double])]
       .map { case (cell, r) =>
-        val cbl = bc.value
         val sl = r.length / m
         var err = 0.0; var s = 0
         while (s < m) {
-          val cents = cbl(s)
-          var best = Double.MaxValue
-          var c = 0
-          while (c < cents.length) {
-            val cc = cents(c)
-            var d = 0.0; var j = 0
-            while (j < sl) { val t = r(s * sl + j) - cc(j); d += t * t; j += 1 }
-            if (d < best) best = d
-            c += 1
-          }
-          err += best; s += 1
+          val cents = bc.value(s)
+          err += Pq.subDist(cents(Pq.argmin(cents, r, s * sl)), r, s * sl); s += 1
         }
         (cell, err)
       }
@@ -139,104 +120,65 @@ object IvfPq {
       .agg(count(lit(1)).as("n"), sum("err").as("sum_err"))
   }
 
-  /** ADC scoring over an already-encoded (vec_id, cluster, codes,
-    * norm) table — the query half shared by the in-memory annIvfPq
-    * and the persisted index (graft.store.VectorIndex.annIvfPq), so
-    * the two paths cannot drift. The cell filter sits directly on
-    * `enc` BEFORE any typed work: on the persisted path it becomes a
-    * partition filter and non-probed cells never open a file. */
-  def adcCellTopK(spark: SparkSession, enc: DataFrame,
-      cb: Array[Array[Array[Double]]], centroids: Array[Array[Double]],
-      emb: DataFrame, qv: Array[Double], excludeVecId: Option[Long],
-      k: Int, nProbe: Int, rerank: Int = Pq.Rerank,
-      candidates: Option[DataFrame] = None): DataFrame = {
-    import spark.implicits._
-    val m = cb.length
-    val sub = qv.length / m
-    var qn2 = 0.0; qv.foreach(x => qn2 += x * x)
-    val qn = math.sqrt(qn2)
-    require(qn > 0, "zero-norm query vector — cosine undefined")
-    val probeCells = KMeans.nearestCells(centroids, qv, nProbe)
-    // Driver-side query model: the M×K residual inner-product table
-    // (8 KB) plus one q·c(cell) offset per cell.
-    val tab = Array.tabulate(m, cb(0).length) { (s, c) =>
-      var d = 0.0; var j = 0
-      while (j < sub) { d += qv(s * sub + j) * cb(s)(c)(j); j += 1 }
-      d
-    }
-    val cellOff = centroids.map { c =>
-      var d = 0.0; var j = 0
-      while (j < c.length) { d += qv(j) * c(j); j += 1 }
-      d
-    }
-    val bcTab = spark.sparkContext.broadcast(tab)
-    val bcOff = spark.sparkContext.broadcast(cellOff)
-    val probed0 = enc.filter(col("cluster").isin(probeCells: _*))
-    // The hybrid filter (VectorIndex.annIvfPq's `candidates`): the
-    // bounded candidate id relation broadcasts into a semi-join against
-    // the partition-pruned sliver BEFORE any typed ADC work — the
-    // storage.py:304-337 filter-inside-the-index shape at the
-    // compressed rung.
-    val probed = candidates.foldLeft(probed0)((df, c) =>
-      df.join(broadcast(c.select("vec_id")), Seq("vec_id"), "left_semi"))
-    // density-scaled pool over what the ADC pass RANKS — the probed
-    // sliver (Pq.scaledPool). Counted BEFORE the candidate semi-join:
-    // on the persisted path that keeps the count a partition-pruned
-    // metadata read (no broadcast-join re-execution per query), and a
-    // filtered stream only ever needs a SMALLER pool, so sizing from
-    // the unfiltered sliver over-covers (conservative).
-    val poolN = Pq.scaledPool(probed0.count(), k, rerank)
-    val pool = excludeVecId
-      .foldLeft(probed)((df, id) => df.filter(col("vec_id") =!= id))
-      .select(col("vec_id"), col("cluster").cast("int"), col("codes"), col("norm"))
-      .as[(Long, Int, Array[Int], Double)]
-      .map { case (id, cell, codes, n) =>
-        var dot = bcOff.value(cell); var s = 0
-        while (s < codes.length) { dot += bcTab.value(s)(codes(s)); s += 1 }
-        // Zero-norm corpus vectors rank LAST (the v09 guard): an
-        // unguarded /0 floats ±Infinity/NaN to the pool's top.
-        (id, if (n > 0) dot / (qn * n) else Double.NegativeInfinity)
+  /** The IVFADC codec: a coarse cell per vector plus PQ codes of its
+    * residual; the model is (residual codebooks, coarse centroids). A
+    * query ranks only its nProbe nearest cells — the cell filter sits
+    * directly on the code table BEFORE any typed work, so on the
+    * persisted path it becomes a partition filter and non-probed cells
+    * never open a file — and scores q·c(cell) + the flat PQ ADC sum. */
+  private[graft] def codec(nCells: Int = Cells, nProbe: Int = Probe,
+      m: Int = Pq.M, nCent: Int = Pq.K)
+      : Codec[(Array[Array[Array[Double]]], Array[Array[Double]])] =
+    new Codec[(Array[Array[Array[Double]]], Array[Array[Double]])] {
+      val name = "ivfpq"
+      val codes = "ivfpq_codes"
+      def train(spark: SparkSession, e: DataFrame) = {
+        val (_, centroids, _) = KMeans.fit(spark, e, nCells, 2, trackInertia = false)
+        val res = assignResiduals(spark, e, centroids).cache()
+        try (Pq.train(spark, res, m, nCent), centroids) finally res.unpersist()
       }
-      .toDF("vec_id", "approx_cos")
-      .orderBy(col("approx_cos").desc, col("vec_id"))
-      .limit(poolN)
-    Pq.exactRerank(pool, emb, qv, k)
-  }
+      def encode(spark: SparkSession, e: DataFrame,
+          model: (Array[Array[Array[Double]]], Array[Array[Double]])) =
+        encodeResiduals(spark, assignResiduals(spark, e, model._2), model._1)
+      def writeModel(spark: SparkSession,
+          model: (Array[Array[Array[Double]]], Array[Array[Double]]), dir: String) = {
+        Pq.writeCodebook(spark, model._1, s"$dir/ivfpq_codebook")
+        graft.store.VectorIndex.writeCentroidRows(spark, model._2, s"$dir/ivfpq_centroids")
+      }
+      def readModel(spark: SparkSession, dir: String) =
+        (Pq.readCodebook(spark, s"$dir/ivfpq_codebook"),
+          graft.store.VectorIndex.loadCentroidsAt(spark, s"$dir/ivfpq_centroids"))
+      def meta(model: (Array[Array[Array[Double]]], Array[Array[Double]])) =
+        s""""format": "graft-ivfpq-v1", "nCells": $nCells, "m": $m, "k": $nCent, "dim": ${
+          model._1(0)(0).length * m}"""
+      override def probe(enc: DataFrame,
+          model: (Array[Array[Array[Double]]], Array[Array[Double]]), qv: Array[Double]) =
+        enc.filter(col("cluster").isin(KMeans.nearestCells(model._2, qv, nProbe): _*))
+      def score(spark: SparkSession, scan: DataFrame,
+          model: (Array[Array[Array[Double]]], Array[Array[Double]]),
+          qv: Array[Double], qn: Double) = {
+        import spark.implicits._
+        val bcTab = spark.sparkContext.broadcast(Pq.adcTable(model._1, qv))
+        val bcOff = spark.sparkContext.broadcast(model._2.map(dot(qv, _)))
+        scan.select(col("vec_id"), col("cluster").cast("int"), col("codes"), col("norm"))
+          .as[(Long, Int, Array[Int], Double)]
+          .map { case (id, cell, codes, n) =>
+            val dot = Pq.adcDot(bcOff.value(cell), bcTab.value, codes)
+            // zero-norm corpus vectors rank LAST (the v09 guard)
+            (id, if (n > 0) dot / (qn * n) else Double.NegativeInfinity)
+          }
+          .toDF("vec_id", "approx_cos")
+      }
+    }
 
   /** One-shot IVFADC: coarse-cluster + train + encode inline, then
-    * probe/score/re-rank. Convenient as the oracle anchor; repeated
-    * queries should BUILD the persisted index once
-    * (VectorIndex.buildIvfPq) and query its codes. Result is
-    * materialized driver-side (k rows) so both corpus caches drop
-    * before returning — the annPq cache-release contract. */
+    * probe/score/re-rank (the [[Codec.oneShot]] contract). Convenient
+    * as the oracle anchor; repeated queries should BUILD the persisted
+    * index once (VectorIndex.buildIvfPq) and query its codes. */
   def annIvfPq(spark: SparkSession, e: DataFrame, queryVecId: Long,
       k: Int, nCells: Int = Cells, nProbe: Int = Probe, m: Int = Pq.M,
-      nCent: Int = Pq.K, rerank: Int = Pq.Rerank): DataFrame = {
-    val cached = e.select(col("vec_id"), col("v")).cache()
-    try {
-      val (_, centroids, _) =
-        KMeans.fit(spark, cached, nCells, 2, trackInertia = false)
-      val res = assignResiduals(spark, cached, centroids).cache()
-      try {
-        val cb = Pq.train(spark, res, m, nCent)
-        // The IVFADC pool sizes on the PROBED sliver (query-dependent
-        // — no build metadata can replace it), so the kernel's count
-        // job stays; cache the codes so the count doesn't re-encode,
-        // and release only AFTER the collect materializes the plan
-        // (the r13 ADVICE ordering hole).
-        val enc = encodeResiduals(spark, res, cb).cache()
-        try {
-          val qv = cached.filter(col("vec_id") === queryVecId)
-            .select("v").head().getSeq[Double](0).toArray
-          val out = adcCellTopK(spark, enc, cb, centroids, cached, qv,
-            Some(queryVecId), k, nProbe, rerank)
-          spark.createDataFrame(
-            new java.util.ArrayList(java.util.Arrays.asList(out.collect(): _*)),
-            out.schema)
-        } finally enc.unpersist()
-      } finally res.unpersist()
-    } finally cached.unpersist()
-  }
+      nCent: Int = Pq.K, rerank: Int = Pq.Rerank): DataFrame =
+    Codec.oneShot(spark, codec(nCells, nProbe, m, nCent), e, queryVecId, k, rerank)
 
   /** v10 entry (*rows-only*; VectorSpec: all-probe + full-pool ==
     * brute exactly, default probes keep recall, per-cell codes

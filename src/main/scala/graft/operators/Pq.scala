@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions._
+import graft.store.IvfSnapshot.dot
 
 /** Product Quantization ANN (SURVEY.md §2 v09) — the MEMORY
   * compression scale path next to LSH (v05) and IVF (v07), after
@@ -73,13 +74,19 @@ object Pq {
     * corpus (or a budgeted pool from the sweep curve) cooperates. */
   val RoutingNote = "SQ8 is the fixed-dial rung that holds every measured decade"
 
+  /** Squared L2 distance of centroid `c` to v's subvector at `off`. */
+  private[operators] def subDist(c: Array[Double], v: Array[Double], off: Int): Double = {
+    var d = 0.0; var j = 0
+    while (j < c.length) { val t = v(off + j) - c(j); d += t * t; j += 1 }
+    d
+  }
+
+  /** The nearest centroid of `cb` to v's subvector at `off`, ties to
+    * the lowest id. */
   private[operators] def argmin(cb: Array[Array[Double]], v: Array[Double], off: Int): Int = {
-    var best = 0; var bestD = Double.MaxValue
-    var c = 0
+    var best = 0; var bestD = Double.MaxValue; var c = 0
     while (c < cb.length) {
-      val cc = cb(c)
-      var d = 0.0; var j = 0
-      while (j < cc.length) { val t = v(off + j) - cc(j); d += t * t; j += 1 }
+      val d = subDist(cb(c), v, off)
       if (d < bestD) { bestD = d; best = c }
       c += 1
     }
@@ -148,72 +155,95 @@ object Pq {
     e.select(col("vec_id"), col("v")).as[(Long, Array[Double])]
       .map { case (id, v) =>
         val sl = v.length / m
-        val codes = Array.tabulate(m)(s => argmin(bc.value(s), v, s * sl))
-        var n2 = 0.0; var j = 0
-        while (j < v.length) { n2 += v(j) * v(j); j += 1 }
-        (id, codes, math.sqrt(n2))
+        (id, Array.tabulate(m)(s => argmin(bc.value(s), v, s * sl)), math.sqrt(dot(v, v)))
       }
       .toDF("vec_id", "codes", "norm")
   }
 
-  /** ADC scoring + exact re-rank over an ALREADY-ENCODED code table —
-    * the query half shared by the in-memory annPq and the persisted
-    * index (graft.store.VectorIndex.annPq), so the two paths cannot
-    * drift. `emb` (vec_id, v) is touched only for the query vector
-    * and the exact re-rank of the bounded rerank×k pool (point
-    * lookups by vec_id — at 100 TB the scan that streams is `enc`,
-    * M bytes + one double per vector). */
-  def adcTopK(spark: SparkSession, enc: DataFrame,
-      cb: Array[Array[Array[Double]]], emb: DataFrame,
-      queryVecId: Long, k: Int, rerank: Int = Rerank,
-      streamN: Option[Long] = None): DataFrame = {
-    import spark.implicits._
-    val m = cb.length
-    val qv = emb.filter(col("vec_id") === queryVecId)
-      .select("v").head().getSeq[Double](0).toArray
-    val sub = qv.length / m
-    // Driver-side M×K inner-product table (8 KB) — ONE per query.
-    val tab = Array.tabulate(m, cb(0).length) { (s, c) =>
-      var d = 0.0; var j = 0
-      while (j < sub) { d += qv(s * sub + j) * cb(s)(c)(j); j += 1 }
-      d
-    }
-    var qn2 = 0.0; qv.foreach(x => qn2 += x * x)
-    val qn = math.sqrt(qn2)
-    require(qn > 0, s"zero-norm query vector $queryVecId — cosine undefined")
-    val bcTab = spark.sparkContext.broadcast(tab)
-    // Density-scaled pool. `streamN` folds the count OUT of the
-    // per-query path (VERDICT r13 #5 — the count job was a measured
-    // 1.88× on v13's one-shot): persisted paths pass the build-time n
-    // from the artifact metadata (a tombstoned stream is only ever
-    // SMALLER, so the metadata pool over-covers — conservative);
-    // one-shot paths pass the corpus count they already hold. The
-    // explicit count stays as the no-information fallback.
-    val poolN = scaledPool(streamN.getOrElse(enc.count()), k, rerank)
-    val pool = enc.select(col("vec_id"), col("codes"), col("norm"))
-      .as[(Long, Array[Int], Double)]
-      .filter(_._1 != queryVecId)
-      .map { case (id, codes, n) =>
-        var s = 0; var dot = 0.0
-        while (s < codes.length) { dot += bcTab.value(s)(codes(s)); s += 1 }
-        // Zero-norm corpus vectors rank LAST (cosine undefined), not
-        // first: an unguarded /0 yields ±Infinity/NaN, which a
-        // descending sort floats to the TOP of the pool.
-        (id, if (n > 0) dot / (qn * n) else Double.NegativeInfinity)
-      }
-      .toDF("vec_id", "approx_cos")
-      .orderBy(col("approx_cos").desc, col("vec_id"))
-      .limit(poolN)
-    exactRerank(pool, emb, qv, k)
+  /** The driver-side M×K inner-product table of a query against the
+    * codebooks (8 KB at the defaults) — ONE per query, shared by flat
+    * PQ and IVFADC (whose residual codes add a q·c(cell) offset). */
+  private[operators] def adcTable(cb: Array[Array[Array[Double]]],
+      qv: Array[Double]): Array[Array[Double]] = {
+    val sub = qv.length / cb.length
+    Array.tabulate(cb.length, cb(0).length)((s, c) =>
+      dot(qv.slice(s * sub, (s + 1) * sub), cb(s)(c)))
   }
 
-  /** The exact re-rank tail shared by every ADC pipeline (flat PQ
-    * here, IVFADC in [[IvfPq]]): equi-join the bounded pool back to
-    * the embeddings by vec_id and order by TRUE cosine. The query
-    * vector is already on the driver (qv) — rebuilt as a literal
-    * column instead of re-filtering `emb`, which on the persisted
-    * serving path would cost a SECOND full embeddings scan per query
-    * just to re-fetch one row. */
+  /** from + Σ_s tab(s)(code_s) — the ADC inner product of one code row. */
+  private[operators] def adcDot(from: Double, tab: Array[Array[Double]],
+      codes: Array[Int]): Double = {
+    var d = from; var s = 0
+    while (s < codes.length) { d += tab(s)(codes(s)); s += 1 }
+    d
+  }
+
+  /** (vec_id, approx_cos) over a flat (vec_id, codes, norm) code scan:
+    * one narrow typed map. Zero-norm corpus vectors rank LAST (cosine
+    * undefined), not first: an unguarded /0 yields ±Infinity/NaN,
+    * which a descending sort floats to the TOP of the pool. */
+  private[operators] def approxCos(spark: SparkSession, scan: DataFrame,
+      qn: Double)(dotOf: Array[Int] => Double): DataFrame = {
+    import spark.implicits._
+    scan.select(col("vec_id"), col("codes"), col("norm"))
+      .as[(Long, Array[Int], Double)]
+      .map { case (id, codes, n) =>
+        (id, if (n > 0) dotOf(codes) / (qn * n) else Double.NegativeInfinity)
+      }
+      .toDF("vec_id", "approx_cos")
+  }
+
+  /** The codebook as flat (s, c, dim, x) rows and back — m×k×subDim
+    * doubles, one small parquet file. */
+  private[graft] def writeCodebook(spark: SparkSession,
+      cb: Array[Array[Array[Double]]], path: String): Unit = {
+    import spark.implicits._
+    val rows = for {
+      s <- cb.indices; c <- cb(s).indices; d <- cb(s)(c).indices
+    } yield (s, c, d, cb(s)(c)(d))
+    rows.toDF("s", "c", "dim", "x")
+      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(path)
+  }
+
+  private[graft] def readCodebook(spark: SparkSession,
+      path: String): Array[Array[Array[Double]]] = {
+    val rows = spark.read.parquet(path).collect()
+    val m = rows.map(_.getInt(0)).max + 1
+    val k = rows.map(_.getInt(1)).max + 1
+    val sub = rows.map(_.getInt(2)).max + 1
+    val cb = Array.fill(m, k)(new Array[Double](sub))
+    rows.foreach(r => cb(r.getInt(0))(r.getInt(1))(r.getInt(2)) = r.getDouble(3))
+    cb
+  }
+
+  /** The PQ codec: M codes of the nearest per-subspace centroid,
+    * scored by ADC (Σ_s table(s)(code_s) / (|q|·|v|)). */
+  private[graft] def codec(m: Int = M, nCent: Int = K,
+      iters: Int = 3): Codec[Array[Array[Array[Double]]]] =
+    new Codec[Array[Array[Array[Double]]]] {
+      val name = "pq"
+      val codes = "pq_codes"
+      def train(spark: SparkSession, e: DataFrame) = Pq.train(spark, e, m, nCent, iters)
+      def encode(spark: SparkSession, e: DataFrame, cb: Array[Array[Array[Double]]]) =
+        Pq.encode(spark, e, cb)
+      def writeModel(spark: SparkSession, cb: Array[Array[Array[Double]]], dir: String) =
+        writeCodebook(spark, cb, s"$dir/pq_codebook")
+      def readModel(spark: SparkSession, dir: String) = readCodebook(spark, s"$dir/pq_codebook")
+      def meta(cb: Array[Array[Array[Double]]]) =
+        s""""format": "graft-pq-v1", "m": $m, "k": $nCent, "dim": ${cb(0)(0).length * m}"""
+      def score(spark: SparkSession, scan: DataFrame, cb: Array[Array[Array[Double]]],
+          qv: Array[Double], qn: Double) = {
+        val bcTab = spark.sparkContext.broadcast(adcTable(cb, qv))
+        approxCos(spark, scan, qn)(codes => adcDot(0.0, bcTab.value, codes))
+      }
+    }
+
+  /** The exact re-rank tail shared by every coded rung: equi-join the
+    * bounded pool back to the embeddings by vec_id and order by TRUE
+    * cosine. The query vector is already on the driver (qv) — rebuilt
+    * as a literal column instead of re-filtering `emb`, which on the
+    * persisted serving path would cost a SECOND full embeddings scan
+    * per query just to re-fetch one row. */
   private[operators] def exactRerank(pool: DataFrame, emb: DataFrame,
       qv: Array[Double], k: Int): DataFrame = {
     val qCol = array(qv.toIndexedSeq.map(lit): _*)
@@ -223,37 +253,14 @@ object Pq {
       .limit(k)
   }
 
-  /** ADC top-k with train+encode inline: approximate cosine =
-    * Σ_s table(s)(code_s) / (|q|·|v|) over the code stream, exact
-    * re-rank of the top rerank×k pool. Convenient for one-shot use;
-    * repeated queries should BUILD the index once
-    * (VectorIndex.buildPq) and query the persisted codes instead of
-    * re-training per call. The bounded result is materialized
-    * (localCheckpoint) so the corpus cache can be dropped before
-    * returning — a lazily-dependent return would pin the embeddings
-    * in executor memory until clearCache (ADVICE r7). */
+  /** ADC top-k with train+encode inline: approximate cosine over the
+    * code stream, exact re-rank of the density-scaled pool (the
+    * [[Codec.oneShot]] contract). Repeated queries should BUILD the
+    * index once (VectorIndex.buildPq) and query the persisted codes
+    * instead of re-training per call. */
   def annPq(spark: SparkSession, e: DataFrame, queryVecId: Long, k: Int,
-      m: Int = M, nCent: Int = K, rerank: Int = Rerank): DataFrame = {
-    val cached = e.select(col("vec_id"), col("v")).cache()
-    try {
-      // corpus count doubles as the pool-sizing streamN (encode is
-      // 1:1), so the code stream is consumed exactly ONCE by the
-      // scoring pass — no codes cache, no extra count job (the r13
-      // ADVICE unpersist-before-collect hole closes with the cache)
-      val n = cached.count()
-      val cb = train(spark, cached, m, nCent)
-      val enc = encode(spark, cached, cb)
-      val res = adcTopK(spark, enc, cb, cached, queryVecId, k, rerank, Some(n))
-      // Materialize the k rows ON THE DRIVER (not localCheckpoint:
-      // its executor-stored blocks have no lineage, so an executor
-      // loss after return would permanently break the DataFrame) —
-      // k rows is human-scale, and the rebuilt frame survives any
-      // cluster event while letting the corpus cache drop now.
-      spark.createDataFrame(
-        new java.util.ArrayList(java.util.Arrays.asList(res.collect(): _*)),
-        res.schema)
-    } finally cached.unpersist()
-  }
+      m: Int = M, nCent: Int = K, rerank: Int = Rerank): DataFrame =
+    Codec.oneShot(spark, codec(m, nCent), e, queryVecId, k, rerank)
 
   /** v09 entry (*rows-only*; VectorSpec: full-pool == brute exactly,
     * default-pool recall vs brute, code width == M). Same output
@@ -262,5 +269,94 @@ object Pq {
     val e = graft.sources.Tables.embeddings(spark, dir)
       .select(col("vec_id"), toDouble(col("embedding")).as("v"))
     annPq(spark, e, queryVecId = 0, k = 10)
+  }
+}
+
+/** A coded rung's codec — ONLY what differs between PQ, SQ8, BQ and
+  * IVFADC: training, encoding, the model's parquet rows, the artifact
+  * names, and the per-row approximate score. Everything else is the
+  * one filter-then-verify pipeline in [[Codec$]]: an approximate pool
+  * over the codes, then an exact re-rank of that pool. A new codec
+  * plugs in by implementing this trait; the one-shot, the persisted
+  * build/probe (graft.store.VectorIndex) and the query panel
+  * (AnnPanel) then serve it unchanged. `M` is the driver-side model. */
+private[graft] trait Codec[M] {
+  /** Artifact stem: `<name>.json` is the persisted metadata echo. */
+  def name: String
+  /** The persisted code table under an index dir. */
+  def codes: String
+  /** Model from (vec_id, v) rows — the caller caches them. */
+  def train(spark: SparkSession, e: DataFrame): M
+  /** (vec_id, codes…, norm) rows of (vec_id, v) rows; narrow, 1:1. */
+  def encode(spark: SparkSession, e: DataFrame, model: M): DataFrame
+  def writeModel(spark: SparkSession, model: M, dir: String): Unit
+  def readModel(spark: SparkSession, dir: String): M
+  /** The metadata echo's fields (format and dials, JSON members). */
+  def meta(model: M): String
+  /** The part of the code table a query ranks — all of it, except
+    * where the codec prunes by cell (IVFADC). */
+  def probe(enc: DataFrame, model: M, qv: Array[Double]): DataFrame = enc
+  /** (vec_id, score) over a code scan, ranked by [[rank]] then vec_id. */
+  def score(spark: SparkSession, scan: DataFrame, model: M,
+      qv: Array[Double], qn: Double): DataFrame
+  def rank: Column = col("approx_cos").desc
+}
+
+private[graft] object Codec {
+
+  /** The query vector of corpus row `vecId` — the one fetch every
+    * by-id door makes. */
+  def vectorOf(emb: DataFrame, vecId: Long): Array[Double] =
+    emb.filter(col("vec_id") === vecId).select("v").head().getSeq[Double](0).toArray
+
+  /** THE coded-rung query half: approximate scores over the code table
+    * `enc` (minus `exclude`, semi-joined to `candidates` when given),
+    * the top density-scaled pool of them (Pq.scaledPool) by
+    * TakeOrderedAndProject, then the exact re-rank of that pool against
+    * `emb` (vec_id, v) — so approximation error steers pool membership,
+    * never the final ordering. `streamN` is enc's row count when the
+    * caller knows it (the corpus count of a one-shot, the build count
+    * of a persisted rung: a tombstoned stream is only ever SMALLER, so
+    * the pool over-covers), sparing a count job per query; a codec
+    * that prunes enc (IVFADC's probed cells) counts what it kept. The
+    * count is taken BEFORE the candidate semi-join: on the persisted
+    * path that keeps it a partition-pruned metadata read, and a
+    * filtered stream only ever needs a SMALLER pool. */
+  def topK[M](spark: SparkSession, codec: Codec[M], model: M, enc: DataFrame,
+      emb: DataFrame, qv: Array[Double], exclude: Option[Long], k: Int,
+      rerank: Int, streamN: Option[Long] = None,
+      candidates: Option[DataFrame] = None): DataFrame = {
+    import graft.store.VectorIndex.{excluded, within}
+    val qn = math.sqrt(dot(qv, qv))
+    require(qn > 0, s"zero-norm query vector${exclude.fold("")(" " + _)} — cosine undefined")
+    val sliver = codec.probe(enc, model, qv)
+    val poolN = Pq.scaledPool(
+      (if (sliver eq enc) streamN else None).getOrElse(sliver.count()), k, rerank)
+    val pool = codec.score(spark, excluded(within(sliver, candidates), exclude),
+        model, qv, qn)
+      .orderBy(codec.rank, col("vec_id"))
+      .limit(poolN)
+    Pq.exactRerank(pool, emb, qv, k)
+  }
+
+  /** THE one-shot: train + encode inline over the cached corpus, rank
+    * through [[topK]], and return the k rows materialized ON THE
+    * DRIVER (not localCheckpoint: its executor-stored blocks have no
+    * lineage, so an executor loss after return would break the frame)
+    * — so every cache this call made drops before it returns. The
+    * corpus count doubles as the pool-sizing streamN (encode is 1:1),
+    * so the code stream is consumed once by the scoring pass. */
+  def oneShot[M](spark: SparkSession, codec: Codec[M], e: DataFrame,
+      queryVecId: Long, k: Int, rerank: Int): DataFrame = {
+    val cached = e.select(col("vec_id"), col("v")).cache()
+    try {
+      val n = cached.count()
+      val model = codec.train(spark, cached)
+      val res = topK(spark, codec, model, codec.encode(spark, cached, model),
+        cached, vectorOf(cached, queryVecId), Some(queryVecId), k, rerank, Some(n))
+      spark.createDataFrame(
+        new java.util.ArrayList(java.util.Arrays.asList(res.collect(): _*)),
+        res.schema)
+    } finally cached.unpersist()
   }
 }

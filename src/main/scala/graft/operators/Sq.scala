@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions._
@@ -130,73 +130,50 @@ object Sq {
       .toDF("vec_id", "codes", "norm")
   }
 
-  /** Byte-weighted scoring + exact re-rank over an already-encoded
-    * code table — the query half, shared so a persisted-codes path
-    * cannot drift from the one-shot form. */
-  def sqTopK(spark: SparkSession, enc: DataFrame,
-      mins: Array[Double], maxs: Array[Double], emb: DataFrame,
-      queryVecId: Long, k: Int, rerank: Int = Rerank,
-      streamN: Option[Long] = None): DataFrame = {
-    import spark.implicits._
-    val qv = emb.filter(col("vec_id") === queryVecId)
-      .select("v").head().getSeq[Double](0).toArray
-    var qn2 = 0.0; qv.foreach(x => qn2 += x * x)
-    val qn = math.sqrt(qn2)
-    require(qn > 0, s"zero-norm query vector $queryVecId — cosine undefined")
-    // Fold the affine decode into the query ONCE: offset = q·min,
-    // w_d = q_d · (max_d − min_d)/255 — the corpus pass is then pure
-    // byte-weighted adds.
-    var offset = 0.0
-    val w = new Array[Double](qv.length)
-    var j = 0
-    while (j < qv.length) {
-      offset += qv(j) * mins(j)
-      w(j) = qv(j) * (maxs(j) - mins(j)) / 255.0
-      j += 1
-    }
-    val bcW = spark.sparkContext.broadcast(w)
-    val off = offset
-    // density-scaled pool (Pq.scaledPool): fixed dials collapse a
-    // decade up; the floor keeps the small-corpus behavior identical.
-    // streamN folds the count out of the per-query path (the adcTopK
-    // convention: metadata n on persisted paths, corpus count on
-    // one-shots; explicit count only as the fallback).
-    val poolN = Pq.scaledPool(streamN.getOrElse(enc.count()), k, rerank)
-    val pool = enc.select(col("vec_id"), col("codes"), col("norm"))
-      .as[(Long, Array[Int], Double)]
-      .filter(_._1 != queryVecId)
-      .map { case (id, codes, n) =>
-        var dot = off; var d = 0
-        while (d < codes.length) { dot += bcW.value(d) * codes(d); d += 1 }
-        // zero-norm corpus vectors rank LAST (the v09 guard)
-        (id, if (n > 0) dot / (qn * n) else Double.NegativeInfinity)
+  /** The SQ8 codec: a byte per dimension against the trained
+    * [min, max]. Scoring folds the affine decode into the query ONCE
+    * — offset = q·min, w_d = q_d·(max_d − min_d)/255 — so the corpus
+    * pass is pure byte-weighted adds. */
+  private[graft] val codec: Codec[(Array[Double], Array[Double])] =
+    new Codec[(Array[Double], Array[Double])] {
+      val name = "sq"
+      val codes = "sq_codes"
+      def train(spark: SparkSession, e: DataFrame) = Sq.train(spark, e)
+      def encode(spark: SparkSession, e: DataFrame, mm: (Array[Double], Array[Double])) =
+        Sq.encode(spark, e, mm._1, mm._2)
+      def writeModel(spark: SparkSession, mm: (Array[Double], Array[Double]), dir: String) = {
+        import spark.implicits._
+        mm._1.indices.map(i => (i, mm._1(i), mm._2(i))).toDF("dim", "mn", "mx")
+          .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/sq_model")
       }
-      .toDF("vec_id", "approx_cos")
-      .orderBy(col("approx_cos").desc, col("vec_id"))
-      .limit(poolN)
-    Pq.exactRerank(pool, emb, qv, k)
-  }
+      def readModel(spark: SparkSession, dir: String) = {
+        val rows = spark.read.parquet(s"$dir/sq_model").collect()
+        val dim = rows.map(_.getInt(0)).max + 1
+        val mins = new Array[Double](dim); val maxs = new Array[Double](dim)
+        rows.foreach { r => mins(r.getInt(0)) = r.getDouble(1); maxs(r.getInt(0)) = r.getDouble(2) }
+        (mins, maxs)
+      }
+      def meta(mm: (Array[Double], Array[Double])) =
+        s""""format": "graft-sq8-v1", "dim": ${mm._1.length}"""
+      def score(spark: SparkSession, scan: DataFrame, mm: (Array[Double], Array[Double]),
+          qv: Array[Double], qn: Double) = {
+        val (mins, maxs) = mm
+        val offset = graft.store.IvfSnapshot.dot(qv, mins)
+        val bcW = spark.sparkContext.broadcast(
+          Array.tabulate(qv.length)(j => qv(j) * (maxs(j) - mins(j)) / 255.0))
+        Pq.approxCos(spark, scan, qn) { codes =>
+          var dot = offset; var d = 0
+          while (d < codes.length) { dot += bcW.value(d) * codes(d); d += 1 }
+          dot
+        }
+      }
+    }
 
-  /** One-shot SQ8 ANN: train + encode inline, score, re-rank. The
-    * bounded k-row result is materialized driver-side (the annPq
-    * cache-release contract). */
+  /** One-shot SQ8 ANN: train + encode inline, score, re-rank (the
+    * [[Codec.oneShot]] contract). */
   def annSq(spark: SparkSession, e: DataFrame, queryVecId: Long, k: Int,
-      rerank: Int = Rerank): DataFrame = {
-    val cached = e.select(col("vec_id"), col("v")).cache()
-    try {
-      // corpus count = pool streamN (encode is 1:1): the code stream
-      // is consumed exactly once by the scoring pass — no codes
-      // cache, no count job (the annPq convention)
-      val n = cached.count()
-      val (mins, maxs) = train(spark, cached)
-      val enc = encode(spark, cached, mins, maxs)
-      val res = sqTopK(spark, enc, mins, maxs, cached, queryVecId, k,
-        rerank, Some(n))
-      spark.createDataFrame(
-        new java.util.ArrayList(java.util.Arrays.asList(res.collect(): _*)),
-        res.schema)
-    } finally cached.unpersist()
-  }
+      rerank: Int = Rerank): DataFrame =
+    Codec.oneShot(spark, codec, e, queryVecId, k, rerank)
 
   /** v13 entry (*rows-only*; VectorSpec: full-pool == brute exactly,
     * default pool recall, codes bounded [0,255], constant-dim

@@ -277,18 +277,14 @@ object VectorQueries {
   def annIvf(
       spark: SparkSession, e: DataFrame, queryVecId: Long, k: Int,
       nCells: Int, nProbe: Int, trainIters: Int = 2): DataFrame = {
+    import graft.store.VectorIndex.{excluded, ranked}
     val cached = e.select(col("vec_id"), col("v")).cache()
     val (assigned, centroids, _) =
       KMeans.fit(spark, cached, nCells, trainIters, trackInertia = false)
-    val qv = cached.filter(col("vec_id") === queryVecId)
-      .select("v").head().getSeq[Double](0).toArray // one row, dim doubles
-    val qCol = array(qv.toIndexedSeq.map(lit): _*)
-    cached.join(assigned, "vec_id")
-      .filter(col("cluster").isin(KMeans.nearestCells(centroids, qv, nProbe): _*))
-      .filter(col("vec_id") =!= queryVecId)
-      .select(col("vec_id"), cosineNative6(col("v"), qCol).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id"))
-      .limit(k)
+    val qv = Codec.vectorOf(cached, queryVecId)
+    ranked(excluded(cached.join(assigned, "vec_id")
+        .filter(col("cluster").isin(KMeans.nearestCells(centroids, qv, nProbe): _*)),
+      Some(queryVecId)), qv).limit(k)
   }
 
   /** Scalable brute-force batch k-NN kernel: the CORPUS streams
@@ -556,30 +552,18 @@ object VectorQueries {
       twoLevelCells: Int = V15TwoLevelCells,
       reprobeMax: Int = V15ReprobeMax,
       cellCap: Int = V15CellCap): DataFrame = {
-    import e0.sparkSession.implicits._
-    val spark = e0.sparkSession
     val e = graft.plans.Par.ensureParallelism(
         e0.withColumn("nv", normNative(col("v"))))
       .cache()
-    try {
-      val n = e.count()
-      val nCells = math.max(8, (n / V15CellTarget).toInt)
-      // queries × k rows out — the cache-release contract pins them
-      // EXECUTOR-side (localCheckpoint cuts the lineage off the
-      // scoped cache as executor blocks; the d07/h16 precedent), not
-      // with a driver collect() that would OOM at the 100 TB target.
-      // Plan-shape audit lives on knnBatchIvfLazy (the checkpoint
-      // truncates the visible plan to its RDD scan).
-      val plan =
-        if (smallModelExhaustive(nCells, nProbe, reprobeMax, twoLevelCells))
-          bruteBatchPlan(spark, e, k)
-        else {
-          val model = KMeans.fitCells(spark, e.select(col("vec_id"), col("v")),
-            nCells, 2, twoLevelCells, cellCap, V15CellTarget)
-          batchIvfPlan(spark, e, model, k, nProbe, reprobeMax, n)
-        }
-      plan.orderBy("query_id", "rk").pinned
-    } finally e.unpersist()
+    // queries × k rows out — the cache-release contract pins them
+    // EXECUTOR-side (localCheckpoint cuts the lineage off the scoped
+    // cache as executor blocks; the d07/h16 precedent), not with a
+    // driver collect() that would OOM at the 100 TB target. Plan-shape
+    // audit lives on knnBatchIvfLazy (the checkpoint truncates the
+    // visible plan to its RDD scan).
+    try knnBatchIvfLazy(e0.sparkSession, e, k, nProbe, reprobeMax, twoLevelCells, cellCap)
+      .orderBy("query_id", "rk").pinned
+    finally e.unpersist()
   }
 
   /** SMALL-MODEL DEGENERATION of the adaptive top-up (VERDICT r15
@@ -643,14 +627,15 @@ object VectorQueries {
     * the exhaustive small-model regime, cell-blocked otherwise). */
   private[graft] def knnBatchIvfLazy(spark: SparkSession,
       e: DataFrame, k: Int, nProbe: Int = V15Probe,
-      reprobeMax: Int = V15ReprobeMax): DataFrame = {
+      reprobeMax: Int = V15ReprobeMax, twoLevelCells: Int = Int.MaxValue,
+      cellCap: Int = V15CellCap): DataFrame = {
     val n = e.count()
     val nCells = math.max(8, (n / V15CellTarget).toInt)
-    if (smallModelExhaustive(nCells, nProbe, reprobeMax, Int.MaxValue))
+    if (smallModelExhaustive(nCells, nProbe, reprobeMax, twoLevelCells))
       bruteBatchPlan(spark, e, k)
     else {
       val model = KMeans.fitCells(spark, e.select(col("vec_id"), col("v")),
-        nCells, 2, twoLevelCells = Int.MaxValue, V15CellCap, V15CellTarget)
+        nCells, 2, twoLevelCells, cellCap, V15CellTarget)
       batchIvfPlan(spark, e, model, k, nProbe, reprobeMax, n)
     }
   }

@@ -65,7 +65,7 @@ final class IvfSnapshot private[store] (
 object IvfSnapshot {
 
   /** `DotProduct`'s loop: a sequential sum over the shorter length. */
-  private[store] def dot(a: Array[Double], b: Array[Double]): Double = {
+  private[graft] def dot(a: Array[Double], b: Array[Double]): Double = {
     val n = math.min(a.length, b.length)
     var s = 0.0
     var i = 0

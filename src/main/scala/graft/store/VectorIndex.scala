@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions._
-import graft.operators.{Bq, IvfPq, KMeans, Pq, Sq, VectorQueries}
+import graft.operators.{Bq, Codec, IvfPq, KMeans, Pq, Sq, VectorQueries}
 
 /** Persisted ANN index artifacts (VERDICT r7 #2) — the split that
   * makes the PQ/IVF scale stories real at 100 TB: BUILD once (train,
@@ -29,7 +29,7 @@ import graft.operators.{Bq, IvfPq, KMeans, Pq, Sq, VectorQueries}
   * Codebooks/centroids persist as flat parquet rows rather than JSON:
   * schema'd, mergeable, and loadable without a JSON parser — the
   * driver-side model is k×dim doubles either way. Both query paths
-  * byte-share their scoring with the in-memory operators (Pq.adcTopK;
+  * byte-share their scoring with the in-memory operators (Codec.topK;
   * the IVF probe predicate), so persisted and in-memory results
   * cannot drift (HippoDbSpec pins equality).
   */
@@ -109,10 +109,7 @@ object VectorIndex {
   private[graft] def open(spark: SparkSession, dir: String,
       budgetBytes: Long): Option[IvfSnapshot] = {
     import spark.implicits._
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val present = Seq("ivf_vectors", "ivf_centroids")
-      .forall(a => fs.exists(new org.apache.hadoop.fs.Path(dir, a)))
+    val present = Seq("ivf_vectors", "ivf_centroids").forall(a => exists(spark, s"$dir/$a"))
     versionToken(spark, dir).filter(_ => present).flatMap { token =>
       graft.plans.Phase(spark, "graft.serve.open") {
         val scan = spark.read.parquet(s"$dir/ivf_vectors")
@@ -198,22 +195,7 @@ object VectorIndex {
     versioned(spark, dir) {
       val revived = t.join(liveIds.select("vec_id"), Seq("vec_id"), "left_semi")
         .pinned // pin: the swaps below must not re-read a moved dir
-      RowFamilies.filter(_._1 != rebuiltFamily).foreach { case (fam, parts) =>
-        val path = s"$dir/$fam"
-        if (fs.exists(new org.apache.hadoop.fs.Path(path))) {
-          val cur = spark.read.parquet(path)
-          val famTotal = cur.count()
-          val del = cur.join(broadcast(revived), Seq("vec_id"), "left_semi").count()
-          if (del > 0)
-            HippoDb.verifiedSwap(spark, path,
-              spark.read.parquet(path)
-                .join(broadcast(revived), Seq("vec_id"), "left_anti"),
-              hadRows = famTotal > 0, expected = Some(famTotal - del),
-              // empty partitioned writes emit no files (see
-              // compactTombstones) — a fully-purged family rewrites flat
-              partitionCols = if (famTotal - del == 0) Nil else parts)
-        }
-      }
+      purge(spark, dir, revived, RowFamilies.filter(_._1 != rebuiltFamily))
       if (keptN == 0) {
         if (!fs.delete(hp, true))
           throw new java.io.IOException(
@@ -274,10 +256,13 @@ object VectorIndex {
     writeClusterPartitioned(delta, path, mode)
   }
 
-  private def tombstonesAt(spark: SparkSession, dir: String): Option[DataFrame] = {
-    val path = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(path)) Some(spark.read.parquet(s"$dir/tombstones")) else None
+  private def tombstonesAt(spark: SparkSession, dir: String): Option[DataFrame] =
+    if (exists(spark, s"$dir/tombstones")) Some(spark.read.parquet(s"$dir/tombstones")) else None
+
+  /** Whether `path` exists on its (Hadoop) filesystem. */
+  private def exists(spark: SparkSession, path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
   /** The tombstone filter every serving scan passes through: a
@@ -290,6 +275,35 @@ object VectorIndex {
       case Some(t) => scan.join(broadcast(t), Seq("vec_id"), "left_anti")
       case None => scan
     }
+
+  /** Rewrites each of `families` present under `dir` WITHOUT the ids
+    * in `ids`, through the crash-safe verifiedSwap with an exact
+    * expected count; returns rows removed per family present. */
+  private def purge(spark: SparkSession, dir: String, ids: DataFrame,
+      families: Seq[(String, Seq[String])]): Map[String, Long] = {
+    families.flatMap { case (name, parts) =>
+      val path = s"$dir/$name"
+      if (!exists(spark, path)) None
+      else {
+        val cur = spark.read.parquet(path)
+        val total = cur.count()
+        val del = cur.join(broadcast(ids), Seq("vec_id"), "left_semi").count()
+        if (del > 0)
+          HippoDb.verifiedSwap(spark, path,
+            spark.read.parquet(path).join(broadcast(ids), Seq("vec_id"), "left_anti"),
+            hadRows = total > 0, expected = Some(total - del),
+            // A FULLY purged artifact (legal: verifiedSwap's
+            // expected=Some(0) contract) must not partitionBy: Spark
+            // emits NO data files for an empty partitioned write, so
+            // the tmp read-back cannot even infer a schema. A flat
+            // empty write keeps the full schema (cluster included, now
+            // a regular column) and stays readable/filterable by every
+            // serving path.
+            partitionCols = if (total - del == 0) Nil else parts)
+        Some(name -> del)
+      }
+    }.toMap
+  }
 
   /** COMPACTION: rewrite every artifact present under `dir` WITHOUT
     * its tombstoned ids, then clear the tombstone set — the
@@ -304,32 +318,9 @@ object VectorIndex {
     tombstonesAt(spark, dir) match {
       case None => Map.empty
       case Some(t) => versioned(spark, dir) {
+        val removed = purge(spark, dir, t, RowFamilies)
         val fs = new org.apache.hadoop.fs.Path(dir)
           .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val removed = RowFamilies.flatMap { case (name, parts) =>
-          val path = s"$dir/$name"
-          if (!fs.exists(new org.apache.hadoop.fs.Path(path))) None
-          else {
-            val cur = spark.read.parquet(path)
-            val total = cur.count()
-            val del = cur.join(broadcast(t), Seq("vec_id"), "left_semi").count()
-            if (del > 0)
-              HippoDb.verifiedSwap(spark, path,
-                spark.read.parquet(path)
-                  .join(broadcast(t), Seq("vec_id"), "left_anti"),
-                hadRows = total > 0, expected = Some(total - del),
-                // A FULLY tombstoned artifact (every id deleted —
-                // legal: verifiedSwap's expected=Some(0) contract)
-                // must not partitionBy: Spark emits NO data files
-                // for an empty partitioned write, so the tmp
-                // read-back cannot even infer a schema. A flat empty
-                // write keeps the full schema (cluster included, now
-                // a regular column) and stays readable/filterable by
-                // every serving path.
-                partitionCols = if (total - del == 0) Nil else parts)
-            Some(name -> del)
-          }
-        }.toMap
         if (!fs.delete(new org.apache.hadoop.fs.Path(s"$dir/tombstones"), true))
           throw new java.io.IOException(
             s"compactTombstones: artifacts rewritten but $dir/tombstones was not cleared")
@@ -337,53 +328,58 @@ object VectorIndex {
       }
     }
 
-  // ------------------------------------------------------------- PQ
+  // ------------------------------------------------- PQ, SQ8 and BQ
 
-  /** Train + encode once, persist the scoring artifacts. `e` must be
-    * (vec_id, v: array<double>) rows. */
-  def buildPq(spark: SparkSession, e: DataFrame, dir: String,
-      m: Int = Pq.M, k: Int = Pq.K, iters: Int = 3): Unit = {
+  /** Train + encode once and persist a flat coded rung (PQ, SQ8, BQ —
+    * see graft.operators.Codec): the code table the serving scan
+    * streams, the model rows, and a `{format, dials, n}` metadata
+    * echo whose build count sizes every probe's pool without a count
+    * job. `e` must be (vec_id, v: array<double>) rows. */
+  private def buildCoded[M](spark: SparkSession, codec: Codec[M],
+      e: DataFrame, dir: String): Unit = {
     val cached = e.select(col("vec_id"), col("v")).cache()
     try {
       val n = cached.count()
-      val cb = Pq.train(spark, cached, m, k, iters)
-      Pq.encode(spark, cached, cb)
-        .write.mode(SaveMode.Overwrite).parquet(s"$dir/pq_codes")
-      writeCodebookRows(spark, cb, s"$dir/pq_codebook")
-      val dim = cb(0)(0).length * m
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/pq.json"),
-        s"""{"format": "graft-pq-v1", "m": $m, "k": $k, "dim": $dim, "n": $n}""")
-      reviveTombstones(spark, dir, cached, "pq_codes")
+      val model = codec.train(spark, cached)
+      codec.encode(spark, cached, model)
+        .write.mode(SaveMode.Overwrite).parquet(s"$dir/${codec.codes}")
+      codec.writeModel(spark, model, dir)
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/${codec.name}.json"),
+        s"{${codec.meta(model)}, \"n\": $n}")
+      reviveTombstones(spark, dir, cached, codec.codes)
     } finally cached.unpersist()
   }
 
-  /** The driver-side model back from its flat rows (m×k×subDim
-    * doubles — 8 KB at the defaults). */
-  def loadPqCodebook(spark: SparkSession, dir: String): Array[Array[Array[Double]]] =
-    loadCodebookAt(spark, s"$dir/pq_codebook")
+  /** Query a PERSISTED coded rung through the shared query half
+    * (Codec.topK — one-shot and persisted paths cannot drift): the
+    * streamed scan is the code table minus tombstones; `emb` is touched
+    * only for the exact re-rank of the bounded pool. */
+  private def probeCoded[M](spark: SparkSession, codec: Codec[M], dir: String,
+      emb: DataFrame, queryVec: Array[Double], excludeVecId: Option[Long],
+      k: Int, rerank: Int, candidates: Option[DataFrame] = None): DataFrame =
+    Codec.topK(spark, codec, codec.readModel(spark, dir),
+      minusTombstones(spark, dir, spark.read.parquet(s"$dir/${codec.codes}")),
+      emb, queryVec, excludeVecId, k, rerank,
+      metaCount(dir, s"${codec.name}.json"), candidates)
 
-  private def loadCodebookAt(spark: SparkSession, path: String): Array[Array[Array[Double]]] = {
-    val rows = spark.read.parquet(path).collect()
-    val m = rows.map(_.getInt(0)).max + 1
-    val k = rows.map(_.getInt(1)).max + 1
-    val sub = rows.map(_.getInt(2)).max + 1
-    val cb = Array.fill(m, k)(new Array[Double](sub))
-    rows.foreach(r => cb(r.getInt(0))(r.getInt(1))(r.getInt(2)) = r.getDouble(3))
-    cb
+  /** [[probeCoded]] for corpus row `queryVecId`, itself excluded. */
+  private def probeCodedById[M](spark: SparkSession, codec: Codec[M], dir: String,
+      emb: DataFrame, queryVecId: Long, k: Int, rerank: Int): DataFrame = {
+    val e = emb.select(col("vec_id"), col("v"))
+    probeCoded(spark, codec, dir, e, Codec.vectorOf(e, queryVecId), Some(queryVecId),
+      k, rerank)
   }
 
-  /** Query the PERSISTED PQ index: the streamed scan is pq_codes
-    * (M ints + one double per vector); `emb` is touched only for the
-    * query vector and the exact re-rank of the bounded pool. Same
-    * output contract as Pq.annPq. */
+  /** PQ: M ints + one norm per vector (pq_codes), the m×k×subDim
+    * codebook rows (pq_codebook), pq.json. */
+  def buildPq(spark: SparkSession, e: DataFrame, dir: String,
+      m: Int = Pq.M, k: Int = Pq.K, iters: Int = 3): Unit =
+    buildCoded(spark, Pq.codec(m, k, iters), e, dir)
+
+  /** Query the persisted PQ rung; same output contract as Pq.annPq. */
   def annPq(spark: SparkSession, dir: String, emb: DataFrame,
-      queryVecId: Long, k: Int, rerank: Int = Pq.Rerank): DataFrame = {
-    val cb = loadPqCodebook(spark, dir)
-    val enc = minusTombstones(spark, dir, spark.read.parquet(s"$dir/pq_codes"))
-    Pq.adcTopK(spark, enc, cb,
-      emb.select(col("vec_id"), col("v")), queryVecId, k, rerank,
-      metaCount(dir, "pq.json"))
-  }
+      queryVecId: Long, k: Int, rerank: Int = Pq.Rerank): DataFrame =
+    probeCodedById(spark, Pq.codec(), dir, emb, queryVecId, k, rerank)
 
   /** The build-time row count from an artifact's metadata echo — the
     * pool-sizing streamN without a per-query count job (VERDICT r13
@@ -408,82 +404,28 @@ object VectorIndex {
       } catch { case _: java.io.IOException => None }
   }
 
-  // ------------------------------------------------------------ SQ8
+  /** SQ8: byte codes (sq_codes) + the per-dimension [min,max] model
+    * (sq_model, 2×dim doubles), sq.json. The serving scan streams dim
+    * ints + one norm per vector — 8× under full f64 at recall ≈ 1 (the
+    * ladder's memory-first rung; see graft.AnnLadder). */
+  def buildSq(spark: SparkSession, e: DataFrame, dir: String): Unit =
+    buildCoded(spark, Sq.codec, e, dir)
 
-  /** Persist the SQ8 artifact: byte codes + per-dimension [min,max]
-    * model (2×dim doubles). The serving scan streams dim ints + one
-    * norm per vector — 8× under full f64 at recall ≈ 1 (the ladder's
-    * memory-first rung; see graft.AnnLadder). */
-  def buildSq(spark: SparkSession, e: DataFrame, dir: String): Unit = {
-    import spark.implicits._
-    val cached = e.select(col("vec_id"), col("v")).cache()
-    try {
-      val n = cached.count()
-      val (mins, maxs) = Sq.train(spark, cached)
-      Sq.encode(spark, cached, mins, maxs)
-        .write.mode(SaveMode.Overwrite).parquet(s"$dir/sq_codes")
-      mins.indices.map(i => (i, mins(i), maxs(i)))
-        .toDF("dim", "mn", "mx")
-        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/sq_model")
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/sq.json"),
-        s"""{"format": "graft-sq8-v1", "dim": ${mins.length}, "n": $n}""")
-      reviveTombstones(spark, dir, cached, "sq_codes")
-    } finally cached.unpersist()
-  }
-
-  /** The [min,max] model back from its rows (2×dim doubles). */
-  def loadSqModel(spark: SparkSession, dir: String): (Array[Double], Array[Double]) = {
-    val rows = spark.read.parquet(s"$dir/sq_model").collect()
-    val dim = rows.map(_.getInt(0)).max + 1
-    val mins = new Array[Double](dim); val maxs = new Array[Double](dim)
-    rows.foreach { r => mins(r.getInt(0)) = r.getDouble(1); maxs(r.getInt(0)) = r.getDouble(2) }
-    (mins, maxs)
-  }
-
-  /** Query the PERSISTED SQ8 index through the SHARED scoring half
-    * (Sq.sqTopK — one-shot and persisted paths cannot drift). */
+  /** Query the persisted SQ8 rung; same output contract as Sq.annSq. */
   def annSq(spark: SparkSession, dir: String, emb: DataFrame,
-      queryVecId: Long, k: Int, rerank: Int = Sq.Rerank): DataFrame = {
-    val (mins, maxs) = loadSqModel(spark, dir)
-    val enc = minusTombstones(spark, dir, spark.read.parquet(s"$dir/sq_codes"))
-    Sq.sqTopK(spark, enc, mins, maxs,
-      emb.select(col("vec_id"), col("v")), queryVecId, k, rerank,
-      metaCount(dir, "sq.json"))
-  }
+      queryVecId: Long, k: Int, rerank: Int = Sq.Rerank): DataFrame =
+    probeCodedById(spark, Sq.codec, dir, emb, queryVecId, k, rerank)
 
-  // ------------------------------------------------------------ BQ
+  /** BQ: one signature long + norm per vector (bq_sigs) + the dim
+    * per-dimension means (bq_model), bq.json — the ladder's smallest
+    * resident table (16 B/vector; see graft.AnnLadder). */
+  def buildBq(spark: SparkSession, e: DataFrame, dir: String): Unit =
+    buildCoded(spark, Bq.codec, e, dir)
 
-  /** Persist the binary-quantization artifact: one signature long +
-    * norm per vector, plus the dim per-dimension means — the ladder's
-    * smallest resident table (16 B/vector; see graft.AnnLadder). */
-  def buildBq(spark: SparkSession, e: DataFrame, dir: String): Unit = {
-    import spark.implicits._
-    val cached = e.select(col("vec_id"), col("v")).cache()
-    try {
-      val n = cached.count()
-      val means = Bq.train(spark, cached)
-      Bq.encode(spark, cached, means)
-        .write.mode(SaveMode.Overwrite).parquet(s"$dir/bq_sigs")
-      means.indices.map(i => (i, means(i))).toDF("dim", "m")
-        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/bq_model")
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/bq.json"),
-        s"""{"format": "graft-bq-v1", "dim": ${means.length}, "n": $n}""")
-      reviveTombstones(spark, dir, cached, "bq_sigs")
-    } finally cached.unpersist()
-  }
-
-  /** Query the PERSISTED BQ index through the SHARED Hamming half
-    * (Bq.bqTopK). */
+  /** Query the persisted BQ rung; same output contract as Bq.annBq. */
   def annBq(spark: SparkSession, dir: String, emb: DataFrame,
-      queryVecId: Long, k: Int, rerank: Int = Bq.Rerank): DataFrame = {
-    val rows = spark.read.parquet(s"$dir/bq_model").collect()
-    val means = new Array[Double](rows.map(_.getInt(0)).max + 1)
-    rows.foreach(r => means(r.getInt(0)) = r.getDouble(1))
-    val enc = minusTombstones(spark, dir, spark.read.parquet(s"$dir/bq_sigs"))
-    Bq.bqTopK(spark, enc, means,
-      emb.select(col("vec_id"), col("v")), queryVecId, k, rerank,
-      metaCount(dir, "bq.json"))
-  }
+      queryVecId: Long, k: Int, rerank: Int = Bq.Rerank): DataFrame =
+    probeCodedById(spark, Bq.codec, dir, emb, queryVecId, k, rerank)
 
   // ------------------------------------------------------------ IVF
 
@@ -635,9 +577,7 @@ object VectorIndex {
     * split-layout rule cannot drift between them. */
   private[graft] def loadChildrenIndex(spark: SparkSession, dir: String,
       nFlat: Int, coarse: Array[Array[Double]]): Array[Array[Int]] = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$dir/ivf_children"))) {
+    if (exists(spark, s"$dir/ivf_children")) {
       val byGroup = spark.read.parquet(s"$dir/ivf_children").collect()
         .map(r => (r.getInt(0), r.getInt(1)))
         .groupBy(_._1)
@@ -685,9 +625,7 @@ object VectorIndex {
         // bound row (empty at buildCellBounds time) stay unbounded:
         // annIvfAdaptive probes missing cells unconditionally. An
         // appended zero vector unbounds its cell (see buildCellBounds).
-        val bp = new org.apache.hadoop.fs.Path(s"$dir/ivf_cellbounds")
-        val fs = bp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(bp)) {
+        if (exists(spark, s"$dir/ivf_cellbounds")) {
           val bounds = cellBoundRows(spark, dir).map { case (c, m, r) => (c, (m, r)) }.toMap
           val bcMeans = spark.sparkContext.broadcast(
             bounds.map { case (c, (m, _)) => (c, m) })
@@ -766,7 +704,7 @@ object VectorIndex {
 
   /** Centroid rows back as arrays indexed by cell id; with `cells`,
     * only those cells' rows are read and every other slot is null. */
-  private def loadCentroidsAt(spark: SparkSession, path: String,
+  private[graft] def loadCentroidsAt(spark: SparkSession, path: String,
       cells: Seq[Int] = null): Array[Array[Double]] = {
     val scan = spark.read.parquet(path)
     val rows = Option(cells).fold(scan)(cs => scan.filter(col("c").isin(cs: _*))).collect()
@@ -808,18 +746,18 @@ object VectorIndex {
       candidates), excludeVecId), queryVec).limit(k)
 
   /** `scan` semi-joined to the broadcast candidate ids, when given. */
-  private def within(scan: DataFrame, candidates: Option[DataFrame]): DataFrame =
+  private[graft] def within(scan: DataFrame, candidates: Option[DataFrame]): DataFrame =
     candidates.foldLeft(scan)((df, c) =>
       df.join(broadcast(c.select("vec_id")), Seq("vec_id"), "left_semi"))
 
   /** `scan` without the self-match row, when given. */
-  private def excluded(scan: DataFrame, excludeVecId: Option[Long]): DataFrame =
+  private[graft] def excluded(scan: DataFrame, excludeVecId: Option[Long]): DataFrame =
     excludeVecId.foldLeft(scan)((df, id) => df.filter(col("vec_id") =!= id))
 
   /** `scan`'s (vec_id, cos) rows against `queryVec`, by cos descending
     * then vec_id: the one cosine rank of the float probes (round-6,
     * byte-shared with the brute scan). */
-  private def ranked(scan: DataFrame, queryVec: Array[Double]): DataFrame =
+  private[graft] def ranked(scan: DataFrame, queryVec: Array[Double]): DataFrame =
     scan.select(col("vec_id"),
         cosineNative6(col("v"), array(queryVec.toIndexedSeq.map(lit): _*)).as("cos"))
       .orderBy(col("cos").desc, col("vec_id"))
@@ -1041,8 +979,7 @@ object VectorIndex {
       dir: String): Array[(Int, Array[Double], Double)] = {
     import spark.implicits._
     val path = s"$dir/ivf_cellbounds"
-    val hp = new org.apache.hadoop.fs.Path(path)
-    if (!hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp))
+    if (!exists(spark, path))
       throw new IllegalStateException(
         s"no cell bounds at $path — run buildCellBounds after build/rebuild " +
         "(appends extend live bounds)")
@@ -1117,10 +1054,8 @@ object VectorIndex {
       // hence every candidate subset.
       candidates: Option[DataFrame] = None): DataFrame = {
     val centroids = loadIvfCentroids(spark, dir)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val (coarse, children) =
-      if (fs.exists(new org.apache.hadoop.fs.Path(s"$dir/ivf_coarse"))) {
+      if (exists(spark, s"$dir/ivf_coarse")) {
         val c = loadCentroidsAt(spark, s"$dir/ivf_coarse")
         (c, loadChildrenIndex(spark, dir, centroids.length, c))
       } else (null, null)
@@ -1132,8 +1067,7 @@ object VectorIndex {
           centroids.length <= nProbe + reprobeMax)
         (centroids.length, 0)
       else (nProbe, reprobeMax)
-    if (effReprobe > 0 &&
-        !fs.exists(new org.apache.hadoop.fs.Path(s"$dir/ivf_cellbounds")))
+    if (effReprobe > 0 && !exists(spark, s"$dir/ivf_cellbounds"))
       throw new IllegalStateException(
         s"annIvfBatch: reprobeMax > 0 needs cell bounds at " +
         s"$dir/ivf_cellbounds — run buildCellBounds after build/rebuild " +
@@ -1146,30 +1080,9 @@ object VectorIndex {
     // (measured at 2M: a parquet-derived query side re-read the
     // corpus ~5×, +100 s on the batch)
     val q = graft.plans.Pins.pin(queries.select(col("vec_id"), col("v")))
-    // regime honesty at the call site (r17, VERDICT r16 #1's other
-    // half): a corpus-sized batch probes ~every cell — the partition
-    // filter prunes nothing and this form's disk re-scan measured 2×
-    // the in-entry fit (ProfBatch 2M: 88.8 vs 40.3 s fixed dial).
-    // The planner encodes it; a caller who skipped the planner gets
-    // told once, loudly, where the measured faster form lives.
+    // the batch size feeds batchIvfCore's nQueries; routing a
+    // corpus-sized batch to the in-entry form is recommendBatchRung's
     val nQ = q.count()
-    locally {
-      val probePer = (effProbe.toLong min centroids.length.toLong) +
-        effReprobe.toLong
-      val cov =
-        if (probePer >= centroids.length) 1.0
-        else 1.0 - math.exp(
-          nQ.toDouble * math.log1p(-probePer.toDouble / centroids.length))
-      // an EXPLICIT probe-all (v16b's oracle anchor, probe-all
-      // parity pins) is intentional exactness, not a routing miss
-      if (cov >= BatchFullCoverageCutoff && effProbe < centroids.length)
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          f"annIvfBatch: this batch's expected probed-cell coverage is " +
-          f"$cov%.3f — the partition filter prunes ~nothing, and at this " +
-          "shape the in-entry knnBatchIvf (cached corpus, no disk " +
-          "re-scan) measured 2x faster; see " +
-          "VectorIndex.recommendBatchRung for the priced routing")
-    }
     val qPayload = q.select(col("vec_id").as("query_id"), col("v").as("qv"),
       normNative(col("v")).as("nq"))
     def scanCells(cells: Seq[Int]): DataFrame =
@@ -1205,22 +1118,12 @@ object VectorIndex {
 
   // --------------------------------------------------------- IVFADC
 
-  private def writeCentroidRows(spark: SparkSession,
+  private[graft] def writeCentroidRows(spark: SparkSession,
       centroids: Array[Array[Double]], path: String): Unit = {
     import spark.implicits._
     val rows = for (c <- centroids.indices; d <- centroids(c).indices)
       yield (c, d, centroids(c)(d))
     rows.toDF("c", "dim", "x")
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(path)
-  }
-
-  private def writeCodebookRows(spark: SparkSession,
-      cb: Array[Array[Array[Double]]], path: String): Unit = {
-    import spark.implicits._
-    val rows = for {
-      s <- cb.indices; c <- cb(s).indices; d <- cb(s)(c).indices
-    } yield (s, c, d, cb(s)(c)(d))
-    rows.toDF("s", "c", "dim", "x")
       .coalesce(1).write.mode(SaveMode.Overwrite).parquet(path)
   }
 
@@ -1256,10 +1159,10 @@ object VectorIndex {
       val res = IvfPq.assignResiduals(spark, cached, centroids).cache()
       try {
         val cb = Pq.train(spark, res, m, k, pqIters)
+        val codec = IvfPq.codec(nCells, m = m, nCent = k)
         writeClusterPartitioned(IvfPq.encodeResiduals(spark, res, cb),
-          s"$dir/ivfpq_codes", SaveMode.Overwrite)
-        writeCodebookRows(spark, cb, s"$dir/ivfpq_codebook")
-        writeCentroidRows(spark, centroids, s"$dir/ivfpq_centroids")
+          s"$dir/${codec.codes}", SaveMode.Overwrite)
+        codec.writeModel(spark, (cb, centroids), dir)
         // Drift baseline: per-cell quantization error of the TRAINING
         // corpus under the just-trained models — what appendIvfPq's
         // arrivals are compared against. A rebuild resets the drift
@@ -1270,44 +1173,32 @@ object VectorIndex {
         val fs = new org.apache.hadoop.fs.Path(dir)
           .getFileSystem(spark.sparkContext.hadoopConfiguration)
         fs.delete(new org.apache.hadoop.fs.Path(s"$dir/ivfpq_err_appends"), true)
-        val dim = cb(0)(0).length * m
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(s"$dir/ivfpq.json"),
-          s"""{"format": "graft-ivfpq-v1", "nCells": $nCells, "m": $m, "k": $k, "dim": $dim}""")
-        reviveTombstones(spark, dir, cached, "ivfpq_codes")
+        java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/ivfpq.json"),
+          s"{${codec.meta((cb, centroids))}}")
+        reviveTombstones(spark, dir, cached, codec.codes)
       } finally res.unpersist()
     } finally cached.unpersist()
   }
 
-  /** The frozen driver-side models (residual codebooks, coarse
-    * centroids) back from their flat rows — KBs either way. */
-  def loadIvfPqModels(spark: SparkSession, dir: String)
-      : (Array[Array[Array[Double]]], Array[Array[Double]]) =
-    (loadCodebookAt(spark, s"$dir/ivfpq_codebook"),
-      loadCentroidsAt(spark, s"$dir/ivfpq_centroids"))
-
   /** Query the PERSISTED IVFADC index by VECTOR — the serving form:
     * probe cells chosen driver-side against the loaded coarse
-    * centroids, scoring is the shared IvfPq.adcCellTopK kernel, so
-    * the only index read is the partition-pruned code scan. `emb` is
-    * touched solely for the exact re-rank of the bounded pool.
-    * `candidates` is [[annIvf]]'s hybrid filter at the COMPRESSED
-    * rung, the form that holds at 10⁹+ vectors: the candidate ids
-    * semi-join the partition-pruned CODE scan before ADC scoring, and
-    * the exact re-rank touches only the filtered pool. At nProbe ==
-    * nCells and a pool covering the candidates the ranking equals the
-    * brute filtered cosine scan exactly (HippoDbSpec pins it). */
+    * centroids and scored through the shared coded-rung query half
+    * ([[probeCoded]]), so the only index read is the partition-pruned
+    * code scan. `emb` is touched solely for the exact re-rank of the
+    * bounded pool. `candidates` is [[annIvf]]'s hybrid filter at the
+    * COMPRESSED rung, the form that holds at 10⁹+ vectors: the
+    * candidate ids semi-join the partition-pruned CODE scan before ADC
+    * scoring, and the exact re-rank touches only the filtered pool. At
+    * nProbe == nCells and a pool covering the candidates the ranking
+    * equals the brute filtered cosine scan exactly (HippoDbSpec pins
+    * it). */
   def annIvfPq(spark: SparkSession, dir: String, emb: DataFrame,
       queryVec: Array[Double], k: Int, nProbe: Int = IvfPq.Probe,
       excludeVecId: Option[Long] = None,
       rerank: Int = Pq.Rerank,
-      candidates: Option[DataFrame] = None): DataFrame = {
-    val (cb, centroids) = loadIvfPqModels(spark, dir)
-    val enc = minusTombstones(spark, dir, spark.read.parquet(s"$dir/ivfpq_codes"))
-    IvfPq.adcCellTopK(spark, enc, cb, centroids,
-      emb.select(col("vec_id"), col("v")), queryVec, excludeVecId, k,
-      nProbe, rerank, candidates)
-  }
+      candidates: Option[DataFrame] = None): DataFrame =
+    probeCoded(spark, IvfPq.codec(nProbe = nProbe), dir,
+      emb.select(col("vec_id"), col("v")), queryVec, excludeVecId, k, rerank, candidates)
 
   /** BATCH k-NN at the COMPRESSED rung (r17) — [[annIvfBatch]]'s
     * IVFADC twin, the batch form that holds at 10⁹+ vectors where
@@ -1347,7 +1238,7 @@ object VectorIndex {
       rerank: Int = Pq.Rerank,
       candidates: Option[DataFrame] = None): DataFrame = {
     import spark.implicits._
-    val (cb, centroids) = loadIvfPqModels(spark, dir)
+    val (cb, centroids) = IvfPq.codec().readModel(spark, dir)
     val m = cb.length
     // query relation feeds the probe flatMap, the scoring join and
     // the re-rank payload join — the annIvfBatch pin convention
@@ -1436,7 +1327,7 @@ object VectorIndex {
     * streaming engine never re-delivers a committed batch. */
   def appendIvfPq(spark: SparkSession, dir: String, batch: DataFrame): Long = {
     refuseTombstoned(spark, dir, batch, "appendIvfPq")
-    val (cb, centroids) = loadIvfPqModels(spark, dir)
+    val (cb, centroids) = IvfPq.codec().readModel(spark, dir)
     val res = IvfPq.assignResiduals(spark,
       batch.select(col("vec_id"), col("v")), centroids).cache()
     try {
@@ -1471,10 +1362,8 @@ object VectorIndex {
     val build = spark.read.parquet(s"$dir/ivfpq_err_build")
       .groupBy("cluster")
       .agg(sum("n").as("n_build"), sum("sum_err").as("err_build"))
-    val fsPath = new org.apache.hadoop.fs.Path(s"$dir/ivfpq_err_appends")
-    val fs = fsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val appends =
-      if (fs.exists(fsPath))
+      if (exists(spark, s"$dir/ivfpq_err_appends"))
         spark.read.parquet(s"$dir/ivfpq_err_appends")
           .groupBy("cluster")
           .agg(sum("n").as("n_appended"), sum("sum_err").as("err_appended"))
@@ -1583,12 +1472,9 @@ object VectorIndex {
     * row count. Reads stats tables and directory listings only —
     * maintenance cost, never query cost. */
   def indexHealth(spark: SparkSession, dir: String): IndexHealth = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def exists(name: String) =
-      fs.exists(new org.apache.hadoop.fs.Path(s"$dir/$name"))
-    val drift = if (exists("ivfpq_err_build")) driftRatio(spark, dir) else None
-    val partitioned = Seq("ivf_vectors", "ivfpq_codes").filter(exists)
+    def has(name: String) = exists(spark, s"$dir/$name")
+    val drift = if (has("ivfpq_err_build")) driftRatio(spark, dir) else None
+    val partitioned = Seq("ivf_vectors", "ivfpq_codes").filter(has)
     val imbalance = partitioned.flatMap { a =>
       val (perCell, imb) = cellStats(spark, dir, a)
       if (perCell.isEmpty) None else Some(imb)
@@ -1596,7 +1482,7 @@ object VectorIndex {
       case Nil => None
       case xs => Some(xs.max)
     }
-    val flat = Seq("pq_codes", "sq_codes", "bq_sigs").filter(exists)
+    val flat = Seq("pq_codes", "sq_codes", "bq_sigs").filter(has)
     val debt = tombstonesAt(spark, dir).flatMap { t =>
       // LIVE rows (physical minus tombstoned) in the denominator: a
       // physical count would compress the dial exactly in the
@@ -1739,9 +1625,7 @@ object VectorIndex {
       panelN: Int, k: Int, minRecallFloor: Double)
       : (Option[RungPlan], Seq[RungPlan]) = {
     import spark.implicits._
-    val vecsPath = new org.apache.hadoop.fs.Path(s"$dir/ivf_vectors")
-    val fs = vecsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(vecsPath))
+    if (!exists(spark, s"$dir/ivf_vectors"))
       throw new IllegalStateException(
         s"recommendRung: no full-vector layout at $dir/ivf_vectors — the " +
         "dir form plans from a persisted IVF family (buildIvf/" +

@@ -174,7 +174,7 @@ class HippoDbSpec extends SparkSpec {
     assert(codes.select(max(size(col("codes")))).head().getInt(0) == Pq.M)
     assert(Files.readString(java.nio.file.Paths.get(s"$dir/pq.json")).contains("graft-pq-v1"))
     // query through the persisted index == the in-memory one-shot
-    // (both score through Pq.adcTopK; train is deterministic)
+    // (both score through Codec.topK; train is deterministic)
     val fromIndex = VectorIndex.annPq(spark, dir, e, queryVecId = 0, k = 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val inMemory = Pq.annPq(spark, e, queryVecId = 0, k = 10)
@@ -197,11 +197,11 @@ class HippoDbSpec extends SparkSpec {
     val dim = e.select(size(col("v"))).head().getInt(0)
     assert(codes.select(max(size(col("codes")))).head().getInt(0) == dim)
     assert(Files.readString(java.nio.file.Paths.get(s"$dir/sq.json")).contains("graft-sq8-v1"))
-    val (mins, maxs) = VectorIndex.loadSqModel(spark, dir)
+    val (mins, maxs) = Sq.codec.readModel(spark, dir)
     assert(mins.length == dim && maxs.length == dim)
     assert(mins.indices.forall(i => mins(i) <= maxs(i)))
     // query through the persisted index == the in-memory one-shot
-    // (both score through Sq.sqTopK; train is deterministic min/max)
+    // (both score through Codec.topK; train is deterministic min/max)
     val fromIndex = VectorIndex.annSq(spark, dir, e, queryVecId = 0, k = 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val inMemory = Sq.annSq(spark, e, queryVecId = 0, k = 10)
@@ -322,7 +322,7 @@ class HippoDbSpec extends SparkSpec {
     assert(plan.contains("TakeOrderedAndProject"),
       s"ADC pool must be top-k, never a full sort, plan:\n$plan")
     // persisted == in-memory (KMeans + Pq.train are deterministic and
-    // both paths score through IvfPq.adcCellTopK)
+    // both paths score through Codec.topK)
     val got = fromIndex.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val inMemory = IvfPq.annIvfPq(spark, e, queryVecId = 0, k = 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq

@@ -737,11 +737,11 @@ class StreamingSpec extends SparkSpec {
         .select("v").head().getSeq[Double](0).toArray
       val got = VectorIndex.annIvfPq(spark, dir, e, qv, 10, excludeVecId = Some(qid))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      val (cb, centroids) = VectorIndex.loadIvfPqModels(spark, dir)
-      val enc = IvfPq.encodeResiduals(spark,
-        IvfPq.assignResiduals(spark, e, centroids), cb)
-      val want = IvfPq.adcCellTopK(spark, enc, cb, centroids, e, qv,
-          Some(qid), k = 10, nProbe = IvfPq.Probe)
+      val codec = IvfPq.codec()
+      val model = codec.readModel(spark, dir)
+      val want = graft.operators.Codec.topK(spark, codec, model,
+          codec.encode(spark, e, model), e, qv, Some(qid), k = 10,
+          rerank = graft.operators.Pq.Rerank)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       assert(got == want, s"query $qid: persisted $got != frozen-model in-memory $want")
     }

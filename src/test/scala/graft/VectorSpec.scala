@@ -293,6 +293,26 @@ class VectorSpec extends SparkSpec {
     }
   }
 
+  test("coded one-shots (PQ, SQ8, BQ, IVFADC): rows collect the same twice; no cache outlives the call") {
+    import graft.operators.{Bq, IvfPq, Pq, Sq}
+    val e = Tables.embeddings(spark, sf0001)
+      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
+    val sc = spark.sparkContext
+    val oneShots: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "PQ" -> (() => Pq.annPq(spark, e, queryVecId = 0, k = 10)),
+      "SQ8" -> (() => Sq.annSq(spark, e, queryVecId = 0, k = 10)),
+      "BQ" -> (() => Bq.annBq(spark, e, queryVecId = 0, k = 10)),
+      "IVFADC" -> (() => IvfPq.annIvfPq(spark, e, queryVecId = 0, k = 10)))
+    for ((rung, run) <- oneShots) {
+      val before = sc.getPersistentRDDs.size
+      val df = run()
+      assert(sc.getPersistentRDDs.size <= before, s"$rung: a cache outlived the call")
+      val first = df.collect().toSeq
+      assert(first.length == 10, s"$rung: ${first.length} rows")
+      assert(df.collect().toSeq == first, s"$rung: rows changed between collects")
+    }
+  }
+
   test("IVFADC: all-probe full-pool == brute force; default probes keep recall; residual codes cover the corpus") {
     import graft.operators.IvfPq
     import graft.operators.Pq
