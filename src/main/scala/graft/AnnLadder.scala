@@ -171,7 +171,8 @@ object AnnLadder {
           }
         val t1 = System.nanoTime()
         val (ta, tc, _) = KMeans.fitTwoLevel(spark, e, nCells, 2)
-        val tTwo = (System.nanoTime() - t1) / 1e9 // checkpointed: materialized
+        ta.count()
+        val tTwo = (System.nanoTime() - t1) / 1e9
         val k1 = math.max(2, math.ceil(math.sqrt(nCells.toDouble)).toInt)
         val k2 = math.max(1, math.ceil(nCells.toDouble / k1).toInt)
         val ratio = inertiaOf(ta, tc) / flatInertia

@@ -30,15 +30,10 @@ object Bq {
   // shipped density holds BQ at recall@10 0.60 (a 2.5% pool buys
   // 1.00); SQ8 holds 1.00 untuned at 72 B — see Pq.RoutingNote.
 
-  /** Per-dimension mean — the centering model (dim doubles). */
-  def train(spark: SparkSession, e: DataFrame): Array[Double] = {
-    val rows = e.select(posexplode(col("v")).as(Seq("dim", "x")))
-      .groupBy("dim").agg(avg("x").as("m"))
-      .collect() // dim rows only
-    val m = new Array[Double](rows.length)
-    rows.foreach(r => m(r.getInt(0)) = r.getDouble(1))
-    m
-  }
+  /** Per-dimension mean — the centering model (dim doubles): the
+    * unkeyed [[KMeans.keyedMeans]]. */
+  def train(spark: SparkSession, e: DataFrame): Array[Double] =
+    KMeans.keyedMeans(e).getOrElse(Nil, Array.emptyDoubleArray)
 
   /** Encode: (vec_id, sig = sign bits vs the mean, norm). Dims past
     * 64 would need a long array; the contract is dim ≤ 64 (the test

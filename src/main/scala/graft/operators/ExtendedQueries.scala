@@ -866,13 +866,8 @@ object ExtendedQueries {
     * spec drives it with a planted separated/tied corpus. */
   private[graft] def centroidClassify(spark: SparkSession,
       e: DataFrame): DataFrame = {
-    val cents = e
-      .select(col("label"), posexplode(col("v")).as(Seq("dim", "x")))
-      .groupBy("label", "dim").agg(avg("x").as("c"))
-      .collect() // k·dim rows only — the model
-    val byLabel = cents.groupBy(_.getInt(0)).toSeq.sortBy(_._1).map {
-      case (lbl, rows) => (lbl, rows.sortBy(_.getInt(1)).map(_.getDouble(2)))
-    }
+    val byLabel = KMeans.keyedMeans(e, "label").toSeq // k·dim doubles — the model
+      .map { case (lbl, c) => (lbl.head, c) }.sortBy(_._1)
     // empty corpus: no centroids to argmax over — an empty result
     // with the contract schema, not an analysis error on array()
     if (byLabel.isEmpty)

@@ -82,7 +82,7 @@ object IvfPq {
       .as[(Long, Int, Array[Double], Double)]
       .map { case (id, cell, r, norm) =>
         val sl = r.length / m
-        (id, cell, Array.tabulate(m)(s => Pq.argmin(bc.value(s), r, s * sl)), norm)
+        (id, cell, Array.tabulate(m)(s => KMeans.nearestIndex(r, bc.value(s), s * sl)), norm)
       }
       .toDF("vec_id", "cluster", "codes", "norm")
   }
@@ -111,7 +111,7 @@ object IvfPq {
         var err = 0.0; var s = 0
         while (s < m) {
           val cents = bc.value(s)
-          err += Pq.subDist(cents(Pq.argmin(cents, r, s * sl)), r, s * sl); s += 1
+          err += KMeans.sqDist(r, cents(KMeans.nearestIndex(r, cents, s * sl)), s * sl); s += 1
         }
         (cell, err)
       }

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.plans.Pins.Pinned
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions._
@@ -18,25 +18,17 @@ import graft.functions.VectorFunctions._
   * aggregation keyed by (cluster, dim) with map-side partial
   * aggregation. The corpus is never collected; per-iteration driver
   * traffic is k×dim doubles.
+  *
+  * Every vector model graft fits or summarises goes through this
+  * object's four kernels: [[keyedMeans]] (the keyed mean: centroids,
+  * PQ codebooks, BQ means, Rocchio centroids), [[lloyd]] (the keyed
+  * Lloyd's loop of the two-level children, cell splits and PQ),
+  * [[spreadSeeds]] (its per-key seeds) and [[cellBounds]] (the
+  * per-cell cosine bounds), with [[nearestIndex]]/[[sqDist]] as the
+  * one assignment rule and metric.
   */
 object KMeans {
 
-  /** Returns (assignments (vec_id, cluster), centroids, inertia per
-    * iteration). Deterministic: init = HASH-SPREAD seeding (r10,
-    * VERDICT r9 #4) — the k vectors with the smallest
-    * xxhash64(vec_id), i.e. a deterministic uniform sample over the
-    * corpus independent of storage order. First-k-by-vec_id seeding
-    * is a trap on real corpora, which arrive SORTED (by source, by
-    * crawl date, by z-order): the first k rows then land in one
-    * region of embedding space, Lloyd's starts with k co-located
-    * centroids, and most clusters begin empty (SkewCorpusSpec pins
-    * the planted case where spread seeding strictly beats first-k
-    * inertia). One TakeOrdered top-k — never a full sort.
-    * trackInertia=false skips the per-iteration inertia action
-    * (halves the Spark jobs — assignment+centroid-update only); the
-    * convergence trace is a diagnostics concern, not a fit one.
-    * spreadSeed=false keeps the legacy first-k init (the quality
-    * comparison's baseline; not a serving mode). */
   /** Above this k the fit's per-iteration assignment routes through
     * a BROADCAST-MODEL typed map (nearestIndex) instead of the
     * literal argmin expression: the expression path recompiles its
@@ -60,15 +52,36 @@ object KMeans {
     * 33–64 band's trajectories shift by ulp-level rounding only. */
   val FitExprMaxK = 32
 
+  /** Returns (assignments (vec_id, cluster), centroids, inertia per
+    * iteration). Deterministic: init = HASH-SPREAD seeding (r10,
+    * VERDICT r9 #4) — the k vectors with the smallest
+    * xxhash64(vec_id), i.e. a deterministic uniform sample over the
+    * corpus independent of storage order. First-k-by-vec_id seeding
+    * is a trap on real corpora, which arrive SORTED (by source, by
+    * crawl date, by z-order): the first k rows then land in one
+    * region of embedding space, Lloyd's starts with k co-located
+    * centroids, and most clusters begin empty (SkewCorpusSpec pins
+    * the planted case where spread seeding strictly beats first-k
+    * inertia). One TakeOrdered top-k — never a full sort. Each
+    * iteration assigns (the literal argmin up to [[FitExprMaxK]], the
+    * typed [[nearestIndex]] map above it) and updates through
+    * [[keyedMeans]] keyed by cluster; an empty cluster keeps its
+    * centroid. trackInertia=false skips the per-iteration inertia
+    * action (halves the Spark jobs — assignment+centroid-update
+    * only); the convergence trace is a diagnostics concern, not a
+    * fit one.
+    *
+    * The fit reads `emb` once per iteration and never persists it:
+    * the CALLER caches a corpus it fits more than once (the builds
+    * and one-shots do). The returned assignment is a lazy plan over
+    * `emb`. */
   def fit(spark: SparkSession, emb: DataFrame, k: Int, iters: Int,
-      trackInertia: Boolean = true, spreadSeed: Boolean = true)
+      trackInertia: Boolean = true)
       : (DataFrame, Array[Array[Double]], Seq[Double]) = {
-    val e = emb.select(col("vec_id"), col("v")).cache()
-    val seedOrder =
-      if (spreadSeed) Seq(xxhash64(col("vec_id")), col("vec_id"))
-      else Seq(col("vec_id"))
-    var centroids: Array[Array[Double]] = e.orderBy(seedOrder: _*).limit(k)
-      .collect().map(_.getSeq[Double](1).toArray) // k rows only
+    val e = emb.select(col("vec_id"), col("v"))
+    var centroids: Array[Array[Double]] =
+      e.orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(k)
+        .collect().map(_.getSeq[Double](1).toArray) // k rows only
     val inertias = scala.collection.mutable.ListBuffer.empty[Double]
 
     def assignExpr(cs: Array[Array[Double]]) = {
@@ -93,27 +106,16 @@ object KMeans {
       else {
         import spark.implicits._
         val bc = spark.sparkContext.broadcast(cs)
-        e.select(col("vec_id"), col("v")).as[(Long, Array[Double])]
+        e.as[(Long, Array[Double])]
           .map { case (id, v) => (id, v, nearestIndex(v, bc.value)) }
           .toDF("vec_id", "v", "cluster")
       }
 
     for (_ <- 0 until iters) {
       val assigned = assign(centroids)
-      // new centroid = elementwise mean; (cluster, dim) keyed agg
-      val sums = assigned
-        .select(col("cluster"), posexplode(col("v")).as(Seq("dim", "x")))
-        .groupBy("cluster", "dim")
-        .agg(sum("x").as("sx"), count(lit(1)).as("n"))
-        .collect() // k × dim rows only
-      val byCluster = sums.groupBy(_.getInt(0))
-      centroids = centroids.indices.map { i =>
-        byCluster.get(i) match {
-          case Some(rows) =>
-            rows.sortBy(_.getInt(1)).map(r => r.getDouble(2) / r.getLong(3)).toArray
-          case None => centroids(i) // empty cluster keeps its centroid
-        }
-      }.toArray
+      val means = keyedMeans(assigned, "cluster")
+      centroids = centroids.indices
+        .map(i => means.getOrElse(Seq(i), centroids(i))).toArray
       if (trackInertia) {
         val distToOwn = centroids.indices.foldLeft(lit(0.0)) { (acc, i) =>
           val cCol = array(centroids(i).map(lit): _*)
@@ -130,66 +132,151 @@ object KMeans {
     (finalAssign, centroids, inertias.toSeq)
   }
 
-  /** TWO-LEVEL (hierarchical) coarse quantizer — the standard
-    * scale form of the IVF cell assignment (the residue item e01c's
-    * scaladoc named): a flat k-means at nCells costs every vector
-    * nCells distance evaluations PER ITERATION, which at 10⁹ vectors
-    * × 10⁶ cells is 10¹⁵ distances; splitting the codebook into
-    * k1 ≈ √nCells coarse centroids with k2 = ⌈nCells/k1⌉ children
-    * EACH costs k1 + k2 per vector instead (~500× fewer at those
-    * dials) at a modest quantization-error premium (each vector only
-    * sees its own coarse group's children).
-    *
-    * Spark shape: level 1 is the existing [[fit]] (hash-spread
-    * seeds, broadcast-model argmin, (cluster, dim)-keyed partial
-    * agg); level 2 runs ALL k1 child fits simultaneously as one
-    * keyed pass per iteration — the child model is a broadcast
-    * Map(coarse → children) consulted by a narrow typed map (the
-    * silhouette convention: per-partition imperative math over a
-    * driver-broadcast model is the right tool once the model is too
-    * wide for literal expressions), and the centroid update is one
-    * (coarse, sub, dim)-keyed agg collecting ≤ k1·k2·dim rows.
-    * Child seeds are per-group hash-spread (smallest xxhash64 within
-    * the group — one window over the coarse key, never a sort of the
-    * corpus).
-    *
-    * Returns (assignments (vec_id, cluster) with FLAT cell ids
-    * coarse·k2 + sub, flat centroids indexed by that id, coarse
-    * centroids). The flat id space is k1·k2 ≥ nCells; groups with
-    * fewer vectors than k2 pad unused slots with their group's first
-    * seed. At INIT a padded duplicate is never argmin-assigned
-    * (strict `<` keeps the first); after the first centroid UPDATE
-    * the real cell moves to its member mean while the pad keeps the
-    * stale seed position, so a later iteration may legitimately
-    * assign members to the pad — it then just becomes another real
-    * cell. Either way every cell's centroid is positioned and the
-    * assignment stays a partition; truly-empty cells cost a probe
-    * slot at most (their partition scans nothing). Downstream
-    * consumers (buildIvf layout, [[nearestCells]] probe, silhouette) are
-    * agnostic: the flat (assignments, centroids) pair is drop-in. */
-  /** Nearest centroid by squared L2; the FIRST index wins an exact
-    * tie. This is THE frozen-model assignment rule — fitTwoLevel's
-    * child pass and VectorIndex.appendIvf share this kernel so the
-    * tie-break (which the padded-duplicate design depends on) cannot
-    * drift between paths. */
+  /** THE keyed mean every vector model here is summarised by — k-means
+    * centroids, PQ codebooks, BQ's per-dimension mean, e05's Rocchio
+    * centroids and the cell bounds' normalised means. `rows` carries
+    * int key columns `keys` and an array<double> column `v`; one
+    * (keys…, dim)-keyed aggregation with map-side partials sums and
+    * counts the components, the keys × dim result is collected and
+    * divided on the driver. Returns each key's mean; a key with no
+    * rows has no entry (a Lloyd's update keeps its previous value). */
+  private[graft] def keyedMeans(rows: DataFrame,
+      keys: String*): Map[Seq[Int], Array[Double]] = {
+    val nk = keys.length
+    rows.select(keys.map(col) :+ posexplode(col("v")).as(Seq("dim", "x")): _*)
+      .groupBy((keys :+ "dim").map(col): _*)
+      .agg(sum("x").as("sx"), count(lit(1)).as("n"))
+      .collect() // keys × dim rows only
+      .groupBy(r => (0 until nk).map(r.getInt))
+      .map { case (key, rs) =>
+        key -> rs.sortBy(_.getInt(nk)).map(r => r.getDouble(nk + 1) / r.getLong(nk + 2))
+      }
+  }
+
+  /** THE keyed Lloyd's loop: each row (key, v) belongs to group `key`,
+    * and every group fits its own centroids (`seeds(key)`) in the same
+    * pass — one narrow typed map assigns each row to its group's
+    * nearest centroid ([[nearestIndex]] against the broadcast per-key
+    * models), one (key, sub)-keyed [[keyedMeans]] updates them, and a
+    * centroid that drew no rows keeps its position. Driver state is
+    * the models (Σ k·dim doubles); the rows are never collected and
+    * never persisted here (the caller caches rows it derives).
+    * fitTwoLevel's children (key = coarse group), splitOversized's
+    * sub-cells (key = hot cell) and PQ's codebooks (key = subspace,
+    * v = that subvector) are all this loop. */
+  private[graft] def lloyd(spark: SparkSession, rows: Dataset[(Int, Array[Double])],
+      seeds: Map[Int, Array[Array[Double]]], iters: Int): Map[Int, Array[Array[Double]]] = {
+    import spark.implicits._
+    var model = seeds
+    for (_ <- 0 until iters) {
+      val bc = spark.sparkContext.broadcast(model)
+      val means = keyedMeans(
+        rows.map { case (g, v) => (g, nearestIndex(v, bc.value(g)), v) }.toDF("key", "sub", "v"),
+        "key", "sub")
+      model = model.map { case (g, cs) =>
+        g -> Array.tabulate(cs.length)(s => means.getOrElse(Seq(g, s), cs(s)))
+      }
+    }
+    model
+  }
+
+  /** Per-key HASH-SPREAD seeds for [[lloyd]]: each key's k(key)
+    * members with the smallest xxhash64(vec_id) (the [[fit]] seeding,
+    * per key) — one window over the key, never a sort of the corpus.
+    * A key with fewer members pads with its first seed (an
+    * empty-but-positioned centroid [[nearestIndex]]'s tie rule never
+    * assigns at init); a key with none takes `fallback(key)`. `rows`
+    * is (vec_id, key, v). */
+  private[graft] def spreadSeeds(rows: DataFrame, k: Map[Int, Int],
+      fallback: Int => Array[Double]): Map[Int, Array[Array[Double]]] = {
+    import org.apache.spark.sql.expressions.Window
+    import rows.sparkSession.implicits._
+    val got = rows.toDF("vec_id", "key", "v")
+      .withColumn("rk", row_number().over(
+        Window.partitionBy("key").orderBy(xxhash64(col("vec_id")), col("vec_id"))))
+      .filter(col("rk") <= k.values.max)
+      .select(col("key"), (col("rk") - 1).cast("int").as("sub"), col("v"))
+      .as[(Int, Int, Array[Double])].collect() // ≤ keys · max k rows
+      .filter { case (g, s, _) => k.get(g).exists(s < _) }
+      .groupBy(_._1)
+    k.map { case (g, kg) =>
+      val seeds = got.get(g).fold(Array.empty[Array[Double]])(_.sortBy(_._2).map(_._3))
+      g -> (seeds ++ Array.fill(kg - seeds.length)(seeds.headOption.getOrElse(fallback(g))))
+    }
+  }
+
+  /** Per-cell COSINE BOUNDS over unit rows (cluster, x̂): the mean ĉ
+    * of each cell's x̂ ([[keyedMeans]]) and the max residual radius
+    * r̂ ([[boundRadius]]), so for any member x and unit query q̂:
+    * cos(q, x) = q̂·ĉ + q̂·(x̂ − ĉ) ≤ q̂·ĉ + r̂ (Cauchy-Schwarz on the
+    * residual). A zero vector arrives as zeros and makes its cell's
+    * r̂ = +∞. One row (cluster, ĉ, r̂) per cell WITH members, in cell
+    * order — what a memberless cell means is the reader's call
+    * ([[boundArrays]]). Two passes over `unit`, which this caches for
+    * their duration; driver state is cells × (dim + 1) doubles. The
+    * persisted bounds (VectorIndex.buildCellBounds) and v15's in-entry
+    * top-up (VectorQueries.cellBoundStats) both come from here. */
+  private[graft] def cellBounds(spark: SparkSession,
+      unit: Dataset[(Int, Array[Double])]): Array[(Int, Array[Double], Double)] = {
+    import spark.implicits._
+    val xh = unit.cache()
+    try {
+      val means = keyedMeans(xh.toDF("cluster", "v"), "cluster")
+        .map { case (c, m) => c.head -> m }
+      val bc = spark.sparkContext.broadcast(means)
+      val radii = xh.map { case (c, x) => (c, boundRadius(x, bc.value(c))) }
+        .toDF("cluster", "d")
+        .groupBy("cluster").agg(max("d"))
+        .as[(Int, Double)].collect().toMap // cells rows only
+      means.toArray.sortBy(_._1).map { case (c, m) => (c, m, radii(c)) }
+    } finally xh.unpersist()
+  }
+
+  /** A unit row's distance to its cell mean — the radius the cell
+    * bound must cover. A zero vector has no direction, so no radius
+    * covers it: +∞ (its cell is always probed, as the all-cells
+    * probe would). */
+  private[graft] def boundRadius(xhat: Array[Double], mean: Array[Double]): Double =
+    if (xhat.forall(_ == 0.0)) Double.PositiveInfinity
+    else math.sqrt(sqDist(xhat, mean))
+
+  /** [[cellBounds]] rows as (means, radii) arrays indexed by cell id.
+    * A cell without a row gets a null mean and radius `missing`: +∞
+    * for a persisted index (appends may have filled the cell since,
+    * so it must be probed) and −∞ in-entry (the cell is memberless,
+    * so it can contribute nothing). */
+  private[graft] def boundArrays(rows: Array[(Int, Array[Double], Double)],
+      nCells: Int, missing: Double): (Array[Array[Double]], Array[Double]) = {
+    val means = new Array[Array[Double]](nCells)
+    val radii = Array.fill(nCells)(missing)
+    rows.foreach { case (c, m, r) => means(c) = m; radii(c) = r }
+    (means, radii)
+  }
+
+  /** Nearest centroid by squared L2 ([[sqDist]] of v's subvector at
+    * `off`); the FIRST index wins an exact tie. This is THE
+    * frozen-model assignment rule — the Lloyd's loops, PQ's encode,
+    * VectorIndex.appendIvf and IVFADC's residuals share this kernel
+    * so the tie-break (which the padded-duplicate design depends on)
+    * cannot drift between paths. */
   private[graft] def nearestIndex(v: Array[Double],
-      cs: Array[Array[Double]]): Int = {
+      cs: Array[Array[Double]], off: Int = 0): Int = {
     var best = 0; var bd = Double.MaxValue; var i = 0
     while (i < cs.length) {
-      val c = cs(i)
-      var d = 0.0; var j = 0
-      while (j < c.length) { val t = v(j) - c(j); d += t * t; j += 1 }
+      val d = sqDist(v, cs(i), off)
       if (d < bd) { bd = d; best = i }
       i += 1
     }
     best
   }
 
-  /** Squared L2 distance — the one metric kernel [[nearestIndex]],
-    * [[probeCells]] and v15's bounded re-probe share. */
-  private[graft] def sqDist(v: Array[Double], c: Array[Double]): Double = {
+  /** Squared L2 distance of centroid `c` to v's subvector at `off`
+    * (the whole vector at 0) — the one metric kernel [[nearestIndex]],
+    * [[probeCells]], [[silhouette]], PQ's codes and v15's bounded
+    * re-probe share. */
+  private[graft] def sqDist(v: Array[Double], c: Array[Double], off: Int = 0): Double = {
     var d = 0.0; var j = 0
-    while (j < c.length) { val t = v(j) - c(j); d += t * t; j += 1 }
+    while (j < c.length) { val t = v(off + j) - c(j); d += t * t; j += 1 }
     d
   }
 
@@ -311,79 +398,64 @@ object KMeans {
       .toDF("qid", "cluster")
   }
 
+  /** TWO-LEVEL (hierarchical) coarse quantizer — the standard
+    * scale form of the IVF cell assignment (the residue item e01c's
+    * scaladoc named): a flat k-means at nCells costs every vector
+    * nCells distance evaluations PER ITERATION, which at 10⁹ vectors
+    * × 10⁶ cells is 10¹⁵ distances; splitting the codebook into
+    * k1 ≈ √nCells coarse centroids with k2 = ⌈nCells/k1⌉ children
+    * EACH costs k1 + k2 per vector instead (~500× fewer at those
+    * dials) at a modest quantization-error premium (each vector only
+    * sees its own coarse group's children).
+    *
+    * Spark shape: level 1 is [[fit]]; level 2 runs ALL k1 child
+    * fits simultaneously as one [[lloyd]] loop keyed by coarse group
+    * (≤ k1·k2·dim rows collected per iteration), seeded per group by
+    * [[spreadSeeds]]. Like [[fit]], it never persists `emb` (the
+    * caller caches it) and returns a lazy assignment.
+    *
+    * Returns (assignments (vec_id, cluster) with FLAT cell ids
+    * coarse·k2 + sub, flat centroids indexed by that id, coarse
+    * centroids). The flat id space is k1·k2 ≥ nCells; groups with
+    * fewer vectors than k2 pad unused slots with their group's first
+    * seed. At INIT a padded duplicate is never argmin-assigned
+    * (strict `<` keeps the first); after the first centroid UPDATE
+    * the real cell moves to its member mean while the pad keeps the
+    * stale seed position, so a later iteration may legitimately
+    * assign members to the pad — it then just becomes another real
+    * cell. Either way every cell's centroid is positioned and the
+    * assignment stays a partition; truly-empty cells cost a probe
+    * slot at most (their partition scans nothing). Downstream
+    * consumers (buildIvf layout, [[nearestCells]] probe, silhouette) are
+    * agnostic: the flat (assignments, centroids) pair is drop-in. */
   def fitTwoLevel(spark: SparkSession, emb: DataFrame, nCells: Int,
       iters: Int, branch: Int = 0)
       : (DataFrame, Array[Array[Double]], Array[Array[Double]]) = {
-    import org.apache.spark.sql.expressions.Window
     import spark.implicits._
     require(nCells >= 4, s"fitTwoLevel wants nCells >= 4, got $nCells (use fit)")
     val k1 = if (branch > 0) branch
       else math.max(2, math.ceil(math.sqrt(nCells.toDouble)).toInt)
     val k2 = math.max(1, math.ceil(nCells.toDouble / k1).toInt)
-    val e = emb.select(col("vec_id"), col("v")).cache()
-    try {
-      val (coarseAssign, coarse, _) =
-        fit(spark, e, k1, iters, trackInertia = false)
-      // a corpus smaller than k1 seeds fewer coarse centroids than
-      // requested — every structure below sizes to what EXISTS
-      val k1e = coarse.length
-      val withCoarse = e.join(coarseAssign, "vec_id")
-        .select(col("vec_id"), col("v"), col("cluster").as("coarse"))
-        .as[(Long, Array[Double], Int)]
-        .cache()
-      try {
-        // per-group hash-spread seeds: k2 smallest xxhash64 per coarse
-        val seeds = withCoarse.toDF("vec_id", "v", "coarse")
-          .withColumn("rk", row_number().over(
-            Window.partitionBy("coarse")
-              .orderBy(xxhash64(col("vec_id")), col("vec_id"))))
-          .filter(col("rk") <= k2)
-          .select(col("coarse"), (col("rk") - 1).cast("int").as("sub"), col("v"))
-          .as[(Int, Int, Array[Double])].collect() // ≤ k1·k2 rows
-        val byGroup = seeds.groupBy(_._1)
-        var children: Array[Array[Array[Double]]] = Array.tabulate(k1e) { g =>
-          byGroup.get(g) match {
-            case Some(rows) =>
-              val got = rows.sortBy(_._2).map(_._3)
-              got ++ Array.fill(k2 - got.length)(got.head) // pad: empty-but-positioned
-            case None => Array.fill(k2)(coarse(g)) // empty coarse group
-          }
-        }
-        def assignSub(cs: Array[Array[Array[Double]]]) = {
-          val bc = spark.sparkContext.broadcast(cs)
-          withCoarse.map { case (id, v, g) =>
-            (id, g, KMeans.nearestIndex(v, bc.value(g)), v)
-          }
-        }
-        for (_ <- 0 until iters) {
-          val sums = assignSub(children).toDF("vec_id", "coarse", "sub", "v")
-            .select(col("coarse"), col("sub"), posexplode(col("v")).as(Seq("dim", "x")))
-            .groupBy("coarse", "sub", "dim")
-            .agg(sum("x").as("sx"), count(lit(1)).as("n"))
-            .collect() // ≤ k1·k2·dim rows only
-          val byCell = sums.groupBy(r => (r.getInt(0), r.getInt(1)))
-          children = Array.tabulate(k1e) { g =>
-            Array.tabulate(k2) { s =>
-              byCell.get((g, s)) match {
-                case Some(rows) =>
-                  rows.sortBy(_.getInt(2)).map(r => r.getDouble(3) / r.getLong(4))
-                case None => children(g)(s) // empty cell keeps its centroid
-              }
-            }
-          }
-        }
-        val finalChildren = children
-        val assign = assignSub(finalChildren)
-          .map { case (id, g, s, _) => (id, g * k2 + s) }
-          .toDF("vec_id", "cluster")
-        // materialize before the caches release (drop-in contract:
-        // fit() returns a plan over its own cached input; here the
-        // upstream caches are scoped, so pin the small result)
-        val pinned = assign.pinned
-        val flat = Array.tabulate(k1e * k2)(i => finalChildren(i / k2)(i % k2))
-        (pinned, flat, coarse)
-      } finally withCoarse.unpersist()
-    } finally e.unpersist()
+    val e = emb.select(col("vec_id"), col("v"))
+    val (coarseAssign, coarse, _) = fit(spark, e, k1, iters, trackInertia = false)
+    // a corpus smaller than k1 seeds fewer coarse centroids than
+    // requested — every structure below sizes to what EXISTS
+    val k1e = coarse.length
+    val withCoarse = e.join(coarseAssign, "vec_id")
+      .select(col("vec_id"), col("v"), col("cluster").as("coarse"))
+      .as[(Long, Array[Double], Int)]
+    val children = {
+      val rows = withCoarse.cache()
+      try lloyd(spark, rows.map { case (_, v, g) => (g, v) },
+        spreadSeeds(rows.select(col("vec_id"), col("coarse"), col("v")),
+          (0 until k1e).map(_ -> k2).toMap, coarse(_)), iters)
+      finally rows.unpersist()
+    }
+    val bc = spark.sparkContext.broadcast(children)
+    val assign = withCoarse
+      .map { case (id, v, g) => (id, g * k2 + nearestIndex(v, bc.value(g))) }
+      .toDF("vec_id", "cluster")
+    (assign, Array.tabulate(k1e * k2)(i => children(i / k2)(i % k2)), coarse)
   }
 
   /** A fitted cell model for the cell-blocked batch kernels (e01c /
@@ -420,7 +492,8 @@ object KMeans {
     * `twoLevelCells` (byte-identical to every prior round), two-level
     * above (the r13 scale routing), then [[splitOversized]] caps
     * member counts at `cellCap`. Callers probe via [[probeCells]]
-    * with the model's children index. */
+    * with the model's children index, and cache `emb` (the fits read
+    * it once per iteration). */
   private[graft] def fitCells(spark: SparkSession, emb: DataFrame,
       nCells: Int, iters: Int, twoLevelCells: Int,
       cellCap: Int, cellTarget: Int): CellModel = {
@@ -446,11 +519,10 @@ object KMeans {
     * 2.4× clustered-vs-stress premium at 2M: 688 vs 284 s). This
     * post-pass bounds probe cost by the CAP, not by the hottest
     * cluster's density: any cell above `cap` members splits into
-    * ceil(members/target) children via one keyed Lloyd's pass over
-    * ALL hot cells simultaneously (fitTwoLevel's level-2 machinery:
-    * per-cell hash-spread seeds, broadcast child model, typed-map
-    * argmin, (cell, sub, dim)-keyed centroid agg — never a
-    * per-cell driver loop), recursively up to [[SplitMaxRounds]].
+    * ceil(members/target) children via one [[lloyd]] loop keyed by
+    * hot cell over ALL hot cells simultaneously (per-cell
+    * [[spreadSeeds]] — never a per-cell driver loop), recursively up
+    * to [[SplitMaxRounds]].
     * Child 0 reuses the parent's flat id (its centroid moves);
     * children 1.. append new flat ids REGISTERED UNDER THE PARENT'S
     * COARSE GROUP, so the coarse-first probe reaches split cells
@@ -461,7 +533,6 @@ object KMeans {
   private[graft] def splitOversized(spark: SparkSession, emb: DataFrame,
       model: CellModel, cap: Int, target: Int, iters: Int,
       maxRounds: Int = SplitMaxRounds): CellModel = {
-    import org.apache.spark.sql.expressions.Window
     import spark.implicits._
     require(cap >= target, s"splitOversized wants cap >= target, got $cap < $target")
     var cur = model
@@ -490,48 +561,11 @@ object KMeans {
           .select(col("vec_id"), col("v"), col("cluster"))
           .as[(Long, Array[Double], Int)].cache()
         try {
-          // per-hot-cell hash-spread seeds (the fitTwoLevel child
-          // convention): one window over the hot slice, never a sort
-          val maxK = kSub.values.max
-          val seeds = members.toDF("vec_id", "v", "cluster")
-            .withColumn("rk", row_number().over(
-              Window.partitionBy("cluster")
-                .orderBy(xxhash64(col("vec_id")), col("vec_id"))))
-            .filter(col("rk") <= maxK)
-            .select(col("cluster"), (col("rk") - 1).cast("int").as("sub"), col("v"))
-            .as[(Int, Int, Array[Double])].collect() // ≤ hot·maxK rows
-            .filter { case (c, s, _) => s < kSub(c) }
-          val seedsByCell = seeds.groupBy(_._1)
-          var children: Map[Int, Array[Array[Double]]] = kSub.map {
-            case (c, ks) =>
-              // a hot cell has > cap ≥ target members, so ks real
-              // seeds always exist — the pad arm is only the guard
-              val got = seedsByCell.getOrElse(c, Array.empty).sortBy(_._2).map(_._3)
-              c -> (got ++ Array.fill(ks - got.length)(cur.centroids(c)))
-          }
-          def assignSub(cs: Map[Int, Array[Array[Double]]]) = {
-            val bc = spark.sparkContext.broadcast(cs)
-            members.map { case (id, v, c) =>
-              (id, c, nearestIndex(v, bc.value(c)), v)
-            }
-          }
-          for (_ <- 0 until iters) {
-            val sums = assignSub(children).toDF("vec_id", "cell", "sub", "v")
-              .select(col("cell"), col("sub"), posexplode(col("v")).as(Seq("dim", "x")))
-              .groupBy("cell", "sub", "dim")
-              .agg(sum("x").as("sx"), count(lit(1)).as("n"))
-              .collect() // ≤ Σ kSub · dim rows only
-            val byCS = sums.groupBy(r => (r.getInt(0), r.getInt(1)))
-            children = children.map { case (c, cs0) =>
-              c -> Array.tabulate(cs0.length) { s =>
-                byCS.get((c, s)) match {
-                  case Some(rows) =>
-                    rows.sortBy(_.getInt(2)).map(r => r.getDouble(3) / r.getLong(4))
-                  case None => cs0(s) // empty child keeps its seed
-                }
-              }
-            }
-          }
+          // a hot cell has > cap ≥ target members, so kSub real seeds
+          // always exist — the parent-centroid fallback is only the guard
+          val children = lloyd(spark, members.map { case (_, v, c) => (c, v) },
+            spreadSeeds(members.select(col("vec_id"), col("cluster"), col("v")),
+              kSub, cur.centroids(_)), iters)
           // FINAL sub-assignment, materialized ONCE (it feeds both the
           // child-count pass and the flat-id mapping — the
           // twice-consumed-subtree convention): narrow (id, cell, sub)
@@ -651,10 +685,7 @@ object KMeans {
         var a = 0.0; var b = Double.MaxValue
         var i = 0
         while (i < cs.length) {
-          val c = cs(i)
-          var d = 0.0; var j = 0
-          while (j < c.length) { val t = v(j) - c(j); d += t * t; j += 1 }
-          val dist = math.sqrt(d)
+          val dist = math.sqrt(sqDist(v, cs(i)))
           if (i == own) a = dist else if (dist < b) b = dist
           i += 1
         }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions._
@@ -21,11 +21,9 @@ import graft.store.IvfSnapshot.dot
   *
   * Scale shape:
   *  - TRAIN: one distributed Lloyd's pass over ALL subspaces at once
-  *    — assignment is a tight typed flatMap emitting (s, c, u),
-  *    update one (s, c, dim)-keyed agg with map-side partials; the
-  *    model (M×K×subDim doubles, 8 KB) lives on the driver, the
-  *    corpus is never collected (KMeans.fit precedent, keyed by
-  *    subspace so M codebooks train in ONE job per iteration, not M).
+  *    (KMeans.lloyd keyed by subspace, so M codebooks train in ONE
+  *    job per iteration, not M); the model (M×K×subDim doubles, 8 KB)
+  *    lives on the driver, the corpus is never collected.
   *  - ENCODE: one narrow typed map → (vec_id, codes, norm); no
   *    shuffle. The stored norm is what makes COSINE ranking work on
   *    inner-product ADC (|v| is lost in quantization).
@@ -74,74 +72,41 @@ object Pq {
     * corpus (or a budgeted pool from the sweep curve) cooperates. */
   val RoutingNote = "SQ8 is the fixed-dial rung that holds every measured decade"
 
-  /** Squared L2 distance of centroid `c` to v's subvector at `off`. */
-  private[operators] def subDist(c: Array[Double], v: Array[Double], off: Int): Double = {
-    var d = 0.0; var j = 0
-    while (j < c.length) { val t = v(off + j) - c(j); d += t * t; j += 1 }
-    d
-  }
-
-  /** The nearest centroid of `cb` to v's subvector at `off`, ties to
-    * the lowest id. */
-  private[operators] def argmin(cb: Array[Array[Double]], v: Array[Double], off: Int): Int = {
-    var best = 0; var bestD = Double.MaxValue; var c = 0
-    while (c < cb.length) {
-      val d = subDist(cb(c), v, off)
-      if (d < bestD) { bestD = d; best = c }
-      c += 1
-    }
-    best
-  }
-
   /** Train the M per-subspace codebooks: codebooks(s)(c) is centroid
-    * c of subspace s. Deterministic init: HASH-SPREAD seeding (r10,
-    * the KMeans.fit rationale — smallest xxhash64(vec_id) rows are a
+    * c of subspace s — one [[KMeans.lloyd]] loop keyed by subspace
+    * over [[subspaceRows]], so the M codebooks train in ONE job per
+    * iteration. Deterministic init: HASH-SPREAD seeding (the
+    * KMeans.fit rationale — smallest xxhash64(vec_id) rows are a
     * deterministic uniform sample regardless of storage order;
     * first-k seeds on a source-sorted corpus co-locate and degrade
-    * codebook coverage); empty clusters keep their centroid. `e`
-    * SHOULD be cached by the caller (annPq does) — train itself
-    * never persists so a cached caller dataframe is not held twice.
-    * spreadSeed=false keeps the legacy first-k init (quality
-    * comparison baseline only). */
+    * codebook coverage), one global TakeOrdered top-k sliced per
+    * subspace. `e` SHOULD be cached by the caller (annPq does) —
+    * train itself never persists so a cached caller dataframe is not
+    * held twice. */
   def train(spark: SparkSession, e: DataFrame, m: Int = M, k: Int = K,
-      iters: Int = 3, spreadSeed: Boolean = true): Array[Array[Array[Double]]] = {
-    import spark.implicits._
-    val rows = e.select(col("vec_id"), col("v")).as[(Long, Array[Double])]
-    val dim = rows.head()._2.length
+      iters: Int = 3): Array[Array[Array[Double]]] = {
+    val seed = e.select(col("vec_id"), col("v"))
+      .orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(k)
+      .collect().map(_.getSeq[Double](1).toArray)
+    require(seed.length >= k,
+      s"PQ train needs at least k=$k vectors to seed codebooks, got ${seed.length}")
+    val dim = seed(0).length
     require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
     val sub = dim / m
-    var cb: Array[Array[Array[Double]]] = {
-      val seedOrder =
-        if (spreadSeed) Seq(xxhash64(col("vec_id")), col("vec_id"))
-        else Seq(col("vec_id"))
-      val seed = rows.orderBy(seedOrder: _*).limit(k).collect().map(_._2)
-      require(seed.length >= k,
-        s"PQ train needs at least k=$k vectors to seed codebooks, got ${seed.length}")
-      Array.tabulate(m, k)((s, c) => seed(c).slice(s * sub, (s + 1) * sub))
-    }
-    for (_ <- 0 until iters) {
-      val bc = spark.sparkContext.broadcast(cb)
-      val sums = rows
-        .flatMap { case (_, v) =>
-          (0 until bc.value.length).iterator.map { s =>
-            val sl = v.length / bc.value.length
-            (s, argmin(bc.value(s), v, s * sl), v.slice(s * sl, (s + 1) * sl))
-          }
-        }
-        .toDF("s", "c", "u")
-        .select(col("s"), col("c"), posexplode(col("u")).as(Seq("dim", "x")))
-        .groupBy("s", "c", "dim")
-        .agg(sum("x").as("sx"), count(lit(1)).as("n"))
-        .collect() // m × k × subDim rows only
-      val byKey = sums.groupBy(r => (r.getInt(0), r.getInt(1)))
-      cb = Array.tabulate(m, k) { (s, c) =>
-        byKey.get((s, c)) match {
-          case Some(rs) => rs.sortBy(_.getInt(2)).map(r => r.getDouble(3) / r.getLong(4))
-          case None => cb(s)(c)
-        }
+    val cb = KMeans.lloyd(spark, subspaceRows(spark, e, m),
+      (0 until m).map(s => s -> seed.map(_.slice(s * sub, (s + 1) * sub))).toMap, iters)
+    Array.tabulate(m)(cb)
+  }
+
+  /** (subspace, subvector) rows of (vec_id, v) rows — m per vector. */
+  private[graft] def subspaceRows(spark: SparkSession, e: DataFrame,
+      m: Int): Dataset[(Int, Array[Double])] = {
+    import spark.implicits._
+    e.select(col("vec_id"), col("v")).as[(Long, Array[Double])]
+      .flatMap { case (_, v) =>
+        val sl = v.length / m
+        Iterator.tabulate(m)(s => (s, v.slice(s * sl, (s + 1) * sl)))
       }
-    }
-    cb
   }
 
   /** Encode: (vec_id, codes: array<int> of length M, norm). One
@@ -155,7 +120,7 @@ object Pq {
     e.select(col("vec_id"), col("v")).as[(Long, Array[Double])]
       .map { case (id, v) =>
         val sl = v.length / m
-        (id, Array.tabulate(m)(s => argmin(bc.value(s), v, s * sl)), math.sqrt(dot(v, v)))
+        (id, Array.tabulate(m)(s => KMeans.nearestIndex(v, bc.value(s), s * sl)), math.sqrt(dot(v, v)))
       }
       .toDF("vec_id", "codes", "norm")
   }

@@ -641,47 +641,25 @@ object VectorQueries {
   }
 
   /** Per-cell cosine-bound stats over the IN-ENTRY fit — the batched
-    * twin of VectorIndex.buildCellBounds (same math, same soundness
-    * argument): for cell c, the mean ĉ of its NORMALIZED members and
-    * the max residual radius r̂, so for any member x and unit query
-    * q̂: cos(q, x) ≤ q̂·ĉ + r̂. Memberless cells get radius −∞ (they
-    * can contribute nothing, so the re-probe must never pick them).
-    * Two keyed passes over the cached corpus; driver state is
-    * nCells × (dim + 1) doubles. */
+    * twin of VectorIndex.buildCellBounds, the same KMeans.cellBounds
+    * pass over this entry's (cluster, v/nv) rows: for cell c, the
+    * mean ĉ of its NORMALIZED members and the max residual radius r̂
+    * (+∞ for a cell holding a zero vector), so for any member x and
+    * unit query q̂: cos(q, x) ≤ q̂·ĉ + r̂. Memberless cells get radius
+    * −∞ (they can contribute nothing, so the re-probe must never pick
+    * them). Driver state is nCells × (dim + 1) doubles. */
   private[graft] def cellBoundStats(spark: SparkSession, e: DataFrame,
       assign: DataFrame, nCellsFlat: Int)
       : (Array[Array[Double]], Array[Double]) = {
     import spark.implicits._
-    val xh = e.select(col("vec_id"),
+    val unit = e.select(col("vec_id"),
         when(col("nv") > 0, transform(col("v"), x => x / col("nv")))
           .otherwise(col("v")).as("xhat"))
       .join(assign, "vec_id")
       .select(col("cluster"), col("xhat"))
-      .as[(Int, Array[Double])].cache()
-    try {
-      val meanRows = xh.toDF("cluster", "xhat")
-        .select(col("cluster"), posexplode(col("xhat")).as(Seq("dim", "x")))
-        .groupBy("cluster", "dim").agg(avg("x").as("m"))
-        .collect() // nCells × dim rows only
-      val means = new Array[Array[Double]](nCellsFlat)
-      meanRows.groupBy(_.getInt(0)).foreach { case (c, rows) =>
-        val m = new Array[Double](rows.map(_.getInt(1)).max + 1)
-        rows.foreach(r => m(r.getInt(1)) = r.getDouble(2))
-        means(c) = m
-      }
-      val radii = Array.fill(nCellsFlat)(Double.NegativeInfinity)
-      val bcM = spark.sparkContext.broadcast(means)
-      xh.map { case (c, x) =>
-          val m = bcM.value(c)
-          var d = 0.0; var j = 0
-          while (j < m.length) { val t = x(j) - m(j); d += t * t; j += 1 }
-          (c, math.sqrt(d))
-        }.toDF("cluster", "d")
-        .groupBy("cluster").agg(max("d").as("r"))
-        .as[(Int, Double)].collect() // nCells rows only
-        .foreach { case (c, r) => radii(c) = r }
-      (means, radii)
-    } finally xh.unpersist()
+      .as[(Int, Array[Double])]
+    KMeans.boundArrays(KMeans.cellBounds(spark, unit), nCellsFlat,
+      Double.NegativeInfinity)
   }
 
   /** Margin under the pooled k-th below which a cell's upper bound

@@ -631,16 +631,7 @@ object VectorIndex {
             bounds.map { case (c, (m, _)) => (c, m) })
           val batchMax = assigned.as[(Long, Array[Double], Int)]
             .flatMap { case (_, v, c) =>
-              bcMeans.value.get(c).map { m =>
-                var nn = 0.0; var j = 0
-                while (j < v.length) { nn += v(j) * v(j); j += 1 }
-                val inv = if (nn > 0) 1.0 / math.sqrt(nn) else 0.0
-                var d = 0.0; j = 0
-                while (j < m.length) {
-                  val t = v(j) * inv - m(j); d += t * t; j += 1
-                }
-                (c, if (nn == 0) Double.PositiveInfinity else math.sqrt(d))
-              }
+              bcMeans.value.get(c).map(m => (c, KMeans.boundRadius(unit(v), m)))
             }.toDF("cluster", "d")
             .groupBy("cluster").agg(max("d").as("d"))
             .as[(Int, Double)].collect().toMap
@@ -833,14 +824,14 @@ object VectorIndex {
 
   // ------------------------------------------------ adaptive probe
 
-  /** Per-cell COSINE-BOUND stats for [[annIvfAdaptive]]: the mean ĉ
-    * and max-distance radius r̂ of each cell's NORMALIZED members.
-    * For any member x of cell c and unit query q̂:
-    * cos(q, x) = q̂·x̂ = q̂·ĉ + q̂·(x̂ − ĉ) ≤ q̂·ĉ + |x̂ − ĉ| ≤ q̂·ĉ + r̂
-    * (Cauchy-Schwarz on the residual) — a sound per-cell upper bound
-    * evaluable driver-side from nCells×(dim+1) doubles. One
-    * distributed pass at BUILD/maintenance time, never query time;
-    * persists one row per cell at `dir/ivf_cellbounds`. LIFECYCLE:
+  /** Per-cell COSINE-BOUND stats for [[annIvfAdaptive]] and
+    * [[annIvfBatch]]: KMeans.cellBounds over the stored vectors — the
+    * mean ĉ and max-distance radius r̂ of each cell's NORMALIZED
+    * members, so cos(q, x) ≤ q̂·ĉ + r̂ for any member x of cell c, a
+    * sound per-cell upper bound evaluable driver-side from
+    * nCells×(dim+1) doubles. Run at BUILD/maintenance time, never
+    * query time; persists one row per non-empty cell at
+    * `dir/ivf_cellbounds`. LIFECYCLE:
     * the bound is sound for any superset radius under the FROZEN
     * mean, so [[appendIvf]] EXTENDS r̂ in place (adaptive serving
     * stays live and exact through streamed ingest; re-running this
@@ -852,42 +843,23 @@ object VectorIndex {
     * (where its cosine is null, or fails under ANSI). */
   def buildCellBounds(spark: SparkSession, dir: String): Unit = {
     import spark.implicits._
-    val vecs = spark.read.parquet(s"$dir/ivf_vectors")
-      .select(col("cluster").cast("int").as("cluster"), col("v"))
-      .as[(Int, Array[Double])]
-      .map { case (c, v) =>
-        var n = 0.0; var j = 0
-        while (j < v.length) { n += v(j) * v(j); j += 1 }
-        val inv = if (n > 0) 1.0 / math.sqrt(n) else 0.0
-        (c, v.map(_ * inv))
-      }.toDF("cluster", "xhat").cache()
-    try {
-      val means = vecs
-        .select(col("cluster"), posexplode(col("xhat")).as(Seq("dim", "x")))
-        .groupBy("cluster", "dim").agg(avg("x").as("m"))
-        .collect() // nCells × dim rows only
-      val byCell = means.groupBy(_.getInt(0)).map { case (c, rows) =>
-        val dim = rows.map(_.getInt(1)).max + 1
-        val m = new Array[Double](dim)
-        rows.foreach(r => m(r.getInt(1)) = r.getDouble(2))
-        (c, m)
-      }
-      val bc = spark.sparkContext.broadcast(byCell)
-      val radii = vecs.as[(Int, Array[Double])]
-        .map { case (c, xh) =>
-          val m = bc.value(c)
-          var d = 0.0; var j = 0
-          while (j < m.length) { val t = xh(j) - m(j); d += t * t; j += 1 }
-          (c, if (xh.forall(_ == 0.0)) Double.PositiveInfinity else math.sqrt(d))
-        }.toDF("cluster", "d")
-        .groupBy("cluster").agg(max("d").as("rhat"))
-        .as[(Int, Double)].collect().toMap
-      byCell.toSeq.sortBy(_._1)
-        .map { case (c, m) => (c, m.toSeq, radii.getOrElse(c, 0.0)) }
-        .toDF("cluster", "nc", "rhat")
-        .coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(s"$dir/ivf_cellbounds")
-    } finally vecs.unpersist()
+    KMeans.cellBounds(spark, spark.read.parquet(s"$dir/ivf_vectors")
+        .select(col("cluster").cast("int").as("cluster"), col("v"))
+        .as[(Int, Array[Double])]
+        .map { case (c, v) => (c, unit(v)) })
+      .toSeq.map { case (c, m, r) => (c, m.toSeq, r) }
+      .toDF("cluster", "nc", "rhat")
+      .coalesce(1).write.mode(SaveMode.Overwrite)
+      .parquet(s"$dir/ivf_cellbounds")
+  }
+
+  /** v·(1/|v|), zeros for a zero vector — the persisted cell bound's
+    * normalisation ([[buildCellBounds]] and [[appendIvf]]). */
+  private def unit(v: Array[Double]): Array[Double] = {
+    var n = 0.0; var j = 0
+    while (j < v.length) { n += v(j) * v(j); j += 1 }
+    val inv = if (n > 0) 1.0 / math.sqrt(n) else 0.0
+    v.map(_ * inv)
   }
 
   /** [[annIvfAdaptive]]'s result: the ranked rows plus the probe
@@ -962,15 +934,8 @@ object VectorIndex {
   private[graft] def loadCellBoundArrays(spark: SparkSession, dir: String,
       nCells: Int): (Array[Array[Double]], Array[Double]) = {
     val rows = cellBoundRows(spark, dir)
-    val means = new Array[Array[Double]](nCells)
-    val radii = Array.fill(nCells)(Double.PositiveInfinity)
-    rows.foreach { case (c, nc, r) => means(c) = nc; radii(c) = r }
-    var c = 0
-    while (c < nCells) {
-      if (means(c) == null) means(c) = new Array[Double](rows.head._2.length)
-      c += 1
-    }
-    (means, radii)
+    val (means, radii) = KMeans.boundArrays(rows, nCells, Double.PositiveInfinity)
+    (means.map(m => if (m == null) new Array[Double](rows.head._2.length) else m), radii)
   }
 
   /** The `ivf_cellbounds` rows (cluster, mean, radius): the one decoder

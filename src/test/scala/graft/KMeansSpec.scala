@@ -1,10 +1,13 @@
 package graft
 
+import java.nio.file.Files
+
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions._
-import graft.operators.KMeans
+import graft.operators.{KMeans, Pq, VectorQueries}
 import graft.sources.{Loaders, Tables}
+import graft.store.VectorIndex
 
 class KMeansSpec extends SparkSpec {
 
@@ -104,6 +107,137 @@ class KMeansSpec extends SparkSpec {
     val tiedOut = graft.operators.ExtendedQueries.centroidClassify(spark, tied).collect()
     assert(tiedOut.forall(_.getAs[Int]("pred_label") == 1),
       "exact cosine tie must resolve to the smaller label")
+  }
+
+  /** Plain driver-side Lloyd's — the exact anchor the distributed fits
+    * are held to: each vector goes to its nearest centroid (the first
+    * one on an exact tie), each centroid moves to its members' mean,
+    * and a centroid without members stays where it is. */
+  private def sq(a: Array[Double], b: Array[Double]): Double =
+    a.indices.map(j => (a(j) - b(j)) * (a(j) - b(j))).sum
+  private def nearest(v: Array[Double], cs: Array[Array[Double]]): Int =
+    cs.indices.minBy(i => sq(v, cs(i)))
+  private def driverLloyd(vs: Array[Array[Double]], seeds: Array[Array[Double]],
+      iters: Int): Array[Array[Double]] =
+    (0 until iters).foldLeft(seeds) { (cs, _) =>
+      val own = vs.map(nearest(_, cs))
+      cs.indices.map { i =>
+        val mem = vs.indices.filter(own(_) == i).map(vs)
+        if (mem.isEmpty) cs(i)
+        else Array.tabulate(cs(i).length)(j => mem.map(_(j)).sum / mem.length)
+      }.toArray
+    }
+
+  /** (vec_id, v) of the sf0.001 corpus in hash-spread seed order —
+    * ascending (xxhash64(vec_id), vec_id). */
+  private def seedOrdered(): Array[(Long, Array[Double])] =
+    Tables.embeddings(spark, sf0001)
+      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
+      .orderBy(xxhash64(col("vec_id")), col("vec_id"))
+      .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+
+  private def assertClose(got: Array[Array[Double]], want: Array[Array[Double]],
+      what: String): Unit = {
+    assert(got.length == want.length, s"$what: ${got.length} vs ${want.length} centroids")
+    got.indices.foreach { i =>
+      assert(got(i).indices.forall(j => math.abs(got(i)(j) - want(i)(j)) <= 1e-9),
+        s"$what: centroid $i differs from the driver-side Lloyd's")
+    }
+  }
+
+  test("exact anchor: fit (literal and typed assignment), fitTwoLevel's children and Pq.train equal a driver-side Lloyd's") {
+    val corpus = seedOrdered()
+    val byId = corpus.toMap
+    val e = Tables.embeddings(spark, sf0001)
+      .select(col("vec_id"), toDouble(col("embedding")).as("v")).cache()
+    try {
+      val vs = corpus.map(_._2)
+      // fit at k ≤ FitExprMaxK (literal argmin) and above it (typed map)
+      for (k <- Seq(8, KMeans.FitExprMaxK + 8)) {
+        val (assign, cs, _) = KMeans.fit(spark, e, k, 3, trackInertia = false)
+        val want = driverLloyd(vs, vs.take(k), 3)
+        assertClose(cs, want, s"fit k=$k")
+        assign.collect().foreach { r =>
+          assert(r.getInt(1) == nearest(byId(r.getLong(0)), want), s"fit k=$k: vec ${r.getLong(0)}")
+        }
+      }
+      // fitTwoLevel: per coarse group, a Lloyd's from the group's
+      // hash-spread seeds (padded with its first seed)
+      val (assign, flat, coarse) = KMeans.fitTwoLevel(spark, e, nCells = 16, iters = 3)
+      val k2 = flat.length / coarse.length
+      val groups = corpus.groupBy { case (_, v) => nearest(v, coarse) }
+      val children = coarse.indices.map { g =>
+        val mem = groups.getOrElse(g, Array.empty).map(_._2) // seed order kept
+        val seeds = if (mem.isEmpty) Array.fill(k2)(coarse(g))
+          else mem.take(k2) ++ Array.fill(k2 - mem.take(k2).length)(mem.head)
+        driverLloyd(mem, seeds, 3)
+      }
+      assertClose(flat, children.flatten.toArray, "fitTwoLevel")
+      assign.collect().foreach { r =>
+        val v = byId(r.getLong(0)); val g = nearest(v, coarse)
+        assert(r.getInt(1) == g * k2 + nearest(v, children(g)), s"fitTwoLevel: vec ${r.getLong(0)}")
+      }
+      // Pq.train: one Lloyd's per subspace from the K hash-spread seeds
+      val cb = Pq.train(spark, e)
+      val sub = vs(0).length / Pq.M
+      def slice(v: Array[Double], s: Int) = v.slice(s * sub, (s + 1) * sub)
+      val want = Array.tabulate(Pq.M)(s =>
+        driverLloyd(vs.map(slice(_, s)), vs.take(Pq.K).map(slice(_, s)), 3))
+      (0 until Pq.M).foreach(s => assertClose(cb(s), want(s), s"Pq.train subspace $s"))
+      Pq.encode(spark, e, cb).collect().foreach { r =>
+        val v = byId(r.getLong(0))
+        assert(r.getSeq[Int](1) == (0 until Pq.M).map(s => nearest(slice(v, s), want(s))),
+          s"Pq codes: vec ${r.getLong(0)}")
+      }
+    } finally e.unpersist()
+  }
+
+  test("fits never persist their input: no cache outlives fit, fitTwoLevel, fitCells or Pq.train") {
+    val sc = spark.sparkContext
+    val e = Tables.embeddings(spark, sf0001)
+      .select(col("vec_id"), toDouble(col("embedding")).as("v"), col("label"))
+    val before = sc.getPersistentRDDs.keySet
+    val (a1, _, _) = KMeans.fit(spark, e, k = 8, iters = 2)
+    val (a2, _, _) = KMeans.fitTwoLevel(spark, e, nCells = 16, iters = 2)
+    val cells = KMeans.fitCells(spark, e, nCells = 8, iters = 2,
+      twoLevelCells = Int.MaxValue, cellCap = 1000, cellTarget = 500)
+    Pq.train(spark, e)
+    // the returned assignments are lazy plans: reading them caches nothing
+    Seq(a1, a2, cells.assign).foreach(a => assert(a.count() == 500))
+    assert(sc.getPersistentRDDs.size == before.size &&
+      sc.getPersistentRDDs.keySet == before, "a fit left a cache behind")
+  }
+
+  test("cell bounds: one pass — a zero vector unbounds its cell, a memberless cell gets no row; persisted fills +inf, in-entry -inf") {
+    import spark.implicits._
+    // cells 0, 1 and 3 hold members, cell 2 none; cell 1 holds a zero vector
+    val vecs = Seq((0L, 0, Array(3.0, 4.0)), (1L, 0, Array(4.0, 3.0)),
+      (2L, 1, Array(1.0, 0.0)), (3L, 1, Array(0.0, 0.0)), (4L, 3, Array(0.0, 2.0)))
+      .toDF("vec_id", "cluster", "v")
+    val unit = vecs.as[(Long, Int, Array[Double])].map { case (_, c, v) =>
+      val n = math.sqrt(v.map(x => x * x).sum)
+      (c, if (n > 0) v.map(_ / n) else v)
+    }
+    val rows = KMeans.cellBounds(spark, unit)
+    assert(rows.map(_._1).toSeq == Seq(0, 1, 3), "one row per cell with members")
+    // cell 0: x̂ = (0.6, 0.8) and (0.8, 0.6) → ĉ = (0.7, 0.7), r̂ = √0.02
+    assert(rows(0)._2.zip(Seq(0.7, 0.7)).forall { case (a, b) => math.abs(a - b) < 1e-12 })
+    assert(math.abs(rows(0)._3 - math.sqrt(0.02)) < 1e-12)
+    assert(rows(1)._3 == Double.PositiveInfinity, "a zero vector unbounds its cell")
+    assert(rows(2)._3 == 0.0 && rows(2)._2.toSeq == Seq(0.0, 1.0))
+
+    val dir = Files.createTempDirectory("cellbounds").toString
+    vecs.write.parquet(s"$dir/ivf_vectors")
+    VectorIndex.buildCellBounds(spark, dir)
+    val (pm, pr) = VectorIndex.loadCellBoundArrays(spark, dir, 4)
+    assert(pr.toSeq.drop(1) == Seq(Double.PositiveInfinity, Double.PositiveInfinity, 0.0),
+      "persisted: the zero-vector cell and the memberless cell are unbounded")
+    assert(pm(2).toSeq == Seq(0.0, 0.0))
+    val e = vecs.withColumn("nv", normNative(col("v")))
+    val (im, ir) = VectorQueries.cellBoundStats(spark, e, vecs.select("vec_id", "cluster"), 4)
+    assert(ir(1) == Double.PositiveInfinity && ir(2) == Double.NegativeInfinity && im(2) == null,
+      "in-entry: the zero-vector cell is unbounded, the memberless cell can contribute nothing")
+    assert(math.abs(ir(0) - pr(0)) < 1e-12 && ir(3) == 0.0)
   }
 
   test("loadText reads a directory of files into the documents schema") {

@@ -265,10 +265,18 @@ class SkewCorpusSpec extends SparkSpec {
     // uniformly over vec_ids, landing across the planted clusters.
     val e = spark.read.parquet(s"$dirC/embeddings.parquet")
       .select(col("vec_id"), toDouble(col("embedding")).as("v"))
-    val (_, _, iSpread) = graft.operators.KMeans.fit(spark, e, 10, 3,
-      trackInertia = true, spreadSeed = true)
-    val (_, _, iFirst) = graft.operators.KMeans.fit(spark, e, 10, 3,
-      trackInertia = true, spreadSeed = false)
+    import spark.implicits._
+    import graft.operators.KMeans
+    val (_, _, iSpread) = KMeans.fit(spark, e, 10, 3, trackInertia = true)
+    // the first-k baseline: the same Lloyd's loop from the 10 lowest
+    // vec_ids, with fit's tracked inertia — the third update's
+    // centroids against the second update's assignment
+    val firstK = e.orderBy("vec_id").limit(10).collect().map(_.getSeq[Double](1).toArray)
+    val keyed = e.select(lit(0), col("v")).as[(Int, Array[Double])]
+    val c2 = KMeans.lloyd(spark, keyed, Map(0 -> firstK), 2)
+    val c3 = KMeans.lloyd(spark, keyed, c2, 1)(0)
+    val iFirst = Seq(e.collect().map(_.getSeq[Double](1).toArray)
+      .map(v => KMeans.sqDist(v, c3(KMeans.nearestIndex(v, c2(0))))).sum)
     info(s"final inertia: spread=${iSpread.last} first-k=${iFirst.last}")
     assert(iSpread.last < iFirst.last,
       s"spread seeding must beat first-k on a sorted clustered corpus: ${iSpread.last} vs ${iFirst.last}")
@@ -291,8 +299,15 @@ class SkewCorpusSpec extends SparkSpec {
         }.sum
       }.sum
     }
-    val dSpread = distortion(graft.operators.Pq.train(spark, e, spreadSeed = true))
-    val dFirst = distortion(graft.operators.Pq.train(spark, e, spreadSeed = false))
+    import graft.operators.{KMeans, Pq}
+    val dSpread = distortion(Pq.train(spark, e))
+    // the first-k baseline: the same keyed Lloyd's loop from the K
+    // lowest vec_ids, sliced per subspace
+    val firstK = e.orderBy("vec_id").limit(Pq.K).collect().map(_.getSeq[Double](1).toArray)
+    val sub = rows(0).length / Pq.M
+    val cbFirst = KMeans.lloyd(spark, Pq.subspaceRows(spark, e, Pq.M),
+      (0 until Pq.M).map(s => s -> firstK.map(_.slice(s * sub, (s + 1) * sub))).toMap, 3)
+    val dFirst = distortion(Array.tabulate(Pq.M)(cbFirst))
     info(s"PQ distortion: spread=$dSpread first-k=$dFirst")
     assert(dSpread <= dFirst * 1.001,
       s"spread-seeded codebooks must not be worse: $dSpread vs $dFirst")
